@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta
 
 from ..operators.sharding import ClusterTopology
-from .client import ClickHouseClient, get_client, with_retries
+from .client import get_client, with_retries
 
 # `= Distributed(cluster, db, table[, sharding_expr])` — the resolution
 # regex of ClickhouseHdfsLoader.java:49
@@ -59,15 +59,6 @@ def resolve_distributed(create_ddl: str) -> DistributedTarget | None:
         return None
     return DistributedTarget(m.group("cluster"), m.group("db"),
                              m.group("table"), m.group("shardfn"))
-
-
-def sharding_key_index(describe_rows: list[list[str]], key: str) -> int:
-    """Positional index of the sharding key in the target schema — the
-    DESCRIBE walk of ClickhouseHdfsLoader.java:310-329."""
-    for i, row in enumerate(describe_rows):
-        if row and row[0] == key:
-            return i
-    raise ValueError(f"sharding key {key!r} not in DESCRIBE output")
 
 
 def daily_table_name(table: str, dt: str) -> str:

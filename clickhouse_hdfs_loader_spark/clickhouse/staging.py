@@ -23,6 +23,12 @@ Exactly-once posture: temp-table names are attempt-scoped
 an aborted attempt's table is simply never promoted — duplicate promotion
 is impossible without distributed coordination, which is the same
 guarantee level the reference achieves by disabling speculation.
+
+The batch policy — serialization, per-shard buffers, flush cap and the
+alive-replica probe — is owned by writer.py and shared with the direct
+mode; this module owns only what differs: the temp-table target, one
+host per shard per task, and failures that raise (a retried task writes a
+fresh table, so re-raising is safe here).
 """
 
 from __future__ import annotations
@@ -34,8 +40,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from ..config import LoaderConfig
-from ..operators.sharding import ClusterTopology, repartition_by_shard
-from .client import ClickHouseClient, get_client, with_retries
+from ..operators.sharding import ClusterTopology
+from .client import get_client, with_retries
+from .writer import first_alive, insert_header, serialize_for_load, shard_batches
 
 TEMP_DATABASE = "temp"
 
@@ -72,93 +79,47 @@ class StagedLoadPlan:
 
 def stage_partitions(df: DataFrame, key_col: str, topology: ClusterTopology,
                      config: LoaderConfig, *, create_ddl: str,
-                     target_database: str, target_table: str, dt: str,
+                     target_database: str, target_table: str, prefix: str,
                      backoff_scale: float = 1.0) -> StagedLoadPlan:
-    """Phase 1+2: create per-partition temp tables and batch-insert into
-    them from ``foreachPartition``. Returns the promote plan."""
+    """Phase 1+2: create per-partition temp tables named under the run's
+    ``prefix`` (``temp_table_prefix``) and batch-insert into them from
+    ``mapPartitions``. Returns the promote plan."""
     from pyspark import TaskContext
-    from pyspark.sql import functions as F
 
-    from ..operators.transform import format_header_lines, wire_separator
-
-    prefix = temp_table_prefix(target_table, dt or "00000000")
-    fmt = config.clickhouse_format
-    sep = wire_separator(fmt)
-    batch_size = min(config.batch_size, 1_048_576)
     hosts_per_shard = [n.hosts for n in topology.nodes]
-    http_port = config.clickhouse_http_port
-    max_tries = config.max_tries
-    user, password = config.username, config.password
-
-    routed = repartition_by_shard(df, key_col, topology,
-                                  config.tasks_per_shard(len(topology.nodes)))
-    data_cols = [c for c in routed.columns if c != "shard"]
-    from ..operators.transform import wire_line_col
-    line = wire_line_col(routed, data_cols, sep)
-    serialized = routed.select("shard", line.alias("line"))
-    hdr_lines = format_header_lines(fmt, routed, data_cols)
-    payload_prefix = "".join(l + "\n" for l in hdr_lines)
+    port = config.clickhouse_http_port
+    client_kw = dict(user=config.username, password=config.password)
+    serialized, payload_prefix = serialize_for_load(df, key_col, topology, config)
 
     def stage_one(rows):
         ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.attemptNumber()
-        temp = temp_table_name(prefix, pid, attempt)
+        temp = temp_table_name(prefix, ctx.partitionId(), ctx.attemptNumber())
         ddl = rewrite_ddl_to_striplog(create_ddl, TEMP_DATABASE, temp)
-        header = f"INSERT INTO {TEMP_DATABASE}.{temp} FORMAT {fmt}"
+        header = insert_header(TEMP_DATABASE, temp, config.clickhouse_format)
+        picked: dict[int, str] = {}   # shard → staging host, once per task
         created: set[str] = set()
-        loaded: set[str] = set()
-
-        def ensure(host: str) -> None:
-            if host not in created:
-                cli = get_client(host, http_port, user=user, password=password)
-                with_retries(lambda: cli.execute(
-                    f"CREATE DATABASE IF NOT EXISTS {TEMP_DATABASE}"),
-                    tier="ddl", max_tries=max_tries, backoff_scale=backoff_scale)
-                with_retries(lambda: cli.execute(ddl), tier="ddl",
-                             max_tries=max_tries, backoff_scale=backoff_scale)
-                created.add(host)
-
-        picked: dict[int, str] = {}
-
-        def pick_host(shard: int) -> str:
-            # stage on the first ALIVE replica, falling back through the
-            # list (the reference picks an available node via
-            # getANodeAddress, AbstractClickhouseLoaderMapper.java:318-326)
-            # — a single down first-replica must not fail the staged load
+        for shard, _n, payload in shard_batches(rows, config.batch_size,
+                                                payload_prefix):
             if shard not in picked:
-                hosts = hosts_per_shard[shard]
-                picked[shard] = next(
-                    (h for h in hosts
-                     if get_client(h, http_port, user=user,
-                                   password=password).ping()),
-                    hosts[0])
-            return picked[shard]
-
-        def flush(shard: int, buf: list[str]) -> None:
-            host = pick_host(shard)
-            ensure(host)
-            payload = payload_prefix + "\n".join(buf)
-            cli = get_client(host, http_port, user=user, password=password)
+                # a single down first-replica must not fail the staged load
+                picked[shard] = first_alive(hosts_per_shard[shard], port,
+                                            **client_kw)
+            host = picked[shard]
+            cli = get_client(host, port, **client_kw)
+            if host not in created:
+                for sql in (f"CREATE DATABASE IF NOT EXISTS {TEMP_DATABASE}",
+                            ddl):
+                    with_retries(lambda: cli.execute(sql), tier="ddl",
+                                 max_tries=config.max_tries,
+                                 backoff_scale=backoff_scale)
+                created.add(host)
             with_retries(lambda: cli.insert_payload(header, payload),
-                         tier="staged", max_tries=max_tries,
+                         tier="staged", max_tries=config.max_tries,
                          backoff_scale=backoff_scale)
-            loaded.add(host)
-
-        buffers: dict[int, list[str]] = {}
-        for row in rows:
-            buf = buffers.setdefault(row["shard"], [])
-            buf.append(row["line"])
-            if len(buf) >= batch_size:
-                flush(row["shard"], buf)
-                buffers[row["shard"]] = []
-        for shard, buf in buffers.items():
-            if buf:
-                flush(shard, buf)
         # mapper output of W3: ("taskId@host", temp_table) pairs
-        return [(h, f"{TEMP_DATABASE}.{temp}") for h in loaded]
+        return [(h, f"{TEMP_DATABASE}.{temp}") for h in created]
 
-    pairs = serialized.rdd.mapPartitions(
-        lambda rows: iter(stage_one(rows))).collect()
+    pairs = serialized.rdd.mapPartitions(stage_one).collect()
     plan = StagedLoadPlan(target_database, target_table)
     plan.temp_tables = sorted(set(pairs))
     return plan
@@ -166,13 +127,13 @@ def stage_partitions(df: DataFrame, key_col: str, topology: ClusterTopology,
 
 def promote(plan: StagedLoadPlan, topology: ClusterTopology,
             config: LoaderConfig, *, replicated: bool = False,
-            user: str = "default", password: str = "",
             backoff_scale: float = 1.0) -> None:
     """Phase 3+4: driver-side ``INSERT INTO target SELECT * FROM temp`` per
     (host, temp) pair, replica replay via remote() for non-replicated
     engines, then drop (ClickhouseLoaderReducer.java:218-260)."""
     tgt = f"{plan.target_database}.{plan.target_table}"
     port = config.clickhouse_http_port
+    user, password = config.username, config.password
     try:
         for host, temp in plan.temp_tables:
             cli = get_client(host, port, user=user, password=password)
@@ -218,15 +179,14 @@ def cleanup(plan: StagedLoadPlan, topology: ClusterTopology,
 
 def staged_load(df: DataFrame, key_col: str, topology: ClusterTopology,
                 config: LoaderConfig, *, create_ddl: str,
-                target_database: str, target_table: str, dt: str = "",
+                target_database: str, target_table: str, prefix: str,
                 replicated: bool = False, backoff_scale: float = 1.0) -> StagedLoadPlan:
     """Full two-phase load: stage → promote (+replica replay) → GC."""
     plan = stage_partitions(df, key_col, topology, config,
                             create_ddl=create_ddl,
                             target_database=target_database,
-                            target_table=target_table, dt=dt,
+                            target_table=target_table, prefix=prefix,
                             backoff_scale=backoff_scale)
     promote(plan, topology, config, replicated=replicated,
-            user=config.username, password=config.password,
             backoff_scale=backoff_scale)
     return plan

@@ -1,5 +1,13 @@
 """Distributed ClickHouse writer: batching, shard routing, replica fan-out.
 
+This module owns the batch policy of BOTH load modes: the ``(shard, line)``
+serialization (``serialize_for_load``), the per-shard buffer flushed at
+``--batch-size`` or ``FLUSH_CAP`` (``shard_batches``) and the alive-replica
+probe (``first_alive``). The direct mode below and the staged mode
+(staging.py) differ only in where a batch goes and how a failure counts —
+the reference's single mapper choosing ``batchDirectInsert`` or a staged
+insert at flush time (AbstractClickhouseLoaderMapper.java:288-452).
+
 Reference parity (SURVEY §2.A W1/W2/W6 + P1/P4):
 - W1 buffered batch INSERT — rows buffered per shard under an
   ``INSERT INTO … FORMAT …`` header, flushed at ``--batch-size`` or the
@@ -25,12 +33,14 @@ in direct mode; the staged mode (staging.py) is the exactly-once-ish path.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from collections.abc import Iterable, Iterator, Sequence
 
 from pyspark.sql import DataFrame
 
 from ..config import LoaderConfig
 from ..operators.sharding import ClusterTopology, repartition_by_shard
+from ..operators.transform import (format_header_lines, wire_line_col,
+                                   wire_separator)
 from .client import get_client, with_retries
 
 FLUSH_CAP = 1_048_576  # ClickHouse atomic-insert bound (reference :294-295)
@@ -42,45 +52,47 @@ def insert_header(database: str, table: str, fmt: str) -> str:
     return f"INSERT INTO {database}.{table} FORMAT {fmt}"
 
 
-@dataclass
-class ShardBuffer:
-    """Per-shard row buffer — HostRecordsCache.java:6-17."""
-    lines: list[str]
-    count: int = 0
+def serialize_for_load(df: DataFrame, key_col: str, topology: ClusterTopology,
+                       config: LoaderConfig) -> tuple[DataFrame, str]:
+    """Route rows to shards and serialize each to one wire line: returns
+    the ``(shard, line)`` DataFrame and the payload prefix — the
+    names (and types) rows every batch of a WithNames[AndTypes] format
+    leads with, empty for bare formats."""
+    fmt = config.clickhouse_format
+    routed = repartition_by_shard(df, key_col, topology,
+                                  config.tasks_per_shard(len(topology.nodes)))
+    data_cols = [c for c in routed.columns if c != "shard"]
+    line = wire_line_col(routed, data_cols, wire_separator(fmt),
+                         config.replace_char)
+    prefix = "".join(l + "\n" for l in format_header_lines(fmt, routed, data_cols))
+    return routed.select("shard", line.alias("line")), prefix
 
-    def append(self, line: str) -> None:
-        self.lines.append(line)
-        self.count += 1
 
-    def drain(self) -> str:
-        payload = "\n".join(self.lines)
-        self.lines = []
-        self.count = 0
-        return payload
+def shard_batches(rows: Iterable[tuple[int, str]], batch_size: int,
+                  prefix: str = "") -> Iterator[tuple[int, int, str]]:
+    """Per-shard buffers over ``(shard, line)`` rows (HostRecordsCache.java:
+    6-17): yield ``(shard, n_rows, payload)`` whenever a shard's buffer
+    reaches ``min(batch_size, FLUSH_CAP)``, then the partial buffers.
+    Each payload is ``prefix`` followed by its newline-joined lines."""
+    cap = min(batch_size, FLUSH_CAP)
+    buffers: dict[int, list[str]] = {}
+    for shard, line in rows:
+        buf = buffers.setdefault(shard, [])
+        buf.append(line)
+        if len(buf) >= cap:
+            yield shard, len(buf), prefix + "\n".join(buf)
+            buffers[shard] = []
+    for shard, buf in buffers.items():
+        if buf:
+            yield shard, len(buf), prefix + "\n".join(buf)
 
 
-def _deliver(payload: str, header: str, hosts: tuple[str, ...], *,
-             http_port: int, replicated: bool, max_tries: int,
-             backoff_scale: float, database: str,
-             user: str = "default", password: str = "") -> int:
-    """W2 fan-out decision tree: Replicated → first alive replica only;
-    non-replicated → every replica (AbstractClickhouseLoaderMapper.java:
-    309-359)."""
-    targets: list[str]
-    if replicated:
-        alive = [h for h in hosts
-                 if get_client(h, http_port, user=user, password=password,
-                               database=database).ping()]
-        targets = [alive[0] if alive else hosts[0]]
-    else:
-        targets = list(hosts)
-    for h in targets:
-        cli = get_client(h, http_port, user=user, password=password,
-                         database=database)
-        with_retries(lambda c=cli: c.insert_payload(header, payload),
-                     tier="direct", max_tries=max_tries,
-                     backoff_scale=backoff_scale)
-    return len(targets)
+def first_alive(hosts: Sequence[str], port: int, **client_kw) -> str:
+    """First replica answering the HTTP-200 probe, else ``hosts[0]`` — the
+    reference's getANodeAddress (AbstractClickhouseLoaderMapper.java:
+    318-326)."""
+    return next((h for h in hosts if get_client(h, port, **client_kw).ping()),
+                hosts[0])
 
 
 def write_direct(df: DataFrame, key_col: str, topology: ClusterTopology,
@@ -89,41 +101,31 @@ def write_direct(df: DataFrame, key_col: str, topology: ClusterTopology,
     """Direct-mode load (``--direct true``): route → serialize → buffered
     batch inserts to the shard's local table. Returns accounting counters
     (W6)."""
-    fmt = config.clickhouse_format
-    header = insert_header(database, table, fmt)
-    batch_size = min(config.batch_size, FLUSH_CAP)
+    header = insert_header(database, table, config.clickhouse_format)
     hosts_per_shard = [n.hosts for n in topology.nodes]
-    http_port = config.clickhouse_http_port
-    max_tries = config.max_tries
-    user, password = config.username, config.password
+    port = config.clickhouse_http_port
+    client_kw = dict(user=config.username, password=config.password,
+                     database=database)
 
     spark = df.sparkSession
     ok_acc = spark.sparkContext.accumulator(0)
     fail_acc = spark.sparkContext.accumulator(0)
-
-    routed = repartition_by_shard(df, key_col, topology,
-                                  config.tasks_per_shard(len(topology.nodes)))
-    data_cols = [c for c in routed.columns if c != "shard"]
-    from ..operators.transform import (format_header_lines, wire_line_col,
-                                       wire_separator)
-    line = wire_line_col(routed, data_cols, wire_separator(fmt))
-    serialized = routed.select("shard", line.alias("line"))
-    # WithNames[AndTypes] formats: every batch INSERT payload leads with
-    # the names (and types) rows
-    hdr_lines = format_header_lines(fmt, routed, data_cols)
-    payload_prefix = "".join(l + "\n" for l in hdr_lines)
+    serialized, payload_prefix = serialize_for_load(df, key_col, topology, config)
 
     def write_partition(rows) -> None:
-        buffers: dict[int, ShardBuffer] = {}
-
-        def flush(shard: int, buf: ShardBuffer) -> None:
-            n = buf.count
-            payload = payload_prefix + buf.drain()
+        for shard, n, payload in shard_batches(rows, config.batch_size,
+                                               payload_prefix):
+            # W2 fan-out: Replicated → one alive replica, probed per
+            # batch; non-replicated → every replica of the shard
+            hosts = hosts_per_shard[shard]
+            targets = ([first_alive(hosts, port, **client_kw)] if replicated
+                       else hosts)
             try:
-                _deliver(payload, header, hosts_per_shard[shard],
-                         http_port=http_port, replicated=replicated,
-                         max_tries=max_tries, backoff_scale=backoff_scale,
-                         database=database, user=user, password=password)
+                for h in targets:
+                    cli = get_client(h, port, **client_kw)
+                    with_retries(lambda: cli.insert_payload(header, payload),
+                                 tier="direct", max_tries=config.max_tries,
+                                 backoff_scale=backoff_scale)
                 ok_acc.add(n)
             except Exception:
                 # Count the failure but do NOT re-raise: a failed Spark task
@@ -135,16 +137,6 @@ def write_direct(df: DataFrame, key_col: str, topology: ClusterTopology,
                 # (ClickhouseHdfsLoader.java:203-207), which write_direct
                 # mirrors below.
                 fail_acc.add(n)
-
-        for row in rows:
-            shard = row["shard"]
-            buf = buffers.setdefault(shard, ShardBuffer([]))
-            buf.append(row["line"])
-            if buf.count >= batch_size:
-                flush(shard, buf)
-        for shard, buf in buffers.items():
-            if buf.count:
-                flush(shard, buf)
 
     serialized.foreachPartition(write_partition)
     stats = {"success_records": ok_acc.value, "failed_records": fail_acc.value}

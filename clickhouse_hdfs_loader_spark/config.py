@@ -11,7 +11,7 @@ default like the reference binary actually does.
 from __future__ import annotations
 
 import argparse
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -49,11 +49,6 @@ class LoaderConfig:
     password: str = ""                     # (:90-91)
     num_reduce_tasks: int = -1             # explicit write-task count (:50)
     mapper_class: str = ""                 # deprecated alias of -i (:62)
-
-    @property
-    def flush_cap(self) -> int:
-        """ClickHouse atomic-insert bound (AbstractClickhouseLoaderMapper.java:294-295)."""
-        return 1_048_576
 
     def tasks_per_shard(self, num_shards: int) -> int:
         """P4 sizing: ``--num-reduce-tasks`` (total write tasks) wins when

@@ -124,12 +124,13 @@ def run_load(config: LoaderConfig, spark: SparkSession,
         plan = staged_load(df, key_col, topology, config,
                            create_ddl=local_ddl,
                            target_database=dist.local_database,
-                           target_table=target_table, dt=config.dt,
+                           target_table=target_table, prefix=prefix,
                            replicated=replicated, backoff_scale=backoff_scale)
         return {"staged_tables": len(plan.temp_tables)}
     finally:
-        # step 7 — GC any leftovers from aborted attempts
-        lm.clean_temp_tables(f"{target_table}_")
+        # step 7 — GC this run's leftovers from aborted attempts; the run
+        # prefix leaves a concurrent load of the same table alone
+        lm.clean_temp_tables(prefix)
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -19,11 +19,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from ..functions.murmur import guava_shard_code
 from ..functions.murmur_np import guava_shard_codes
 
 

@@ -8,10 +8,10 @@ statements the reference issues at job init
   101-109 + regex, see clickhouse/lifecycle.py),
 - ``system.clusters`` topology with weights + replica host arrays
   (ClickhouseClient.java:121-132),
-- ``DESCRIBE`` → per-column (name, type) map for null rules + sharding-key
-  index (ClickhouseLoaderContext.java:42-58),
-- ``system.columns`` count → target width for T9 validation
-  (AbstractClickhouseLoaderMapper.java:490-496).
+- ``DESCRIBE`` → per-column (name, type) map for null rules, sharding-key
+  index (ClickhouseLoaderContext.java:42-58) and the target width for T9
+  validation (the reference counts ``system.columns``,
+  AbstractClickhouseLoaderMapper.java:490-496).
 
 These are one-row/driver-scale reads — plain HTTP, not DataFrames (a
 ``spark.read.jdbc`` would spin a job for a 5-row catalog query).
@@ -48,25 +48,11 @@ def fetch_describe(cli: ClickHouseClient, database: str, table: str) -> list[tup
     return [(r[0], r[1]) for r in cli.query_rows(f"DESC {database}.{table}")]
 
 
-def count_target_columns(cli: ClickHouseClient, database: str, table: str) -> int:
-    rows = cli.query_rows(
-        "SELECT count(*) FROM system.columns "
-        f"WHERE database = '{database}' AND table = '{table}'")
-    return int(rows[0][0])
-
-
-def string_columns(describe_rows: list[tuple[str, str]]) -> set[str]:
-    """Columns treated as 'string' for null substitution — ClickHouse type
-    ``String`` or ``Nullable(String)`` (ClickhouseLoaderContext.java:
-    98-111)."""
-    return {name for name, typ in describe_rows
-            if typ in ("String", "Nullable(String)")}
-
-
 def sharding_key_index_or_none(describe_rows: list[tuple[str, str]],
                                key: str) -> int | None:
-    """Positional index of the sharding key in the target schema, or None
-    when absent — the reference then falls back to random (UUID) routing
+    """Positional index of the sharding key in the target schema — the
+    DESCRIBE walk of ClickhouseHdfsLoader.java:310-329 — or None when
+    absent; the reference then falls back to random (UUID) routing
     (AbstractClickhouseLoaderMapper.java:278-280)."""
     for i, (name, _typ) in enumerate(describe_rows):
         if name == key:

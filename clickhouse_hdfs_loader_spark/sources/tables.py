@@ -56,10 +56,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose every table as a SQL view so ``spark.sql`` mirrors the DuckDB
     oracle's pre-registered views."""

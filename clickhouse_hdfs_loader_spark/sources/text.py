@@ -34,7 +34,3 @@ def read_delimited(spark: SparkSession, path: str, sep: str = "|",
                 .csv(path))
     df = spark.read.text(path)
     return tokenize_lines(df, sep=sep, num_fields=num_fields)
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.text(path)

@@ -16,7 +16,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..config import LoaderConfig
 from ..operators.sharding import ClusterTopology
-from .. import clickhouse
 
 
 def stream_to_clickhouse(stream: DataFrame, key_col: str,
@@ -43,7 +42,7 @@ def stream_to_clickhouse(stream: DataFrame, key_col: str,
     which replays that one batch (the usual foreachBatch bound — true
     exactly-once needs a dedup key downstream, e.g. ReplacingMergeTree).
     """
-    from ..clickhouse.staging import staged_load
+    from ..clickhouse.staging import staged_load, temp_table_prefix
     from ..clickhouse.writer import write_direct
 
     if staged and create_ddl is None:
@@ -55,7 +54,8 @@ def stream_to_clickhouse(stream: DataFrame, key_col: str,
         if staged:
             staged_load(batch_df, key_col, topology, config,
                         create_ddl=create_ddl, target_database=database,
-                        target_table=table, dt=f"b{batch_id}",
+                        target_table=table,
+                        prefix=temp_table_prefix(table, f"b{batch_id}"),
                         replicated=replicated, backoff_scale=backoff_scale)
         else:
             write_direct(batch_df, key_col, topology, config,

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from clickhouse_hdfs_loader_spark.clickhouse import staging
+from clickhouse_hdfs_loader_spark.clickhouse import staging, writer
 from clickhouse_hdfs_loader_spark.clickhouse.client import (
     ClickHouseError,
     get_client,
@@ -16,18 +16,23 @@ from clickhouse_hdfs_loader_spark.clickhouse.lifecycle import (
     LifecycleManager,
     daily_table_name,
     resolve_distributed,
-    sharding_key_index,
 )
 from clickhouse_hdfs_loader_spark.clickhouse.staging import (
     rewrite_ddl_to_striplog,
     temp_table_name,
+    temp_table_prefix,
 )
-from clickhouse_hdfs_loader_spark.clickhouse.writer import insert_header, write_direct
+from clickhouse_hdfs_loader_spark.clickhouse.writer import (
+    insert_header,
+    shard_batches,
+    write_direct,
+)
 from clickhouse_hdfs_loader_spark.config import LoaderConfig
 from clickhouse_hdfs_loader_spark.operators.sharding import (
     ClusterTopology,
     ShardNode,
 )
+from clickhouse_hdfs_loader_spark.sources.catalog import sharding_key_index_or_none
 
 from .mock_clickhouse import MockClickHouse
 
@@ -125,7 +130,8 @@ def test_staged_load_two_phase(spark, mocks):
     df = spark.createDataFrame([(f"k{i}", i) for i in range(120)], ["k", "v"])
     plan = staging.staged_load(df, "k", topo, cfg, create_ddl=ddl,
                                target_database="db", target_table="t",
-                               dt="2017-01-07", backoff_scale=0.001)
+                               prefix=temp_table_prefix("t", "2017-01-07"),
+                               backoff_scale=0.001)
     assert plan.temp_tables  # something was staged
     all_stmts = [s for m in mocks for s in m.statements]
     creates = [s for s in all_stmts if s.startswith("CREATE TABLE temp.")]
@@ -152,6 +158,7 @@ def test_staged_replica_replay(spark, mocks):
     df = spark.createDataFrame([(f"k{i}",) for i in range(10)], ["k"])
     staging.staged_load(df, "k", topo, cfg, create_ddl=ddl,
                         target_database="db", target_table="t",
+                        prefix=temp_table_prefix("t", "00000000"),
                         replicated=False, backoff_scale=0.001)
     replays = [s for s in b.statements if "FROM remote(" in s]
     assert len(replays) == len(
@@ -180,7 +187,8 @@ def test_resolve_distributed_and_key_index():
         ("ck_cluster", "test_local", "t1")
     assert t.sharding_key == "h_did"
     rows = [["plat", "Int8"], ["h_did", "String"]]
-    assert sharding_key_index(rows, "h_did") == 1
+    assert sharding_key_index_or_none(rows, "h_did") == 1
+    assert sharding_key_index_or_none(rows, "missing") is None
     assert resolve_distributed("CREATE TABLE x (a Int8) ENGINE = MergeTree") is None
 
 
@@ -302,7 +310,8 @@ def test_staged_cleanup_on_promote_failure(spark, mocks):
     df = spark.createDataFrame([(f"k{i}",) for i in range(10)], ["k"])
     plan = staging.stage_partitions(df, "k", topo, cfg, create_ddl=ddl,
                                     target_database="db", target_table="t",
-                                    dt="2017-01-07", backoff_scale=0.001)
+                                    prefix=temp_table_prefix("t", "2017-01-07"),
+                                    backoff_scale=0.001)
     assert plan.temp_tables
     m = mocks[0]
     m.fail_first = 99  # every subsequent statement fails...
@@ -332,6 +341,40 @@ def test_write_direct_sanitizes_wire_fields(spark, mocks):
     assert by_key["k1"][1] == "a b"
     assert by_key["k2"][1] == "c d"
     assert by_key["k3"][1] == "e/f"
+
+
+def test_write_direct_honours_replace_char(spark, mocks):
+    """``--replace-char`` reaches the wire: the in-field separator and
+    newline become the configured character, not the default space."""
+    cfg = LoaderConfig(batch_size=10, replace_char="_")
+    topo = topo_of(mocks[:1])
+    df = spark.createDataFrame([("k1", "a\tb\\c"), ("k2", "d\ne")],
+                               ["k", "s"])
+    write_direct(df, "k", topo, cfg, database="db", table="t",
+                 backoff_scale=0.001)
+    rows = sorted(line for ins in mocks[0].inserts()
+                  for line in ins.splitlines()[1:])
+    assert rows == ["k1\ta_b/c", "k2\td_e"]
+
+
+def test_shard_batches_clamps_orders_and_prefixes(monkeypatch):
+    """The per-shard batch loop both load modes share: a batch never
+    exceeds FLUSH_CAP even when batch_size is larger, rows keep their
+    order within a shard, the tail flush emits the partial buffers, and
+    the WithNames prefix leads every payload."""
+    monkeypatch.setattr(writer, "FLUSH_CAP", 3)
+    rows = [(i % 2, f"r{i}") for i in range(11)]   # shard 0: 6 rows, 1: 5
+    batches = list(shard_batches(rows, 100, prefix="k\tv\n"))
+    assert all(n <= 3 for _s, n, _p in batches)
+    assert [(s, n) for s, n, _p in batches] == [(0, 3), (1, 3), (0, 3), (1, 2)]
+    for shard in (0, 1):
+        sent = [line for s, _n, p in batches if s == shard
+                for line in p.split("\n")[1:]]
+        assert sent == [f"r{i}" for i in range(shard, 11, 2)]
+    for _s, n, payload in batches:
+        assert payload.startswith("k\tv\n")
+        assert len(payload.split("\n")) == n + 1
+    assert [n for _s, n, _p in shard_batches(rows, 2)] == [2, 2, 2, 2, 2, 1]
 
 
 def test_write_direct_failure_counts_without_task_retry(spark, mocks):
@@ -375,7 +418,8 @@ def test_staged_load_falls_back_to_alive_replica(spark, mocks):
     df = spark.createDataFrame([(f"k{i}", i) for i in range(20)], ["k", "v"])
     plan = staging.stage_partitions(
         df, "k", topo, cfg, create_ddl=ddl, target_database="db",
-        target_table="t", dt="2017-01-07", backoff_scale=0.001)
+        target_table="t", prefix=temp_table_prefix("t", "2017-01-07"),
+        backoff_scale=0.001)
     assert plan.temp_tables
     assert all(h == f"{mocks[0].host}:{mocks[0].port}"
                for h, _t in plan.temp_tables)
@@ -537,7 +581,8 @@ def test_staged_load_csv_with_names_header_row(spark, mocks):
     plan = staging.stage_partitions(
         df, "k", topo, cfg,
         create_ddl="CREATE TABLE db.t (k String, v Int64) ENGINE = MergeTree ORDER BY k",
-        target_database="db", target_table="t", dt="20260813",
+        target_database="db", target_table="t",
+        prefix=temp_table_prefix("t", "20260813"),
         backoff_scale=0.001)
     assert plan.temp_tables
     payload_inserts = [i for i in mocks[0].inserts() if "FORMAT" in i]

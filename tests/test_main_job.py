@@ -6,6 +6,8 @@ hosts with a canned catalog."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from clickhouse_hdfs_loader_spark.config import parse_args
@@ -96,6 +98,10 @@ def test_quickstart_shaped_staged_load(spark, tmp_path, cluster):
     assert any(s.startswith("CREATE TABLE temp.t1_20170107_") for s in all_stmts)
     assert any(s.startswith("INSERT INTO test_local.t1 SELECT * FROM temp.")
                for s in all_stmts)
+    # the temp-table GC collects this run's prefix only, not every
+    # t1_* table a concurrent load (another dt) may be staging
+    gc = [s for s in all_stmts if "FROM system.tables" in s]
+    assert gc and all(re.search(r"LIKE 't1_20170107_\d+_%'", s) for s in gc)
 
 
 def test_width_mismatch_rejected(spark, tmp_path, cluster):
