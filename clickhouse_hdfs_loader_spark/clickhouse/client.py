@@ -20,10 +20,13 @@ what the reference's insert path ultimately talks to.
 
 from __future__ import annotations
 
+import logging
 import time
 import urllib.error
 import urllib.parse
 import urllib.request
+
+log = logging.getLogger(__name__)
 
 
 class ClickHouseError(RuntimeError):
@@ -41,15 +44,18 @@ BACKOFF = {
 
 def with_retries(fn, tier: str = "ddl", max_tries: int = 3,
                  backoff_scale: float = 1.0):
-    """Run ``fn`` with the reference's retry ladder for the given tier."""
+    """Run ``fn`` with the reference's retry ladder for the given tier,
+    logging one WARNING per failed attempt."""
     last: Exception | None = None
     for n in range(max_tries):
         try:
             return fn()
         except Exception as exc:  # noqa: BLE001 — retry ladder mirrors reference
             last = exc
-            if n + 1 < max_tries:
-                time.sleep(BACKOFF[tier](n) * backoff_scale)
+            pause = BACKOFF[tier](n) * backoff_scale if n + 1 < max_tries else 0.0
+            log.warning("%s tier: attempt %d/%d failed, sleeping %.3fs: %s",
+                        tier, n + 1, max_tries, pause, exc)
+            time.sleep(pause)
     raise ClickHouseError(f"failed after {max_tries} tries: {last}") from last
 
 

@@ -1,6 +1,13 @@
-"""Table-lifecycle manager — reference D2/D3/D4/D6 (SURVEY §2.A).
+"""Cluster handle and table-lifecycle manager — reference D2/D3/D4/D6
+(SURVEY §2.A).
 
-Driver-side DDL orchestration over the HTTP client:
+``LifecycleManager`` is the one handle through which a load reaches any
+topology host: it holds the topology, the HTTP port, the login and the
+retry ladder (``client``, ``run``, ``first_alive``, ``replicas_of``).
+``main.run_load`` builds it once and hands it to the writer, the staged
+path and the streaming sink.
+
+Driver-side DDL orchestration through that handle:
 - D6 Distributed-table resolution: regex over ``SHOW CREATE TABLE`` output
   → (cluster, local db, local table, sharding key), sharding-key index via
   DESCRIBE scan (ClickhouseHdfsLoader.java:49,248-282,310-329);
@@ -20,11 +27,15 @@ from __future__ import annotations
 import logging
 import re
 import threading
+from collections.abc import Sequence
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
+from ..config import LoaderConfig
 from ..operators.sharding import ClusterTopology
-from .client import get_client, with_retries
+from .client import ClickHouseClient, get_client, with_retries
+
+TEMP_DATABASE = "temp"  # database of the staged load's temp tables
 
 # `= Distributed(cluster, db, table[, sharding_expr])` — the resolution
 # regex of ClickhouseHdfsLoader.java:49
@@ -65,29 +76,61 @@ def daily_table_name(table: str, dt: str) -> str:
     return f"{table}_{dt.replace('-', '')}"
 
 
+@dataclass
 class LifecycleManager:
-    """All-hosts DDL fan-out over a topology (every op the reference runs
-    host-by-host over JDBC, here over HTTP)."""
+    """The cluster handle of a load (D5 client cache + W5 retry tiers):
+    every call to a topology host goes through ``client``/``run``, on the
+    driver and, pickled, in the write tasks."""
 
-    def __init__(self, topology: ClusterTopology, http_port: int = 8123,
-                 max_tries: int = 3, backoff_scale: float = 1.0,
-                 user: str = "default", password: str = ""):
-        self.topology = topology
-        self.http_port = http_port
-        self.max_tries = max_tries
-        self.backoff_scale = backoff_scale
-        self.user = user
-        self.password = password
+    topology: ClusterTopology
+    http_port: int = 8123
+    max_tries: int = 3
+    backoff_scale: float = 1.0
+    user: str = "default"
+    password: str = ""
+
+    @classmethod
+    def from_config(cls, topology: ClusterTopology, config: LoaderConfig,
+                    backoff_scale: float = 1.0) -> LifecycleManager:
+        """``--clickhouse-http-port`` for every topology host, plus the
+        load's login and ``--max-tries``."""
+        return cls(topology, config.clickhouse_http_port, config.max_tries,
+                   backoff_scale, config.username, config.password)
+
+    def client(self, host: str) -> ClickHouseClient:
+        return get_client(host, self.http_port, user=self.user,
+                          password=self.password)
+
+    def run(self, host: str, sql: str, tier: str = "ddl") -> str:
+        """POST ``sql`` to ``host`` under the ``tier`` retry ladder; returns
+        the response body."""
+        cli = self.client(host)
+        return with_retries(lambda: cli.execute(sql), tier=tier,
+                            max_tries=self.max_tries,
+                            backoff_scale=self.backoff_scale)
+
+    def first_alive(self, hosts: Sequence[str]) -> str:
+        """First replica answering the HTTP-200 probe, else ``hosts[0]`` —
+        the reference's getANodeAddress (AbstractClickhouseLoaderMapper.java:
+        318-326)."""
+        return next((h for h in hosts if self.client(h).ping()), hosts[0])
+
+    def replicas_of(self, host: str) -> tuple[str, ...]:
+        """The other replicas of ``host``'s shard."""
+        for n in self.topology.nodes:
+            if host in n.hosts:
+                return tuple(h for h in n.hosts if h != host)
+        return ()
 
     def _hosts(self) -> list[str]:
         return [h for n in self.topology.nodes for h in n.hosts]
 
-    def _exec_all(self, sql: str) -> None:
+    def exec_all(self, sql: str, alive_only: bool = False) -> None:
+        """Run ``sql`` on every topology host (DDL tier); ``alive_only``
+        skips the hosts that fail the alive probe."""
         for h in self._hosts():
-            cli = get_client(h, self.http_port, user=self.user, password=self.password)
-            with_retries(lambda c=cli: c.execute(sql), tier="ddl",
-                         max_tries=self.max_tries,
-                         backoff_scale=self.backoff_scale)
+            if not alive_only or self.client(h).ping():
+                self.run(h, sql)
 
     # -- D2 ------------------------------------------------------------
     def create_daily_tables(self, create_ddl: str, database: str, table: str,
@@ -101,8 +144,8 @@ class LifecycleManager:
         ddl = re.sub(r"^CREATE TABLE", "CREATE TABLE IF NOT EXISTS", ddl,
                      count=1, flags=re.IGNORECASE)
         if mode == "drop":
-            self._exec_all(f"DROP TABLE IF EXISTS {database}.{daily}")
-        self._exec_all(ddl)
+            self.exec_all(f"DROP TABLE IF EXISTS {database}.{daily}")
+        self.exec_all(ddl)
         return daily
 
     # -- D3 ------------------------------------------------------------
@@ -127,25 +170,17 @@ class LifecycleManager:
         cmp = "<" if distributed_database is not None else "<="
         expired: set[str] = set()
         for h in self._hosts():
-            cli = get_client(h, self.http_port, user=self.user, password=self.password)
-            rows = cli.query_rows(
+            rows = self.client(h).query_rows(
                 f"SELECT name FROM system.tables WHERE database = '{database}' "
                 f"AND match(name, '{pattern}') AND name {cmp} '{bound}'")
             for (name,) in [r[:1] for r in rows]:
                 if process == "merge":
-                    with_retries(lambda c=cli, n=name: c.execute(
-                        f"INSERT INTO {database}.{table} SELECT * FROM {database}.{n}"),
-                        tier="promote", max_tries=self.max_tries,
-                        backoff_scale=self.backoff_scale)
-                with_retries(lambda c=cli, n=name: c.execute(
-                    f"DROP TABLE IF EXISTS {database}.{n}"),
-                    tier="ddl", max_tries=self.max_tries,
-                    backoff_scale=self.backoff_scale)
+                    self.run(h, f"INSERT INTO {database}.{table} "
+                                f"SELECT * FROM {database}.{name}", "promote")
+                self.run(h, f"DROP TABLE IF EXISTS {database}.{name}")
                 if distributed_database is not None:
-                    with_retries(lambda c=cli, n=name: c.execute(
-                        f"DROP TABLE IF EXISTS {distributed_database}.{n}"),
-                        tier="ddl", max_tries=self.max_tries,
-                        backoff_scale=self.backoff_scale)
+                    self.run(h, f"DROP TABLE IF EXISTS "
+                                f"{distributed_database}.{name}")
                 expired.add(name)
         return sorted(expired)
 
@@ -181,12 +216,8 @@ class LifecycleManager:
                              "(reference requires *MergeTree)")
         sql = f"ALTER TABLE {database}.{table} DROP PARTITION {partition}"
         for node in self.topology.nodes:
-            hosts = node.hosts[:1] if replicated else node.hosts
-            for h in hosts:
-                cli = get_client(h, self.http_port, user=self.user, password=self.password)
-                with_retries(lambda c=cli: c.execute(sql), tier="ddl",
-                             max_tries=self.max_tries,
-                             backoff_scale=self.backoff_scale)
+            for h in node.hosts[:1] if replicated else node.hosts:
+                self.run(h, sql)
 
     def list_partitions(self, database: str, table: str) -> dict[int, list[str]]:
         """Per-shard partition inventory — the discovery step the
@@ -207,16 +238,12 @@ class LifecycleManager:
         for node in self.topology.nodes:
             last_err: Exception | None = None
             for h in node.hosts:
-                cli = get_client(h, self.http_port, user=self.user,
-                                 password=self.password)
                 try:
-                    rows = with_retries(lambda c=cli: c.query_rows(sql),
-                                        tier="ddl", max_tries=self.max_tries,
-                                        backoff_scale=self.backoff_scale)
+                    body = self.run(h, sql)
                 except Exception as e:  # noqa: BLE001 — try next replica
                     last_err = e
                     continue
-                out[node.shard_num] = sorted(r[0] for r in rows if r)
+                out[node.shard_num] = sorted(filter(None, body.splitlines()))
                 break
             else:
                 raise RuntimeError(
@@ -225,16 +252,16 @@ class LifecycleManager:
         return out
 
     # -- D1 ------------------------------------------------------------
-    def clean_temp_tables(self, prefix: str, temp_db: str = "temp") -> None:
+    def clean_temp_tables(self, prefix: str) -> None:
         """Drop ``temp.<prefix>%`` leftovers on every host — the end-of-job
         GC query of ClickhouseHdfsLoader.java:496-524 (which selects
         ``concat(database,'.',name)`` with a LIKE filter)."""
         for h in self._hosts():
-            cli = get_client(h, self.http_port, user=self.user, password=self.password)
+            cli = self.client(h)
             try:
                 rows = cli.query_rows(
                     f"SELECT concat(database, '.', name) AS tablename "
-                    f"FROM system.tables WHERE database = '{temp_db}' "
+                    f"FROM system.tables WHERE database = '{TEMP_DATABASE}' "
                     f"AND name LIKE '{prefix}%'")
                 for (tablename,) in [r[:1] for r in rows]:
                     cli.execute(f"DROP TABLE IF EXISTS {tablename}")

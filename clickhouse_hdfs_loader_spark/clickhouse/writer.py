@@ -1,12 +1,14 @@
 """Distributed ClickHouse writer: batching, shard routing, replica fan-out.
 
 This module owns the batch policy of BOTH load modes: the ``(shard, line)``
-serialization (``serialize_for_load``), the per-shard buffer flushed at
-``--batch-size`` or ``FLUSH_CAP`` (``shard_batches``) and the alive-replica
-probe (``first_alive``). The direct mode below and the staged mode
-(staging.py) differ only in where a batch goes and how a failure counts —
-the reference's single mapper choosing ``batchDirectInsert`` or a staged
-insert at flush time (AbstractClickhouseLoaderMapper.java:288-452).
+serialization (``serialize_for_load``) and the per-shard buffer flushed at
+``--batch-size`` or ``FLUSH_CAP`` (``shard_batches``). The direct mode
+below and the staged mode (staging.py) differ only in where a batch goes
+and how a failure counts — the reference's single mapper choosing
+``batchDirectInsert`` or a staged insert at flush time
+(AbstractClickhouseLoaderMapper.java:288-452). Hosts, login, alive probe
+and retries come from the cluster handle (``lifecycle.LifecycleManager``)
+the caller passes in.
 
 Reference parity (SURVEY §2.A W1/W2/W6 + P1/P4):
 - W1 buffered batch INSERT — rows buffered per shard under an
@@ -33,7 +35,7 @@ in direct mode; the staged mode (staging.py) is the exactly-once-ish path.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator, Sequence
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame
 
@@ -41,7 +43,7 @@ from ..config import LoaderConfig
 from ..operators.sharding import ClusterTopology, repartition_by_shard
 from ..operators.transform import (format_header_lines, wire_line_col,
                                    wire_separator)
-from .client import get_client, with_retries
+from .lifecycle import LifecycleManager
 
 FLUSH_CAP = 1_048_576  # ClickHouse atomic-insert bound (reference :294-295)
 
@@ -87,45 +89,29 @@ def shard_batches(rows: Iterable[tuple[int, str]], batch_size: int,
             yield shard, len(buf), prefix + "\n".join(buf)
 
 
-def first_alive(hosts: Sequence[str], port: int, **client_kw) -> str:
-    """First replica answering the HTTP-200 probe, else ``hosts[0]`` — the
-    reference's getANodeAddress (AbstractClickhouseLoaderMapper.java:
-    318-326)."""
-    return next((h for h in hosts if get_client(h, port, **client_kw).ping()),
-                hosts[0])
-
-
-def write_direct(df: DataFrame, key_col: str, topology: ClusterTopology,
+def write_direct(df: DataFrame, key_col: str, cluster: LifecycleManager,
                  config: LoaderConfig, *, database: str, table: str,
-                 replicated: bool = False, backoff_scale: float = 1.0) -> dict:
+                 replicated: bool = False) -> dict:
     """Direct-mode load (``--direct true``): route → serialize → buffered
-    batch inserts to the shard's local table. Returns accounting counters
-    (W6)."""
+    batch inserts to the shard's local table on the ``cluster`` handle's
+    hosts. Returns accounting counters (W6)."""
     header = insert_header(database, table, config.clickhouse_format)
-    hosts_per_shard = [n.hosts for n in topology.nodes]
-    port = config.clickhouse_http_port
-    client_kw = dict(user=config.username, password=config.password,
-                     database=database)
-
     spark = df.sparkSession
     ok_acc = spark.sparkContext.accumulator(0)
     fail_acc = spark.sparkContext.accumulator(0)
-    serialized, payload_prefix = serialize_for_load(df, key_col, topology, config)
+    serialized, payload_prefix = serialize_for_load(df, key_col,
+                                                    cluster.topology, config)
 
     def write_partition(rows) -> None:
         for shard, n, payload in shard_batches(rows, config.batch_size,
                                                payload_prefix):
             # W2 fan-out: Replicated → one alive replica, probed per
             # batch; non-replicated → every replica of the shard
-            hosts = hosts_per_shard[shard]
-            targets = ([first_alive(hosts, port, **client_kw)] if replicated
-                       else hosts)
+            hosts = cluster.topology.nodes[shard].hosts
+            targets = [cluster.first_alive(hosts)] if replicated else hosts
             try:
                 for h in targets:
-                    cli = get_client(h, port, **client_kw)
-                    with_retries(lambda: cli.insert_payload(header, payload),
-                                 tier="direct", max_tries=config.max_tries,
-                                 backoff_scale=backoff_scale)
+                    cluster.run(h, f"{header}\n{payload}", tier="direct")
                 ok_acc.add(n)
             except Exception:
                 # Count the failure but do NOT re-raise: a failed Spark task

@@ -75,20 +75,21 @@ def run_load(config: LoaderConfig, spark: SparkSession,
     target_width = len(describe)
     replicated = "Replicated" in local_ddl
 
-    lm = LifecycleManager(topology, http_port, config.max_tries, backoff_scale,
-                          user=config.username, password=config.password)
+    # the connect URL's port reaches only the entry node above; every
+    # topology host is reached through this handle
+    cluster = LifecycleManager.from_config(topology, config, backoff_scale)
     target_table = dist.local_table
     # step 3 — daily tables
     if config.daily and config.dt:
-        target_table = lm.create_daily_tables(
+        target_table = cluster.create_daily_tables(
             local_ddl, dist.local_database, dist.local_table, config.dt,
             mode=config.mode)
         # started-and-joined worker thread; expiry failure logs, never
         # aborts the load (ClickhouseHdfsLoader.java:133-139)
-        lm.expire_daily_tables_task(dist.local_database, dist.local_table,
-                                    config.dt, config.daily_expires,
-                                    config.daily_expires_process,
-                                    distributed_database=database)
+        cluster.expire_daily_tables_task(
+            dist.local_database, dist.local_table, config.dt,
+            config.daily_expires, config.daily_expires_process,
+            distributed_database=database)
 
     # step 4 — read + transform
     df = source_df if source_df is not None else read_input(spark, config)
@@ -117,26 +118,26 @@ def run_load(config: LoaderConfig, spark: SparkSession,
     prefix = temp_table_prefix(target_table, config.dt or "00000000")
     try:
         if config.direct:
-            return write_direct(df, key_col, topology, config,
+            return write_direct(df, key_col, cluster, config,
                                 database=dist.local_database,
-                                table=target_table, replicated=replicated,
-                                backoff_scale=backoff_scale)
-        plan = staged_load(df, key_col, topology, config,
+                                table=target_table, replicated=replicated)
+        plan = staged_load(df, key_col, cluster, config,
                            create_ddl=local_ddl,
                            target_database=dist.local_database,
                            target_table=target_table, prefix=prefix,
-                           replicated=replicated, backoff_scale=backoff_scale)
+                           replicated=replicated)
         return {"staged_tables": len(plan.temp_tables)}
     finally:
         # step 7 — GC this run's leftovers from aborted attempts; the run
         # prefix leaves a concurrent load of the same table alone
-        lm.clean_temp_tables(prefix)
+        cluster.clean_temp_tables(prefix)
 
 
 def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
     config = parse_args(argv)
-    spark = get_spark(app_name=f"load-{config.table}")
+    spark = get_spark(app_name=f"load-{config.table}", extra_conf={
+        "spark.sql.files.maxPartitionBytes": str(config.input_split_max_bytes)})
     try:
         stats = run_load(config, spark)
         print(stats)

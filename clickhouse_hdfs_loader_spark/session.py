@@ -3,7 +3,8 @@
 Defaults mirror the reference's performance-relevant knobs (SURVEY §6 /
 BASELINE.md): 256 MiB input splits (``--input-split-max-bytes`` default,
 MainCliParameterParser.java:102-103) map to
-``spark.sql.files.maxPartitionBytes``; speculative execution is disabled
+``spark.sql.files.maxPartitionBytes`` (``main.main`` passes the option
+through ``extra_conf``); speculative execution is disabled
 exactly like ClickhouseHdfsLoader.java:194-197 (duplicate-insert
 protection on the write path).
 

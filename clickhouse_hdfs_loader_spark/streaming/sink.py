@@ -14,20 +14,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from ..clickhouse.lifecycle import LifecycleManager
 from ..config import LoaderConfig
-from ..operators.sharding import ClusterTopology
 
 
 def stream_to_clickhouse(stream: DataFrame, key_col: str,
-                         topology: ClusterTopology, config: LoaderConfig, *,
+                         cluster: LifecycleManager, config: LoaderConfig, *,
                          database: str, table: str, replicated: bool = False,
-                         backoff_scale: float = 1.0,
                          checkpoint_dir: str | None = None,
                          available_now: bool = True,
                          staged: bool = False,
                          create_ddl: str | None = None) -> StreamingQuery:
     """Attach the ClickHouse writer to a stream; each micro-batch is one
-    bounded load job.
+    bounded load job against the ``cluster`` handle's hosts.
 
     ``staged=False`` (default): W1/W2 direct-mode semantics per batch —
     buffered inserts straight into the shard-local tables.
@@ -52,15 +51,14 @@ def stream_to_clickhouse(stream: DataFrame, key_col: str,
         if batch_df.isEmpty():
             return
         if staged:
-            staged_load(batch_df, key_col, topology, config,
+            staged_load(batch_df, key_col, cluster, config,
                         create_ddl=create_ddl, target_database=database,
                         target_table=table,
                         prefix=temp_table_prefix(table, f"b{batch_id}"),
-                        replicated=replicated, backoff_scale=backoff_scale)
+                        replicated=replicated)
         else:
-            write_direct(batch_df, key_col, topology, config,
-                         database=database, table=table, replicated=replicated,
-                         backoff_scale=backoff_scale)
+            write_direct(batch_df, key_col, cluster, config,
+                         database=database, table=table, replicated=replicated)
 
     writer = stream.writeStream.foreachBatch(write_batch)
     if checkpoint_dir:

@@ -4,8 +4,11 @@ W5 retries, D1 GC, D2/D3 lifecycle, D6 resolution."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 
+from clickhouse_hdfs_loader_spark.clickhouse import client as client_mod
 from clickhouse_hdfs_loader_spark.clickhouse import staging, writer
 from clickhouse_hdfs_loader_spark.clickhouse.client import (
     ClickHouseError,
@@ -45,6 +48,11 @@ def mocks():
         s.stop()
 
 
+def cluster_of(topo: ClusterTopology, cfg: LoaderConfig) -> LifecycleManager:
+    """The load's cluster handle over ``topo``, at test-speed backoff."""
+    return LifecycleManager.from_config(topo, cfg, backoff_scale=0.001)
+
+
 def topo_of(servers, weights=None) -> ClusterTopology:
     weights = weights or [1] * len(servers)
     return ClusterTopology([
@@ -60,13 +68,22 @@ def test_client_roundtrip_and_ping(mocks):
     assert cli.query_rows("SELECT 1") == [["1"]]
 
 
-def test_retry_ladder_recovers(mocks):
+def test_retry_ladder_recovers(mocks, caplog):
     m = mocks[0]
     m.fail_first = 2
     cli = get_client(f"{m.host}:{m.port}")
-    with_retries(lambda: cli.execute("SELECT 'x'"), tier="ddl",
-                 max_tries=3, backoff_scale=0.001)
+    with caplog.at_level(logging.WARNING, logger=client_mod.__name__):
+        with_retries(lambda: cli.execute("SELECT 'x'"), tier="ddl",
+                     max_tries=3, backoff_scale=0.001)
     assert len(m.statements) == 3  # two failures + success
+    # one WARNING per failed attempt: tier, attempt/max, sleep, host:port
+    msgs = [r.getMessage() for r in caplog.records
+            if r.levelno == logging.WARNING]
+    assert len(msgs) == 2
+    for n, msg in enumerate(msgs, start=1):
+        assert msg.startswith(f"ddl tier: attempt {n}/3 failed")
+        assert f"sleeping {n * 0.001:.3f}s" in msg
+        assert f"{m.host}:{m.port} HTTP 500" in msg
 
 
 def test_retry_ladder_exhausts(mocks):
@@ -86,8 +103,8 @@ def test_write_direct_batches_and_routes(spark, mocks):
     cfg = LoaderConfig(batch_size=40, clickhouse_format="TabSeparated")
     topo = topo_of(mocks)
     df = spark.createDataFrame([(f"k{i}", i) for i in range(200)], ["k", "v"])
-    stats = write_direct(df, "k", topo, cfg, database="db", table="t",
-                         replicated=False, backoff_scale=0.001)
+    stats = write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
+                         table="t", replicated=False)
     assert stats == {"success_records": 200, "failed_records": 0}
     total = 0
     for m in mocks:
@@ -108,8 +125,8 @@ def test_write_direct_routing_matches_reference_hash(spark, mocks):
     topo = topo_of(mocks, weights=[2, 1, 1][:len(mocks)])
     keys = [f"key-{i}" for i in range(60)]
     df = spark.createDataFrame([(k,) for k in keys], ["k"])
-    write_direct(df, "k", topo, cfg, database="db", table="t",
-                 backoff_scale=0.001)
+    write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
+                 table="t")
     table = topo.slot_to_shard_index()
     expected_by_shard = {i: set() for i in range(len(mocks))}
     for k in keys:
@@ -128,10 +145,10 @@ def test_staged_load_two_phase(spark, mocks):
     topo = topo_of(mocks)
     ddl = "CREATE TABLE db.t (k String, v Int32) ENGINE = MergeTree ORDER BY k"
     df = spark.createDataFrame([(f"k{i}", i) for i in range(120)], ["k", "v"])
-    plan = staging.staged_load(df, "k", topo, cfg, create_ddl=ddl,
+    plan = staging.staged_load(df, "k", cluster_of(topo, cfg), cfg,
+                               create_ddl=ddl,
                                target_database="db", target_table="t",
-                               prefix=temp_table_prefix("t", "2017-01-07"),
-                               backoff_scale=0.001)
+                               prefix=temp_table_prefix("t", "2017-01-07"))
     assert plan.temp_tables  # something was staged
     all_stmts = [s for m in mocks for s in m.statements]
     creates = [s for s in all_stmts if s.startswith("CREATE TABLE temp.")]
@@ -156,13 +173,43 @@ def test_staged_replica_replay(spark, mocks):
     cfg = LoaderConfig(batch_size=50)
     ddl = "CREATE TABLE db.t (k String) ENGINE = MergeTree ORDER BY k"
     df = spark.createDataFrame([(f"k{i}",) for i in range(10)], ["k"])
-    staging.staged_load(df, "k", topo, cfg, create_ddl=ddl,
-                        target_database="db", target_table="t",
-                        prefix=temp_table_prefix("t", "00000000"),
-                        replicated=False, backoff_scale=0.001)
+    plan = staging.staged_load(df, "k", cluster_of(topo, cfg), cfg,
+                               create_ddl=ddl, target_database="db",
+                               target_table="t",
+                               prefix=temp_table_prefix("t", "00000000"),
+                               replicated=False)
     replays = [s for s in b.statements if "FROM remote(" in s]
     assert len(replays) == len(
         [s for s in a.statements if s.startswith("INSERT INTO db.t SELECT")])
+    # temp tables live on the staging host only: a drops each one, the
+    # sibling that replayed through remote() is sent no DROP
+    assert plan.temp_tables
+    for _host, temp in plan.temp_tables:
+        assert f"DROP TABLE IF EXISTS {temp}" in a.statements
+    assert not [s for s in b.statements
+                if s.startswith("DROP TABLE IF EXISTS temp.")]
+
+
+def test_staged_load_creates_temp_database_once_per_host(spark, mocks):
+    """The driver creates the temp database once per host before the
+    Spark action; the write tasks (two per shard here) send only their
+    own temp-table DDL."""
+    cfg = LoaderConfig(batch_size=50, num_reduce_tasks=6)
+    topo = topo_of(mocks)
+    ddl = "CREATE TABLE db.t (k String, v Int32) ENGINE = MergeTree ORDER BY k"
+    df = spark.createDataFrame([(f"k{i}", i) for i in range(300)], ["k", "v"])
+    plan = staging.staged_load(df, "k", cluster_of(topo, cfg), cfg,
+                               create_ddl=ddl, target_database="db",
+                               target_table="t",
+                               prefix=temp_table_prefix("t", "2017-01-07"))
+    assert len(plan.temp_tables) > len(mocks)   # several tasks per shard
+    for m in mocks:
+        creates = [s for s in m.statements if s.startswith("CREATE DATABASE")]
+        assert creates == ["CREATE DATABASE IF NOT EXISTS temp"]
+        # the database exists before the first temp table is created
+        assert m.statements.index(creates[0]) < min(
+            i for i, s in enumerate(m.statements)
+            if s.startswith("CREATE TABLE temp."))
 
 
 def test_ddl_rewrite_to_striplog():
@@ -308,15 +355,15 @@ def test_staged_cleanup_on_promote_failure(spark, mocks):
     topo = topo_of(mocks[:1])
     ddl = "CREATE TABLE db.t (k String) ENGINE = MergeTree ORDER BY k"
     df = spark.createDataFrame([(f"k{i}",) for i in range(10)], ["k"])
-    plan = staging.stage_partitions(df, "k", topo, cfg, create_ddl=ddl,
+    plan = staging.stage_partitions(df, "k", cluster_of(topo, cfg), cfg,
+                                    create_ddl=ddl,
                                     target_database="db", target_table="t",
-                                    prefix=temp_table_prefix("t", "2017-01-07"),
-                                    backoff_scale=0.001)
+                                    prefix=temp_table_prefix("t", "2017-01-07"))
     assert plan.temp_tables
     m = mocks[0]
     m.fail_first = 99  # every subsequent statement fails...
     with _pytest.raises(ClickHouseError):
-        staging.promote(plan, topo, cfg, backoff_scale=0.001)
+        staging.promote(plan, cluster_of(topo, cfg))
     # ...yet the cleanup DROPs were attempted for every staged table
     drops = [s for s in m.statements if s.startswith("DROP TABLE IF EXISTS temp.")]
     assert len(drops) >= len(plan.temp_tables)
@@ -331,8 +378,8 @@ def test_write_direct_sanitizes_wire_fields(spark, mocks):
     df = spark.createDataFrame(
         [("k1", "a\tb", 1), ("k2", "c\nd", 2), ("k3", "e\\f", 3)],
         ["k", "s", "v"])
-    write_direct(df, "k", topo, cfg, database="db", table="t",
-                 backoff_scale=0.001)
+    write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
+                 table="t")
     rows = [line for ins in mocks[0].inserts()
             for line in ins.splitlines()[1:]]
     assert len(rows) == 3                       # no row split by newline
@@ -350,8 +397,8 @@ def test_write_direct_honours_replace_char(spark, mocks):
     topo = topo_of(mocks[:1])
     df = spark.createDataFrame([("k1", "a\tb\\c"), ("k2", "d\ne")],
                                ["k", "s"])
-    write_direct(df, "k", topo, cfg, database="db", table="t",
-                 backoff_scale=0.001)
+    write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
+                 table="t")
     rows = sorted(line for ins in mocks[0].inserts()
                   for line in ins.splitlines()[1:])
     assert rows == ["k1\ta_b/c", "k2\td_e"]
@@ -390,8 +437,8 @@ def test_write_direct_failure_counts_without_task_retry(spark, mocks):
         df = spark.createDataFrame([(f"key-{i}", i) for i in range(60)],
                                    ["k", "v"])
         with pytest.raises(RuntimeError, match="load failed") as exc:
-            write_direct(df, "k", topo, cfg, database="db", table="t",
-                         backoff_scale=0.001)
+            write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
+                         table="t")
         stats = eval(str(exc.value).split("load failed: ")[1])
         assert stats["failed_records"] > 0
         assert stats["success_records"] + stats["failed_records"] == 60
@@ -417,9 +464,9 @@ def test_staged_load_falls_back_to_alive_replica(spark, mocks):
     ddl = "CREATE TABLE db.t (k String, v Int32) ENGINE = MergeTree ORDER BY k"
     df = spark.createDataFrame([(f"k{i}", i) for i in range(20)], ["k", "v"])
     plan = staging.stage_partitions(
-        df, "k", topo, cfg, create_ddl=ddl, target_database="db",
-        target_table="t", prefix=temp_table_prefix("t", "2017-01-07"),
-        backoff_scale=0.001)
+        df, "k", cluster_of(topo, cfg), cfg, create_ddl=ddl,
+        target_database="db", target_table="t",
+        prefix=temp_table_prefix("t", "2017-01-07"))
     assert plan.temp_tables
     assert all(h == f"{mocks[0].host}:{mocks[0].port}"
                for h, _t in plan.temp_tables)
@@ -440,8 +487,8 @@ def test_write_direct_transient_failure_rows_counted_once(spark, mocks):
     m.fail_first = 1          # first insert POST 500s, retry succeeds
     topo = topo_of([m])
     df = spark.createDataFrame([(f"k{i}", i) for i in range(60)], ["k", "v"])
-    stats = write_direct(df, "k", topo, cfg, database="db", table="t",
-                         backoff_scale=0.001)
+    stats = write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
+                         table="t")
     assert stats == {"success_records": 60, "failed_records": 0}
     # the failed attempt and its retry carry an identical payload — the
     # retry re-POSTs the same batch, it does not rebuild or split it
@@ -464,8 +511,8 @@ def test_write_direct_replicated_skips_dead_replica(spark, mocks):
     topo = ClusterTopology([
         ShardNode(1, 1, (dead_addr, f"{alive.host}:{alive.port}"))])
     df = spark.createDataFrame([(f"k{i}", i) for i in range(40)], ["k", "v"])
-    stats = write_direct(df, "k", topo, cfg, database="db", table="t",
-                         replicated=True, backoff_scale=0.001)
+    stats = write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
+                         table="t", replicated=True)
     assert stats == {"success_records": 40, "failed_records": 0}
     rows = [line for ins in alive.inserts() for line in ins.splitlines()[1:]]
     assert len(rows) == 40 and len(set(rows)) == 40  # alive replica, once
@@ -483,8 +530,8 @@ def test_write_direct_all_replicas_down_fails_job_verdict(spark, mocks):
     topo = ClusterTopology([ShardNode(1, 1, (addr1, addr2))])
     df = spark.createDataFrame([(f"k{i}", i) for i in range(10)], ["k", "v"])
     with pytest.raises(RuntimeError, match="load failed") as exc:
-        write_direct(df, "k", topo, cfg, database="db", table="t",
-                     replicated=True, backoff_scale=0.001)
+        write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
+                     table="t", replicated=True)
     stats = eval(str(exc.value).split("load failed: ")[1])
     assert stats == {"success_records": 0, "failed_records": 10}
 
@@ -558,8 +605,8 @@ def test_write_direct_with_names_and_types_header_rows(spark, mocks):
                        clickhouse_format="TabSeparatedWithNamesAndTypes")
     topo = topo_of(mocks)
     df = spark.createDataFrame([(f"k{i}", i) for i in range(100)], ["k", "v"])
-    write_direct(df, "k", topo, cfg, database="db", table="t",
-                 backoff_scale=0.001)
+    write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
+                 table="t")
     total = 0
     for m in mocks:
         for ins in m.inserts():
@@ -579,11 +626,10 @@ def test_staged_load_csv_with_names_header_row(spark, mocks):
     topo = topo_of(mocks[:1])
     df = spark.createDataFrame([(f"k{i}", i) for i in range(30)], ["k", "v"])
     plan = staging.stage_partitions(
-        df, "k", topo, cfg,
+        df, "k", cluster_of(topo, cfg), cfg,
         create_ddl="CREATE TABLE db.t (k String, v Int64) ENGINE = MergeTree ORDER BY k",
         target_database="db", target_table="t",
-        prefix=temp_table_prefix("t", "20260813"),
-        backoff_scale=0.001)
+        prefix=temp_table_prefix("t", "20260813"))
     assert plan.temp_tables
     payload_inserts = [i for i in mocks[0].inserts() if "FORMAT" in i]
     assert payload_inserts

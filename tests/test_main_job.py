@@ -141,6 +141,65 @@ def test_daily_mode_creates_and_expires(spark, tmp_path, cluster):
                for s in all_stmts)
 
 
+def test_topology_hosts_use_the_clickhouse_http_port(spark, tmp_path):
+    """``system.clusters`` answers bare host addresses: every topology
+    host — daily DDL and INSERTs alike — is reached on
+    ``--clickhouse-http-port``; the connect URL's port reaches only the
+    entry node's catalog reads."""
+    entry, shard = MockClickHouse(), MockClickHouse()
+    try:
+        entry.canned["SHOW CREATE TABLE test.t1"] = TARGET_DDL
+        entry.canned["SHOW CREATE TABLE test_local.t1"] = LOCAL_DDL
+        entry.canned["system.clusters"] = f"1\t1\t['{shard.host}']\n"
+        entry.canned["DESC test_local.t1"] = \
+            "plat\tInt8\nh_did\tString\nv\tInt32\n"
+        export_dir = _write_input(tmp_path, ["1|x|did_1|y|2", "3|x|did_2|y|4"])
+        cfg = parse_args([
+            "--connect", f"jdbc:clickhouse://{entry.host}:{entry.port}/test",
+            "--clickhouse-http-port", str(shard.port),
+            "--table", "t1", "--export-dir", export_dir,
+            "--exclude-fields", "1,3", "--direct", "true",
+            "--daily", "true", "--dt", "2017-01-07",
+        ])
+        stats = run_load(cfg, spark, backoff_scale=0.001)
+        assert stats == {"success_records": 2, "failed_records": 0}
+        assert any(s.startswith("CREATE TABLE IF NOT EXISTS test_local.t1_20170107")
+                   for s in shard.statements)
+        assert any(s.startswith("INSERT INTO test_local.t1_20170107 FORMAT")
+                   for s in shard.statements)
+        # the entry node saw the catalog reads and nothing else
+        assert all(s.startswith(("SHOW CREATE TABLE", "DESC"))
+                   or "system.clusters" in s for s in entry.statements)
+    finally:
+        entry.stop()
+        shard.stop()
+
+
+def test_input_split_max_bytes_reaches_the_session(monkeypatch):
+    """S1: ``--input-split-max-bytes`` sets
+    ``spark.sql.files.maxPartitionBytes`` where ``main()`` builds the
+    session."""
+    from clickhouse_hdfs_loader_spark import main as main_mod
+    from clickhouse_hdfs_loader_spark import session
+
+    seen = {}
+
+    class FakeSpark:
+        def stop(self):
+            seen["stopped"] = True
+
+    def fake_get_spark(**kwargs):
+        seen.update(kwargs)
+        return FakeSpark()
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    monkeypatch.setattr(main_mod, "run_load", lambda config, spark: {})
+    assert main_mod.main(REQUIRED_MIN + ["--input-split-max-bytes",
+                                         "1048576"]) == 0
+    assert seen["extra_conf"]["spark.sql.files.maxPartitionBytes"] == "1048576"
+    assert seen["stopped"]
+
+
 def test_hive_partition_and_additional_cols_load(spark, tmp_path, cluster):
     """T6+T7 through the CLI: partition value from the path and a constant
     column both count toward the target width (5 data − 2 excl + dt +

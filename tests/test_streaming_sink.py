@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from clickhouse_hdfs_loader_spark.clickhouse.lifecycle import LifecycleManager
 from clickhouse_hdfs_loader_spark.config import LoaderConfig
 from clickhouse_hdfs_loader_spark.operators.sharding import (
     ClusterTopology,
@@ -13,6 +14,10 @@ from clickhouse_hdfs_loader_spark.operators.sharding import (
 from clickhouse_hdfs_loader_spark.streaming.sink import stream_to_clickhouse
 
 from .mock_clickhouse import MockClickHouse
+
+
+def cluster_of(topo: ClusterTopology, cfg: LoaderConfig) -> LifecycleManager:
+    return LifecycleManager.from_config(topo, cfg, backoff_scale=0.001)
 
 
 def test_stream_to_clickhouse_delivers_all_rows(spark, sf_dir, tmp_path):
@@ -26,9 +31,8 @@ def test_stream_to_clickhouse_delivers_all_rows(spark, sf_dir, tmp_path):
         stream = (spark.readStream.schema(schema)
                   .option("pathGlobFilter", "nation.parquet").parquet(sf_dir))
         q = stream_to_clickhouse(
-            stream, "n_name", topo, cfg, database="db", table="nation",
-            backoff_scale=0.001,
-            checkpoint_dir=str(tmp_path / "ckpt"))
+            stream, "n_name", cluster_of(topo, cfg), cfg, database="db",
+            table="nation", checkpoint_dir=str(tmp_path / "ckpt"))
         q.awaitTermination(120)
         q.stop()
         rows = [line for s in servers for ins in s.inserts()
@@ -69,8 +73,8 @@ def test_stream_to_clickhouse_staged_two_phase_per_batch(spark, sf_dir, tmp_path
         stream = (spark.readStream.schema(schema)
                   .option("pathGlobFilter", "nation.parquet").parquet(sf_dir))
         q = stream_to_clickhouse(
-            stream, "n_name", topo, cfg, database="db", table="nation",
-            backoff_scale=0.001, checkpoint_dir=str(tmp_path / "ckpt2"),
+            stream, "n_name", cluster_of(topo, cfg), cfg, database="db",
+            table="nation", checkpoint_dir=str(tmp_path / "ckpt2"),
             staged=True, create_ddl=ddl)
         q.awaitTermination(120)
         q.stop()
@@ -89,8 +93,8 @@ def test_stream_to_clickhouse_staged_two_phase_per_batch(spark, sf_dir, tmp_path
         assert staged_rows == 25
         # direct mode must require create_ddl for staged
         with pytest.raises(ValueError):
-            stream_to_clickhouse(stream, "n_name", topo, cfg, database="db",
-                                 table="nation", staged=True)
+            stream_to_clickhouse(stream, "n_name", cluster_of(topo, cfg), cfg,
+                                 database="db", table="nation", staged=True)
     finally:
         for s in servers:
             s.stop()
@@ -118,8 +122,8 @@ def test_staged_sink_no_duplicates_after_midload_failure(spark, sf_dir, tmp_path
         stream = (spark.readStream.schema(schema)
                   .option("pathGlobFilter", "nation.parquet").parquet(sf_dir))
         q = stream_to_clickhouse(
-            stream, "n_name", topo, cfg, database="db", table="nation",
-            backoff_scale=0.001, checkpoint_dir=str(tmp_path / "ckpt3"),
+            stream, "n_name", cluster_of(topo, cfg), cfg, database="db",
+            table="nation", checkpoint_dir=str(tmp_path / "ckpt3"),
             staged=True, create_ddl=ddl)
         assert q.awaitTermination(120)
         q.stop()
