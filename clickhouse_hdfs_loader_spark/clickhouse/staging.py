@@ -2,7 +2,7 @@
 
 Protocol (SURVEY §3.2-3.3):
 1. the driver creates the ``temp`` database once on every live host;
-   each task then creates its temp table
+   each scan task then creates its temp table
    ``temp.<table>_<dtYYYYMMDD>_<epoch>_p<NNNNNN>_A`` on the staging host
    of each shard it writes, with the target's DDL rewritten to
    ``ENGINE = StripeLog`` (ClickhouseHdfsLoader.java:114-118 prefix;
@@ -26,12 +26,12 @@ an aborted attempt's table is simply never promoted — duplicate promotion
 is impossible without distributed coordination, which is the same
 guarantee level the reference achieves by disabling speculation.
 
-The batch policy — serialization, per-shard buffers, flush cap — is owned
-by writer.py and shared with the direct mode; hosts, login, alive probe
-and retries come from the cluster handle (``lifecycle.LifecycleManager``).
-This module owns only what differs: the temp-table target, one host per
-shard per task, and failures that raise (a retried task writes a fresh
-table, so re-raising is safe here).
+The batch policy — serialization, routing, per-shard buffers, flush cap —
+is owned by writer.py and shared with the direct mode; hosts, login, alive
+probe and retries come from the cluster handle
+(``lifecycle.LifecycleManager``). This module owns only what differs: the
+temp-table target, one host per shard per task, and failures that raise (a
+retried task writes a fresh table, so re-raising is safe here).
 """
 
 from __future__ import annotations
@@ -40,11 +40,13 @@ import re
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..config import LoaderConfig
 from .lifecycle import TEMP_DATABASE, LifecycleManager
-from .writer import insert_header, serialize_for_load, shard_batches
+from .writer import (insert_header, routed_lines, serialize_for_load,
+                     shard_batches)
 
 
 def temp_table_prefix(table: str, dt: str) -> str:
@@ -81,26 +83,26 @@ def stage_partitions(df: DataFrame, key_col: str, cluster: LifecycleManager,
                      config: LoaderConfig, *, create_ddl: str,
                      target_database: str, target_table: str,
                      prefix: str) -> StagedLoadPlan:
-    """Phase 1+2: create per-partition temp tables named under the run's
-    ``prefix`` (``temp_table_prefix``) and batch-insert into them from
-    ``mapPartitions``. Returns the promote plan."""
+    """Phase 1+2: create per-task temp tables named under the run's
+    ``prefix`` (``temp_table_prefix``) and batch-insert into them from the
+    scan tasks' ``mapInArrow``. Returns the promote plan."""
     from pyspark import TaskContext
 
-    serialized, payload_prefix = serialize_for_load(df, key_col,
-                                                    cluster.topology, config)
+    serialized, payload_prefix = serialize_for_load(df, key_col, config)
     # once per host from the driver, not once per task per host; a down
     # replica is skipped here just as the tasks' probe skips it
     cluster.exec_all(f"CREATE DATABASE IF NOT EXISTS {TEMP_DATABASE}",
                      alive_only=True)
 
-    def stage_one(rows):
+    def stage_one(batches):
         ctx = TaskContext.get()
         temp = temp_table_name(prefix, ctx.partitionId(), ctx.attemptNumber())
         ddl = rewrite_ddl_to_striplog(create_ddl, TEMP_DATABASE, temp)
         header = insert_header(TEMP_DATABASE, temp, config.clickhouse_format)
         picked: dict[int, str] = {}   # shard → staging host, once per task
-        for shard, _n, payload in shard_batches(rows, config.batch_size,
-                                                payload_prefix):
+        for shard, _n, payload in shard_batches(
+                routed_lines(batches, cluster.topology), config.batch_size,
+                payload_prefix):
             if shard not in picked:
                 # a single down first-replica must not fail the staged load
                 host = cluster.first_alive(cluster.topology.nodes[shard].hosts)
@@ -109,11 +111,14 @@ def stage_partitions(df: DataFrame, key_col: str, cluster: LifecycleManager,
                 picked[shard] = host
             cluster.run(picked[shard], f"{header}\n{payload}", tier="staged")
         # mapper output of W3: ("taskId@host", temp_table) pairs
-        return [(h, f"{TEMP_DATABASE}.{temp}") for h in set(picked.values())]
+        hosts = sorted(set(picked.values()))
+        if hosts:
+            yield pa.RecordBatch.from_pydict(
+                {"host": hosts, "temp": [f"{TEMP_DATABASE}.{temp}"] * len(hosts)})
 
-    pairs = serialized.rdd.mapPartitions(stage_one).collect()
+    rows = serialized.mapInArrow(stage_one, "host string, temp string").collect()
     plan = StagedLoadPlan(target_database, target_table)
-    plan.temp_tables = sorted(set(pairs))
+    plan.temp_tables = sorted({(r.host, r.temp) for r in rows})
     return plan
 
 

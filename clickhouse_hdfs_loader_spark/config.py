@@ -47,11 +47,12 @@ class LoaderConfig:
     clickhouse_http_port: int = 8123
     username: str = "default"              # ClickHouse auth (:87-88)
     password: str = ""                     # (:90-91)
-    num_reduce_tasks: int = -1             # explicit write-task count (:50)
+    num_reduce_tasks: int = -1             # reduce-task count (:50)
     mapper_class: str = ""                 # deprecated alias of -i (:62)
 
+    # no longer sizes the write; perfbench/trace.py imports it for its route prefix
     def tasks_per_shard(self, num_shards: int) -> int:
-        """P4 sizing: ``--num-reduce-tasks`` (total write tasks) wins when
+        """P4 sizing: ``--num-reduce-tasks`` (total reduce tasks) wins when
         set, else shards × ``--loader-task-executor``
         (ClickhouseHdfsLoader.java:142-154)."""
         if self.num_reduce_tasks > 0:

@@ -11,6 +11,8 @@ batches; parity is property-tested against the scalar implementation.
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 
 _C1 = np.uint64(0x87C37B91114253D5)
@@ -130,3 +132,10 @@ def guava_shard_codes(keys: "list[str] | np.ndarray", out: np.ndarray | None = N
                              dtype=np.uint8).reshape(len(idx), length)
 
     return _codes_from_groups(codes, byte_lens, rows)
+
+
+def shard_slots(keys: "list[str | None]", total_weight: int) -> np.ndarray:
+    """Weighted slot ``guava_shard_codes(key) % total_weight`` per key; a
+    null or blank key gets a random route like the reference's UUID
+    fallback (AbstractClickhouseLoaderMapper.java:278-280)."""
+    return guava_shard_codes([k or str(uuid.uuid4()) for k in keys]) % total_weight

@@ -7,23 +7,25 @@ a cumulative-weight walk over ``system.clusters`` topology
 ClusterNodes.java:38-48). Rows with a blank sharding key are routed by a
 random UUID (same site, :278-280).
 
-Spark design: the shard id is just a column —
-``df.repartition(num_shards, shard_col)`` then co-locates each shard's rows
-in dedicated partitions for the writer. The murmur3_128 hash runs in an
-Arrow-batched pandas UDF (Spark's ``F.hash`` is murmur3_32 and cannot
-reproduce Guava's placement — SURVEY §7 "hash parity").
+Spark design: the loader routes inside its write tasks, as the
+reference's mapper does — ``ClusterTopology.route`` maps a batch of keys
+to node indexes with the numpy murmur (functions/murmur_np), no shuffle.
+``assign_shard`` exposes the same placement as a column through an
+Arrow-batched pandas UDF for queries (Spark's ``F.hash`` is murmur3_32 and
+cannot reproduce Guava's placement — SURVEY §7 "hash parity").
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from ..functions.murmur_np import guava_shard_codes
+from ..functions.murmur_np import shard_slots
 
 
 @dataclass
@@ -60,29 +62,20 @@ class ClusterTopology:
             table.extend([i] * n.shard_weight)
         return table
 
+    def route(self, keys: "list[str | None]") -> np.ndarray:
+        """Node index in ``nodes`` for each key (Guava-parity placement)."""
+        slots = shard_slots(keys, self.total_weight)
+        return np.asarray(self.slot_to_shard_index())[slots]
+
 
 def shard_slot_udf(total_weight: int) -> "F.pandas_udf":
     """Vectorized ``key → murmur-code % total_weight``; null/blank keys get a
     per-row random route exactly like the reference's UUID fallback."""
-    import uuid
-
-    # captured in the closure (NOT imported inside the UDF) so by-value
-    # cloudpickle ships it to workers that can't import this package
-    vectorized_codes = guava_shard_codes
-
     @F.pandas_udf(IntegerType())
     def _slot(keys: pd.Series) -> pd.Series:
-        # vectorized Guava-parity murmur (functions/murmur_np: numpy uint64
-        # wrap-around arithmetic, one bulk utf-16-le encode + per-length
-        # group hashing); blank/null keys get the UUID random route. The
-        # column is cast to string upstream, so tolist() already yields
-        # str/None — no per-row str() pass.
-        vals = keys.tolist()
-        for i, v in enumerate(vals):
-            if not v:   # None or "" → reference's UUID fallback (:278-280)
-                vals[i] = str(uuid.uuid4())
-        codes = vectorized_codes(vals)
-        return pd.Series((codes % total_weight).astype("int32"))
+        # the column is cast to string upstream, so tolist() already
+        # yields str/None — no per-row str() pass
+        return pd.Series(shard_slots(keys.tolist(), total_weight).astype("int32"))
 
     return _slot
 
@@ -109,16 +102,11 @@ def assign_shard(df: DataFrame, key_col: str, topology: ClusterTopology,
     return df.withColumn(out_col, F.element_at(mapping, slot + 1))
 
 
+# unused by the loader (it routes in its write tasks); perfbench/trace.py imports it
 def repartition_by_shard(df: DataFrame, key_col: str, topology: ClusterTopology,
                          tasks_per_shard: int = 1) -> DataFrame:
-    """P4-equivalent sizing: shard×executor-factor write partitions
-    (ClickhouseHdfsLoader.java:142-154). Hash partitioning sends all rows of
-    one (shard, salt) pair to a single partition, so each shard's rows land
-    in at most ``tasks_per_shard`` partitions; distinct shards may share a
-    partition, which the writer handles with per-shard buffers — the same
-    design as the reference's per-host ``HostRecordsCache``
-    (HostRecordsCache.java:6-17).
-    """
+    """``assign_shard`` then hash-partition on (shard, crc32 salt): each
+    shard's rows land in at most ``tasks_per_shard`` partitions."""
     df = assign_shard(df, key_col, topology)
     n = max(1, len(topology.nodes) * tasks_per_shard)
     salt = (F.crc32(F.col(key_col).cast("string")) % tasks_per_shard).cast("int") \

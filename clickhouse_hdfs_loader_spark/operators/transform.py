@@ -220,22 +220,6 @@ def wire_line_col(df: DataFrame, data_cols: list[str], sep: str,
     return F.concat_ws(sep, *parts)
 
 
-def serialize_rows(df: DataFrame, fmt: str = "TabSeparated") -> DataFrame:
-    """T10 — newline-payload serialization for ClickHouse ``INSERT … FORMAT``
-    (ConfigurationOptions.java:47-71: TabSeparated* → ``\\t``, CSV* → ``,``).
-    Returns a single ``line`` string column; the writer prepends the INSERT
-    header per batch (AbstractClickhouseLoaderMapper.java:288-298).
-
-    concat_ws SKIPS null columns, which would silently shift the row width
-    on the wire — any null surviving to serialization (e.g.
-    ``escape_null=False`` on a non-string column) must serialize as the
-    ClickHouse NULL marker ``\\N``, like the reference's raw passthrough.
-    String fields are sanitized first (``wire_line_col``).
-    """
-    sep = wire_separator(fmt)
-    return df.select(wire_line_col(df, list(df.columns), sep).alias("line"))
-
-
 @dataclass
 class RejectStats:
     """W6 — load accounting (AbstractClickhouseLoaderMapper.java:133-139)."""

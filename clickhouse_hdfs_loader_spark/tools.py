@@ -2,7 +2,8 @@
 (D4, SURVEY §2.A) as a subcommand:
 
     python -m clickhouse_hdfs_loader_spark.tools drop-partition \
-        --connect jdbc:clickhouse://h:8123/db --table t --partition "'2017-01-07'"
+        --connect jdbc:clickhouse://h:8123/db --table t --partition "'2017-01-07'" \
+        [--clickhouse-http-port 8123] [--username default] [--password ""]
 
 Same protocol as clickhouse_alter_table:31-189: resolve Distributed →
 (cluster, local db/table), require a *MergeTree engine, issue
@@ -16,14 +17,23 @@ import argparse
 
 from .clickhouse.client import get_client
 from .clickhouse.lifecycle import LifecycleManager, resolve_distributed
+from .config import LoaderConfig
 from .main import _parse_connect
 from .sources import catalog
 
 
 def drop_partition(connect: str, table: str, partition: str,
-                   backoff_scale: float = 1.0) -> None:
+                   backoff_scale: float = 1.0, *,
+                   clickhouse_http_port: int = 8123,
+                   username: str = "default", password: str = "") -> None:
+    """Topology hosts are reached on ``clickhouse_http_port`` with the
+    given login, the way ``main.run_load`` reaches them."""
+    config = LoaderConfig(connect=connect, table=table,
+                          clickhouse_http_port=clickhouse_http_port,
+                          username=username, password=password)
     host, http_port, database = _parse_connect(connect)
-    cli = get_client(host, http_port, database=database)
+    cli = get_client(host, http_port, user=username, password=password,
+                     database=database)
     ddl = catalog.fetch_create_table(cli, database, table)
     dist = resolve_distributed(ddl)
     if dist is None:
@@ -34,9 +44,9 @@ def drop_partition(connect: str, table: str, partition: str,
                                            dist.local_table)
     engine = "ReplicatedMergeTree" if "Replicated" in local_ddl else \
         ("MergeTree" if "MergeTree" in local_ddl else "other")
-    lm = LifecycleManager(topology, http_port, backoff_scale=backoff_scale)
-    lm.drop_partition(dist.local_database, dist.local_table, partition,
-                      engine=engine, replicated="Replicated" in local_ddl)
+    cluster = LifecycleManager.from_config(topology, config, backoff_scale)
+    cluster.drop_partition(dist.local_database, dist.local_table, partition,
+                           engine=engine, replicated="Replicated" in local_ddl)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -46,9 +56,16 @@ def main(argv: list[str] | None = None) -> int:
     dp.add_argument("--connect", required=True)
     dp.add_argument("--table", required=True)
     dp.add_argument("--partition", required=True)
+    # deployment settings, spelled and defaulted as in the loader's CLI
+    dp.add_argument("--clickhouse-http-port", dest="clickhouse_http_port",
+                    type=int, default=8123)
+    dp.add_argument("--username", default="default")
+    dp.add_argument("--password", default="")
     ns = p.parse_args(argv)
     if ns.cmd == "drop-partition":
-        drop_partition(ns.connect, ns.table, ns.partition)
+        drop_partition(ns.connect, ns.table, ns.partition,
+                       clickhouse_http_port=ns.clickhouse_http_port,
+                       username=ns.username, password=ns.password)
     return 0
 
 

@@ -192,12 +192,13 @@ def test_staged_replica_replay(spark, mocks):
 
 def test_staged_load_creates_temp_database_once_per_host(spark, mocks):
     """The driver creates the temp database once per host before the
-    Spark action; the write tasks (two per shard here) send only their
-    own temp-table DDL."""
-    cfg = LoaderConfig(batch_size=50, num_reduce_tasks=6)
+    Spark action; the write tasks (six, each writing every shard) send
+    only their own temp-table DDL."""
+    cfg = LoaderConfig(batch_size=50)
     topo = topo_of(mocks)
     ddl = "CREATE TABLE db.t (k String, v Int32) ENGINE = MergeTree ORDER BY k"
-    df = spark.createDataFrame([(f"k{i}", i) for i in range(300)], ["k", "v"])
+    df = spark.createDataFrame([(f"k{i}", i) for i in range(300)],
+                               ["k", "v"]).repartition(6)
     plan = staging.staged_load(df, "k", cluster_of(topo, cfg), cfg,
                                create_ddl=ddl, target_database="db",
                                target_table="t",
@@ -210,6 +211,37 @@ def test_staged_load_creates_temp_database_once_per_host(spark, mocks):
         assert m.statements.index(creates[0]) < min(
             i for i, s in enumerate(m.statements)
             if s.startswith("CREATE TABLE temp."))
+
+
+def jobs_and_stages(spark, group: str, action) -> tuple[int, int]:
+    """Spark jobs and stages that ``action()`` runs, counted through the
+    status tracker under a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()   # tracker is listener-fed
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    return len(jobs), len({s for j in jobs for s in tracker.getJobInfo(j).stageIds})
+
+
+def test_both_modes_write_in_one_stage(spark, mocks):
+    """The scan tasks route, batch and write: each mode is one Spark job
+    of one stage — no routing stage and no shard shuffle."""
+    cfg = LoaderConfig(batch_size=50)
+    cluster = cluster_of(topo_of(mocks), cfg)
+    df = spark.createDataFrame([(f"k{i}", i) for i in range(120)], ["k", "v"])
+    ddl = "CREATE TABLE db.t (k String, v Int32) ENGINE = MergeTree ORDER BY k"
+    assert jobs_and_stages(spark, "plan-shape-direct", lambda: write_direct(
+        df, "k", cluster, cfg, database="db", table="t")) == (1, 1)
+    assert jobs_and_stages(spark, "plan-shape-staged", lambda: (
+        staging.stage_partitions(df, "k", cluster, cfg, create_ddl=ddl,
+                                 target_database="db", target_table="t",
+                                 prefix=temp_table_prefix("t", "2017-01-07")))
+    ) == (1, 1)
 
 
 def test_ddl_rewrite_to_striplog():
@@ -343,6 +375,30 @@ def test_drop_partition_cli_tool(mocks):
     for m in mocks[:2]:
         assert any("ALTER TABLE db_local.t1 DROP PARTITION '2017-01-07'" in s
                    for s in m.statements)
+
+
+def test_drop_partition_cli_tool_port_and_login(mocks):
+    """D4 CLI with bare ``system.clusters`` addresses: the ALTER reaches
+    the shard on ``--clickhouse-http-port``, and every call logs in with
+    ``--username``; the connect URL's port serves only the catalog."""
+    from clickhouse_hdfs_loader_spark.tools import main as tools_main
+    entry, shard = mocks[0], mocks[1]
+    entry.canned["SHOW CREATE TABLE db.t1"] = (
+        "CREATE TABLE db.t1 (a Int8) ENGINE = Distributed(ck, db_local, t1, rand())")
+    entry.canned["SHOW CREATE TABLE db_local.t1"] = (
+        "CREATE TABLE db_local.t1 (a Int8) ENGINE = MergeTree ORDER BY a")
+    entry.canned["system.clusters"] = f"1\t1\t['{shard.host}']\n"
+    assert tools_main([
+        "drop-partition", "--connect",
+        f"jdbc:clickhouse://{entry.host}:{entry.port}/db", "--table", "t1",
+        "--partition", "'2017-01-07'",
+        "--clickhouse-http-port", str(shard.port),
+        "--username", "ops", "--password", "s3cret"]) == 0
+    assert shard.statements == [
+        "ALTER TABLE db_local.t1 DROP PARTITION '2017-01-07'"]
+    assert not [s for s in entry.statements if s.startswith("ALTER")]
+    for m in (entry, shard):
+        assert m.auth_users and all(u == "ops" for u in m.auth_users)
 
 
 def test_staged_cleanup_on_promote_failure(spark, mocks):
@@ -480,13 +536,14 @@ def test_write_direct_transient_failure_rows_counted_once(spark, mocks):
     and each row is counted exactly once — the retry re-posts the SAME
     batch payload, it does not re-run the task (which would double-insert
     every batch delivered before the failure)."""
-    # num_reduce_tasks=1 → ONE write partition: the POST sequence is
+    # ONE input partition → ONE write task: the POST sequence is
     # deterministic (fail, retry, second batch) even on local[8]
-    cfg = LoaderConfig(batch_size=30, max_tries=3, num_reduce_tasks=1)
+    cfg = LoaderConfig(batch_size=30, max_tries=3)
     m = mocks[0]
     m.fail_first = 1          # first insert POST 500s, retry succeeds
     topo = topo_of([m])
-    df = spark.createDataFrame([(f"k{i}", i) for i in range(60)], ["k", "v"])
+    df = spark.createDataFrame([(f"k{i}", i) for i in range(60)],
+                               ["k", "v"]).coalesce(1)
     stats = write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
                          table="t")
     assert stats == {"success_records": 60, "failed_records": 0}

@@ -304,7 +304,8 @@ def test_csv_input_direct_load(spark, tmp_path, cluster):
 
 def test_credentials_and_reduce_tasks_options(spark, tmp_path, cluster):
     """--username/--password flow to every HTTP call; --num-reduce-tasks
-    overrides the P4 write-task sizing; --mapper-class (deprecated) maps
+    parses into the P4 figure (parity only: the write is map-side and
+    sized by the input splits); --mapper-class (deprecated) maps
     reference mapper class names onto the input-format registry."""
     lines = [f"{i % 7}|x|did_{i}|y|{i}" for i in range(10)]
     export_dir = _write_input(tmp_path, lines)
@@ -321,7 +322,7 @@ def test_credentials_and_reduce_tasks_options(spark, tmp_path, cluster):
     ])
     assert cfg.username == "loader_user" and cfg.password == "s3cret"
     assert cfg.input_format == "text"
-    # 8 total write tasks over 2 shards → 4 per shard
+    # 8 total reduce tasks over 2 shards → 4 per shard
     assert cfg.tasks_per_shard(2) == 4
     stats = run_load(cfg, spark, backoff_scale=0.001)
     assert stats["failed_records"] == 0

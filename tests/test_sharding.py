@@ -33,6 +33,8 @@ def test_assign_shard_matches_reference_hash(spark):
     table = t.slot_to_shard_index()
     for k in keys:
         assert got[k] == table[guava_shard_code(k) % 4], k
+    # the loader's in-task routing places every key the same way
+    assert t.route(keys).tolist() == [got[k] for k in keys]
 
 
 def test_blank_key_random_route(spark):
@@ -41,6 +43,8 @@ def test_blank_key_random_route(spark):
     df = spark.createDataFrame([("",)] * 200, ["k"])
     shards = {r["shard"] for r in assign_shard(df, "k", t).collect()}
     assert shards.issubset({0, 1, 2}) and len(shards) >= 2
+    routed = set(t.route([""] * 100 + [None] * 100).tolist())
+    assert routed.issubset({0, 1, 2}) and len(routed) >= 2
 
 
 def test_repartition_colocates_shards(spark):

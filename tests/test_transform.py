@@ -7,7 +7,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from clickhouse_hdfs_loader_spark.clickhouse.writer import serialize_for_load
+from clickhouse_hdfs_loader_spark.config import LoaderConfig
 from clickhouse_hdfs_loader_spark.operators import transform as T
+
+
+def wire_lines(df, fmt="TabSeparated"):
+    """T10 — the loader's serialized wire line per row."""
+    return serialize_for_load(df, df.columns[0],
+                              LoaderConfig(clickhouse_format=fmt))[0]
 
 
 def test_tokenize_trailing_delimiter(spark):
@@ -76,9 +84,9 @@ def test_additional_columns_and_serialize(spark):
     df = spark.createDataFrame([("a", 1)], ["s", "i"])
     out = T.append_additional_columns(df, ("2017-01-07", "9"))
     assert out.columns == ["s", "i", "addcol0", "addcol1"]
-    line = T.serialize_rows(out, "TabSeparated").first()["line"]
+    line = wire_lines(out, "TabSeparated").first()["line"]
     assert line == "a\t1\t2017-01-07\t9"
-    csv = T.serialize_rows(out, "CSV").first()["line"]
+    csv = wire_lines(out, "CSV").first()["line"]
     assert csv == "a,1,2017-01-07,9"
 
 
@@ -103,7 +111,7 @@ def test_serialize_nulls_as_marker(spark):
     # keep the column count stable (wire-format width invariant)
     df = spark.createDataFrame([("a", None, 1), (None, "b", None)],
                                ["s1", "s2", "i"])
-    lines = sorted(r["line"] for r in T.serialize_rows(df).collect())
+    lines = sorted(r["line"] for r in wire_lines(df).collect())
     assert lines == ["\\N\tb\t\\N", "a\t\\N\t1"]
 
 
