@@ -75,19 +75,24 @@ class ClickHouseClient:
         """Cache key — same shape as ClickhouseClientHolder.java:33."""
         return f"{self.user}:{self.password}@{self.host}:{self.http_port}/{self.database}"
 
+    @property
+    def _base_url(self) -> str:
+        """``http://host:port/``, an IPv6 literal host in brackets."""
+        host = f"[{self.host}]" if ":" in self.host else self.host
+        return f"http://{host}:{self.http_port}/"
+
     def _url(self, params: dict[str, str] | None = None) -> str:
         q = {"user": self.user, "database": self.database}
         if self.password:
             q["password"] = self.password
         q.update(params or {})
-        return f"http://{self.host}:{self.http_port}/?" + urllib.parse.urlencode(q)
+        return self._base_url + "?" + urllib.parse.urlencode(q)
 
     def ping(self) -> bool:
         """Replica-alive probe: GET / must return HTTP 200 ('Ok.')
         (AbstractClickhouseLoaderMapper.java:678-699)."""
         try:
-            with urllib.request.urlopen(
-                    f"http://{self.host}:{self.http_port}/", timeout=5) as r:
+            with urllib.request.urlopen(self._base_url, timeout=5) as r:
                 return r.status == 200
         except (urllib.error.URLError, OSError):
             return False
@@ -123,11 +128,15 @@ def get_client(host: str, http_port: int = 8123, user: str = "default",
                password: str = "", database: str = "default") -> ClickHouseClient:
     """D5 — process-wide client cache (ClickhouseClientHolder.java:21-68).
 
-    ``host`` may carry an explicit port (``"h1:8124"``) which overrides
-    ``http_port`` — lets topologies address per-host HTTP endpoints.
+    ``host`` may carry an explicit port (``"h1:8124"``, ``"[::1]:8124"``)
+    which overrides ``http_port`` — lets topologies address per-host HTTP
+    endpoints; a bare IPv6 address (``"::1"``) carries none.
     """
-    if ":" in host:
-        host, port_s = host.rsplit(":", 1)
+    if host.startswith("["):
+        host, _, port_s = host[1:].partition("]")
+        http_port = int(port_s[1:] or http_port)
+    elif host.count(":") == 1:
+        host, port_s = host.split(":")
         http_port = int(port_s)
     c = ClickHouseClient(host, http_port, user, password, database)
     return _CACHE.setdefault(c.key, c)

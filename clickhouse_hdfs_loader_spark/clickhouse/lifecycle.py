@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import logging
 import re
-import threading
 from collections.abc import Sequence
 from dataclasses import dataclass
 from datetime import datetime, timedelta
@@ -185,25 +184,18 @@ class LifecycleManager:
         return sorted(expired)
 
     def expire_daily_tables_task(self, *args, **kwargs) -> list[str]:
-        """The reference runs expiry on a worker thread it starts and
-        immediately joins (ClickhouseHdfsLoader.java:133-139) — so the call
-        is synchronous, but ``OldDailyMergeTask.run`` catches every
-        exception and only logs it (:48-55): an expiry failure must NOT
-        abort the load. This wrapper mirrors both the launch shape and the
-        swallow-and-log contract; it returns [] on failure."""
-        result: list[str] = []
-
-        def run() -> None:
-            try:
-                result.extend(self.expire_daily_tables(*args, **kwargs))
-            except Exception as e:  # OldDailyMergeTask.java:52-55
-                logging.getLogger(__name__).error(
-                    "daily expiry failed (load continues): %s", e)
-
-        worker = threading.Thread(target=run, name="OldDailyMergeTask")
-        worker.start()
-        worker.join()
-        return result
+        """``expire_daily_tables`` that logs a failure instead of raising:
+        ``OldDailyMergeTask.run`` catches every exception and only logs it
+        (OldDailyMergeTask.java:48-55), so an expiry failure must NOT abort
+        the load. The reference runs it on a thread it starts and joins at
+        once (ClickhouseHdfsLoader.java:133-139), i.e. inline, as here.
+        Returns [] on failure."""
+        try:
+            return self.expire_daily_tables(*args, **kwargs)
+        except Exception as e:  # OldDailyMergeTask.java:52-55
+            logging.getLogger(__name__).exception(
+                "daily expiry failed (load continues): %s", e)
+            return []
 
     # -- D4 ------------------------------------------------------------
     def drop_partition(self, database: str, table: str, partition: str,

@@ -79,7 +79,7 @@ class StagedLoadPlan:
     temp_tables: list[tuple[str, str]] = field(default_factory=list)  # (host, temp)
 
 
-def stage_partitions(df: DataFrame, key_col: str, cluster: LifecycleManager,
+def stage_partitions(df: DataFrame, key_col: str | None, cluster: LifecycleManager,
                      config: LoaderConfig, *, create_ddl: str,
                      target_database: str, target_table: str,
                      prefix: str) -> StagedLoadPlan:
@@ -154,7 +154,7 @@ def cleanup(plan: StagedLoadPlan, cluster: LifecycleManager) -> None:
             pass
 
 
-def staged_load(df: DataFrame, key_col: str, cluster: LifecycleManager,
+def staged_load(df: DataFrame, key_col: str | None, cluster: LifecycleManager,
                 config: LoaderConfig, *, create_ddl: str,
                 target_database: str, target_table: str, prefix: str,
                 replicated: bool = False) -> StagedLoadPlan:

@@ -40,6 +40,7 @@ from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..config import LoaderConfig
 from ..operators.sharding import ClusterTopology
@@ -56,17 +57,19 @@ def insert_header(database: str, table: str, fmt: str) -> str:
     return f"INSERT INTO {database}.{table} FORMAT {fmt}"
 
 
-def serialize_for_load(df: DataFrame, key_col: str,
+def serialize_for_load(df: DataFrame, key_col: str | None,
                        config: LoaderConfig) -> tuple[DataFrame, str]:
     """Serialize each row to one wire line: returns the ``(key, line)``
     DataFrame (the sharding key as a string) and the payload prefix — the
     names (and types) rows every batch of a WithNames[AndTypes] format
-    leads with, empty for bare formats."""
+    leads with, empty for bare formats. ``key_col=None`` projects a null
+    key, which ``ClusterTopology.route`` routes by a random UUID (P1)."""
     fmt = config.clickhouse_format
     line = wire_line_col(df, df.columns, wire_separator(fmt),
                          config.replace_char)
     prefix = "".join(l + "\n" for l in format_header_lines(fmt, df, df.columns))
-    return df.select(df[key_col].cast("string").alias("key"),
+    key = F.lit(None) if key_col is None else df[key_col]
+    return df.select(key.cast("string").alias("key"),
                      line.alias("line")), prefix
 
 
@@ -98,7 +101,7 @@ def shard_batches(rows: Iterable[tuple[int, str]], batch_size: int,
             yield shard, len(buf), prefix + "\n".join(buf)
 
 
-def write_direct(df: DataFrame, key_col: str, cluster: LifecycleManager,
+def write_direct(df: DataFrame, key_col: str | None, cluster: LifecycleManager,
                  config: LoaderConfig, *, database: str, table: str,
                  replicated: bool = False) -> dict:
     """Direct-mode load (``--direct true``): route → serialize → buffered

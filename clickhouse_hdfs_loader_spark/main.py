@@ -84,8 +84,8 @@ def run_load(config: LoaderConfig, spark: SparkSession,
         target_table = cluster.create_daily_tables(
             local_ddl, dist.local_database, dist.local_table, config.dt,
             mode=config.mode)
-        # started-and-joined worker thread; expiry failure logs, never
-        # aborts the load (ClickhouseHdfsLoader.java:133-139)
+        # expiry failure logs, never aborts the load
+        # (ClickhouseHdfsLoader.java:133-139)
         cluster.expire_daily_tables_task(
             dist.local_database, dist.local_table, config.dt,
             config.daily_expires, config.daily_expires_process,
@@ -106,13 +106,10 @@ def run_load(config: LoaderConfig, spark: SparkSession,
         target_string_positions=string_positions)
 
     # sharding key: positional index in the TARGET schema → our column name
-    # at the same position (ClickhouseHdfsLoader.java:310-329)
-    key = dist.sharding_key
-    if key is not None:
-        idx = catalog.sharding_key_index_or_none(describe, key)
-        key_col = df.columns[idx] if idx is not None else df.columns[0]
-    else:
-        key_col = df.columns[0]
+    # at the same position (ClickhouseHdfsLoader.java:310-329); no key, or
+    # one that is not a target column (e.g. rand()), routes at random
+    idx = catalog.sharding_key_index_or_none(describe, dist.sharding_key)
+    key_col = df.columns[idx] if idx is not None else None
 
     # step 5+6 — the one cluster action
     prefix = temp_table_prefix(target_table, config.dt or "00000000")

@@ -2426,8 +2426,9 @@ def sequence_match_events(events: DataFrame, steps: list,
     whole operator is the DP's K−1 window passes plus ONE final
     group-by — no backward joins, no re-planned DP subtrees (the first
     cut reconstructed backwards through K−1 joins and re-planned the
-    m_i ladder O(K²) times — 18 scans at K=3, plan-audit-caught; this
-    form audits at 3 scans / 2 exchanges at K=3, see docs/PLANS.md)."""
+    m_i ladder O(K²) times — 18 scans at K=3). The registry query
+    (K=3) is pinned at 1 scan / 1 exchange in
+    tests/test_scale_patterns.py (PLAN_PINS)."""
     base, ms = _timed_matchable_sets(
         events.where(F.col(user_col).isNotNull()), steps, max_gaps_s,
         user_col, ts_col, type_col, carry_chains=True, id_col=id_col)

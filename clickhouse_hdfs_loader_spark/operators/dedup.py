@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_fingerprint, words_array
+from .skew import _spread_to_parallelism
 
 # 64-bit Mersenne prime modulus keeps (a*h+b) mod p well mixed while
 # staying in long range after the bit trims below.
@@ -482,15 +483,11 @@ def embedding_near_dup_pairs(emb: DataFrame, vec_col: str = "embedding",
     ULP caveat as every arrow kernel."""
     from ..functions.vectors import (as_double_array, cosine_pairs_udf,
                                      dot, norm)
-    # the streamed side of the nested-loop join inherits the input split
-    # count — ONE task scores all n²/2 pairs on a single-split input
-    # (the r6 lesson). Round-robin the RAW side to the session's
-    # parallelism (floats cross the shuffle; the cast/norm columns
-    # compute after it — half the bytes, same once-per-row compute):
-    # pair set and per-pair math are unchanged (measured 8× at sf0.1)
-    a_raw = (emb.select(F.col(id_col).alias("id_a"),
-                        F.col(vec_col).alias("_va"))
-             .repartition(emb.sparkSession.sparkContext.defaultParallelism))
+    # spread the streamed side RAW (floats cross the shuffle; the
+    # cast/norm columns compute after it — half the bytes, same
+    # once-per-row compute; measured 8× at sf0.1)
+    a_raw = _spread_to_parallelism(
+        emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")))
     if kernel == "arrow":
         a = a_raw.select("id_a", F.col("_va").alias("v_a"))
         b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _shingle_hashes, minhash_band_index
+from .skew import _spread_to_parallelism
 
 
 def fuzzy_join(left: DataFrame, right: DataFrame, text_col: str = "text",
@@ -159,14 +160,9 @@ def fuzzy_join_damerau(left: DataFrame, right: DataFrame,
                          f"non-negative int, got {max_edit!r}")
     pairs = fuzzy_join(left, right, text_col, left_id, right_id,
                        threshold_milli, **kwargs)
-    # round-robin the candidate rows to the session's parallelism
-    # before the verify stage (r16; the dedup pair-stage pattern): the
-    # candidate table is tiny in BYTES, so AQE coalesces its exchange
-    # to one partition and the quadratic DP UDF downstream would run
-    # single-task; the candidates are id/count rows, so redistributing
-    # them costs nothing next to the DP work they fan out
-    sc = pairs.sparkSession.sparkContext
-    pairs = pairs.repartition(sc.defaultParallelism)
+    # the candidates are id/count rows: spreading them costs nothing
+    # next to the quadratic DP verify they fan out
+    pairs = _spread_to_parallelism(pairs)
     lcol, rcol = pairs.columns[0], pairs.columns[1]
     lt = left.select(F.col(left_id).alias(lcol),
                      F.col(text_col).alias("_lt"))

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import (as_double_array, cosine, dot, norm,
                                  random_hyperplane_bits)
+from .skew import _spread_to_parallelism
 
 
 def _cosine_precomputed(va: str, vb: str, nrm_a: str, nrm_b: str):
@@ -467,17 +468,11 @@ def lsh_near_dup_pairs(emb: DataFrame, threshold: float = 0.95, dim: int = 64,
                 .repartition("band", "bh"))
     a = bucketed.select(F.col("id").alias("id_a"), "band", "bh")
     b = bucketed.select(F.col("id").alias("id_b"), "band", "bh")
-    cand = (a.join(b, ["band", "bh"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct()
-            # distribute the verify stage (r16, the fuzzy-join verify
-            # pattern): candidate rows are 16 bytes, so AQE coalesces
-            # the distinct's exchange by BYTES — blind to the per-row
-            # cosine cost downstream (interpreted 64-element fold on
-            # the expr kernel). Width derives from the session, not a
-            # local constant; the extra exchange moves only id pairs
-            .repartition(emb.sparkSession.sparkContext
-                         .defaultParallelism))
+    # the cosine verify (an interpreted 64-element fold on the expr
+    # kernel) runs per candidate; the extra exchange moves only id pairs
+    cand = _spread_to_parallelism(a.join(b, ["band", "bh"])
+                                  .where(F.col("id_a") < F.col("id_b"))
+                                  .select("id_a", "id_b").distinct())
     if pair_cos is None:
         scorer = _cosine_precomputed("v_a", "v_b", "nrm_a", "nrm_b")
         va = _vec_side(emb, id_col, vec_col, "id_a", "v_a", "nrm_a")

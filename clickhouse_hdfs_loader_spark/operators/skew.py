@@ -10,12 +10,27 @@ joins; these helpers cover the two cases AQE does not:
 - ``salted_broadcast_left`` — hot join keys against a small-but-not-tiny
   dim: replicate the dim N× with salt, salt the fact side randomly; every
   fact row still matches exactly one dim copy.
+
+``_spread_to_parallelism`` covers the opposite case: too few tasks for a
+table that is small in bytes but costly per row.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _spread_to_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to the session's default parallelism.
+
+    For a table that is small in bytes but feeds costly per-row work (a
+    Python UDF, a quadratic kernel, the streamed side of a nested-loop
+    join): left alone it keeps its input split count, or AQE coalesces
+    its exchange by bytes, blind to the per-row CPU downstream, so that
+    work runs on one or a few tasks. The width derives from the session,
+    not a constant, so it follows the core count."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def salted_aggregation(df: DataFrame, keys: list[str], num_salts: int = 16,

@@ -38,6 +38,7 @@ from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..operators import transform as T
 from ..operators.sharding import ClusterTopology, ShardNode, assign_shard
+from ..operators.skew import _spread_to_parallelism
 from ..sources.tables import read_table
 
 
@@ -1688,12 +1689,9 @@ def loader_throughput(spark, sf_dir):
     benches the full load path at fixture scale.
 
     The sf0.1 fixture is ONE 40 MB parquet split; a 100 TB load arrives in
-    thousands of splits with the routing UDF running per split. The
-    repartition below restores that per-core parallelism locally so the
-    bench measures the hash path, not a single-worker artifact; the count
-    derives from the session's defaultParallelism (r15) so the driver's
-    lower-core-count scaling bench gets matching task counts instead of a
-    constant tuned for local[32].
+    thousands of splits with the routing UDF running per split, so the
+    input is spread to the session's parallelism first: the bench
+    measures the hash path, not a single-worker artifact.
 
     Oracle: ``rows`` and ``bytes_out`` are COMPUTED by DuckDB from the
     lineitem table (the serialized line re-modeled column-by-column in
@@ -1704,9 +1702,7 @@ def loader_throughput(spark, sf_dir):
     (pyarrow column read → guava_shard_codes, itself pinned to Guava
     goldens in tests/test_murmur.py → inline cumulative-weight walk) and
     asserts it equals the 44219 in this oracle."""
-    from ..operators.sharding import ClusterTopology, ShardNode, assign_shard
-    li = (_t(spark, sf_dir, "lineitem")
-          .repartition(spark.sparkContext.defaultParallelism))
+    li = _spread_to_parallelism(_t(spark, sf_dir, "lineitem"))
     out = T.transform_pipeline(
         li, exclude=(1, 2), input_path="/data/lineitem/dt=2017-01-07",
         additional=("batch9",), target_width=11)
@@ -1740,9 +1736,7 @@ def loader_throughput_jvm(spark, sf_dir):
     """Same load path with parity=False routing (JVM xxhash64) — the
     all-codegen variant; the delta vs loader_throughput is the cost of
     Guava hash parity."""
-    from ..operators.sharding import ClusterTopology, ShardNode, assign_shard
-    li = (_t(spark, sf_dir, "lineitem")
-          .repartition(spark.sparkContext.defaultParallelism))
+    li = _spread_to_parallelism(_t(spark, sf_dir, "lineitem"))
     out = T.transform_pipeline(
         li, exclude=(1, 2), input_path="/data/lineitem/dt=2017-01-07",
         additional=("batch9",), target_width=11)

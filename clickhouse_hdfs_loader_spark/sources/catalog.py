@@ -49,7 +49,7 @@ def fetch_describe(cli: ClickHouseClient, database: str, table: str) -> list[tup
 
 
 def sharding_key_index_or_none(describe_rows: list[tuple[str, str]],
-                               key: str) -> int | None:
+                               key: str | None) -> int | None:
     """Positional index of the sharding key in the target schema — the
     DESCRIBE walk of ClickhouseHdfsLoader.java:310-329 — or None when
     absent; the reference then falls back to random (UUID) routing

@@ -18,7 +18,7 @@ from ..clickhouse.lifecycle import LifecycleManager
 from ..config import LoaderConfig
 
 
-def stream_to_clickhouse(stream: DataFrame, key_col: str,
+def stream_to_clickhouse(stream: DataFrame, key_col: str | None,
                          cluster: LifecycleManager, config: LoaderConfig, *,
                          database: str, table: str, replicated: bool = False,
                          checkpoint_dir: str | None = None,

@@ -68,6 +68,21 @@ def test_client_roundtrip_and_ping(mocks):
     assert cli.query_rows("SELECT 1") == [["1"]]
 
 
+@pytest.mark.parametrize("address,host,port,base_url", [
+    ("::1", "::1", 8123, "http://[::1]:8123/"),
+    ("[::1]:8124", "::1", 8124, "http://[::1]:8124/"),
+    ("fe80::1", "fe80::1", 8123, "http://[fe80::1]:8123/"),
+    ("h1:8124", "h1", 8124, "http://h1:8124/"),
+])
+def test_client_host_port_split_keeps_ipv6(address, host, port, base_url):
+    """``system.clusters`` reports localhost as ``::1`` on IPv6 hosts: a
+    ``:port`` suffix is split only from ``name:port`` or ``[v6]:port``,
+    and the URL brackets an IPv6 literal."""
+    cli = get_client(address, 8123)
+    assert (cli.host, cli.http_port) == (host, port)
+    assert cli._url().startswith(base_url + "?")
+
+
 def test_retry_ladder_recovers(mocks, caplog):
     m = mocks[0]
     m.fail_first = 2
@@ -717,11 +732,9 @@ def test_format_header_lines_bare_formats_empty(spark):
         ["k\tv"]
 
 
-def test_expire_daily_task_swallows_failure_and_runs_on_thread(mocks):
-    """Launch-shape parity (ClickhouseHdfsLoader.java:133-139 +
-    OldDailyMergeTask.java:48-55): expiry runs on a started-then-joined
-    worker thread, and any exception inside it is logged, never raised —
-    a broken expiry must not abort the load."""
+def test_expire_daily_task_swallows_failure(mocks):
+    """OldDailyMergeTask.java:48-55: any exception inside the expiry task
+    is logged, never raised — a broken expiry must not abort the load."""
     m = mocks[0]
     lm = LifecycleManager(topo_of([m]), max_tries=1, backoff_scale=0.001)
     m.fail_first = 99  # every statement errors -> expire_daily_tables raises
@@ -729,7 +742,7 @@ def test_expire_daily_task_swallows_failure_and_runs_on_thread(mocks):
     # direct call still raises (the task wrapper is the swallow point)
     with pytest.raises(ClickHouseError):
         lm.expire_daily_tables("db", "t", "2017-01-07")
-    # happy path returns the expired names through the thread
+    # happy path returns the expired names
     m.fail_first = 0
     m.canned["system.tables"] = "t_20170101\n"
     assert lm.expire_daily_tables_task(

@@ -1783,6 +1783,11 @@ def test_event_transitions_oracle_and_tiebreak(spark, sf_dir):
     assert rows == {("a", "b"): (1, 1000), ("b", "c"): (1, 1000)}
 
 
+def _ilog2_milli_truth(x: int) -> int:
+    e = x.bit_length() - 1
+    return e * 1000 + ((x - (1 << e)) * 1000) // (1 << e)
+
+
 def test_ilog2_milli_exponent_edges(spark):
     """with_ilog2_milli's r16 log2+shift-correction exponent equals the
     bit-length truth on every power-of-two boundary of the documented
@@ -1800,13 +1805,8 @@ def test_ilog2_milli_exponent_edges(spark):
     df = spark.createDataFrame([(x,) for x in xs], "x long")
     got = {r["x"]: r["lg"]
            for r in with_ilog2_milli(df, "x", "lg").collect()}
-
-    def truth(x):
-        e = x.bit_length() - 1
-        return e * 1000 + ((x - (1 << e)) * 1000) // (1 << e)
-
     for x in xs:
-        assert got[x] == truth(x), (x, got[x], truth(x))
+        assert got[x] == _ilog2_milli_truth(x), (x, got[x])
 
     degen = spark.createDataFrame([(0,), (None,)], "x long")
     vals = {r["x"]: r["lg"]
@@ -1818,6 +1818,27 @@ def test_ilog2_milli_exponent_edges(spark):
     # INT64_MIN (review-caught r16)
     top = spark.createDataFrame([(1 << 62,)], "x long")
     assert with_ilog2_milli(top, "x", "lg").collect()[0]["lg"] == 62000
+
+
+def test_ilog2_milli_interior_sweep(spark):
+    """with_ilog2_milli equals the bit-length truth on a seeded sample of
+    the domain's interior: 2 000 values of 1 <= x < 2^54, log-uniform
+    over octaves (exponent uniform in 0..53, mantissa bits uniform), so
+    every bit of x is exercised, not only the power-of-two edges."""
+    import random
+
+    from clickhouse_hdfs_loader_spark.operators.retrieval import (
+        with_ilog2_milli)
+
+    rng = random.Random(54)
+    exps = [rng.randrange(54) for _ in range(2000)]
+    xs = [rng.randrange(1 << e, 2 << e) for e in exps]
+    df = spark.createDataFrame([(x,) for x in xs], "x long")
+    rows = with_ilog2_milli(df, "x", "lg").collect()
+    assert sorted(r["x"] for r in rows) == sorted(xs)
+    bad = [(r["x"], r["lg"]) for r in rows
+           if r["lg"] != _ilog2_milli_truth(r["x"])]
+    assert not bad, bad[:10]
 
 
 def test_bm25_topk_oracle_and_ranking(spark, sf_dir):

@@ -83,6 +83,26 @@ def test_quickstart_shaped_direct_load(spark, tmp_path, cluster):
     assert all(n > 0 for n in per_shard)
 
 
+def test_sharding_key_outside_target_routes_at_random(spark, tmp_path, cluster):
+    """P1: a sharding expression naming no target column (``rand()``)
+    routes each row by a random UUID (AbstractClickhouseLoaderMapper.java:
+    278-280), never by the first column — here every row shares ``plat``,
+    so routing by it would put all 64 rows on one shard."""
+    entry = cluster[0]
+    entry.canned["SHOW CREATE TABLE test.t1"] = TARGET_DDL.replace(
+        "cityHash64(h_did)", "rand()")
+    lines = [f"5|junk|did_{i}|junk2|{i}" for i in range(64)]
+    cfg = parse_args([
+        "--connect", f"jdbc:clickhouse://{entry.host}:{entry.port}/test",
+        "--table", "t1", "--export-dir", _write_input(tmp_path, lines),
+        "--exclude-fields", "1,3", "--direct", "true", "--dt", "2017-01-07",
+    ])
+    stats = run_load(cfg, spark, backoff_scale=0.001)
+    assert stats == {"success_records": 64, "failed_records": 0}
+    per_shard = [sum(len(i.splitlines()) - 1 for i in s.inserts()) for s in cluster]
+    assert sum(per_shard) == 64 and all(n > 0 for n in per_shard), per_shard
+
+
 def test_quickstart_shaped_staged_load(spark, tmp_path, cluster):
     lines = [f"{i % 7}|junk|did_{i}|junk2|{i}" for i in range(30)]
     export_dir = _write_input(tmp_path, lines)

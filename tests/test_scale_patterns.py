@@ -3,6 +3,9 @@ hive-partition pruning, stateful streaming sessionization vs batch."""
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -72,6 +75,124 @@ def _plan_of(spark, sf_dir, name: str) -> str:
     from clickhouse_hdfs_loader_spark.plans.queries import REGISTRY
     df = REGISTRY[name].fn(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+PINNED_NODES = ("Scan", "Exchange", "BroadcastExchange", "ArrowEvalPython",
+                "BatchEvalPython", "MapInPandas", "MapInArrow",
+                "FlatMapGroupsInPandas", "SortMergeJoin",
+                "BroadcastNestedLoopJoin", "CartesianProduct",
+                "WindowGroupLimit")
+_PLAN_NODE = re.compile(r"[\s:+-]*(\w+).*\(\d+\)")
+
+
+def plan_node_counts(plan_text: str) -> dict[str, int]:
+    """Count the ``PINNED_NODES`` of a ``formatted`` plan by name: the first
+    word of each ``Name … (id)`` line of the operator tree, which ends at
+    the first blank line. A name that is absent counts 0; ``Exchange`` and
+    ``BroadcastExchange`` are separate names."""
+    tree = plan_text.split("\n\n", 1)[0]
+    names = Counter(m.group(1) for line in tree.splitlines()
+                    if (m := _PLAN_NODE.fullmatch(line)))
+    return {n: names[n] for n in PINNED_NODES}
+
+
+# Static plan shape at the test fixture, {query: {node: count}}; absent
+# nodes are 0. Scale does not move these counts (they match the sf0.1
+# plans). A pin guards the operator layout — scans, shuffles, Python
+# boundaries, join strategies, rank pushdown — and cannot see a change
+# inside a kernel or an expression. A deliberate plan change re-pins its
+# entry from the failure message.
+PLAN_PINS = {
+    "ann_ivf_topk": {"Scan": 2, "Exchange": 1, "BroadcastExchange": 1,
+                     "WindowGroupLimit": 2},
+    "ann_ivf_trained_topk": {"Scan": 2, "Exchange": 1, "BroadcastExchange": 1,
+                             "WindowGroupLimit": 2},
+    "ann_lsh_near_dup": {"Scan": 4, "Exchange": 4, "BroadcastExchange": 3},
+    "ann_lsh_topk": {"Scan": 4, "Exchange": 2, "BroadcastExchange": 3,
+                     "WindowGroupLimit": 2},
+    "asof_join_events": {"Scan": 2, "Exchange": 1},
+    "bigram_likelihood": {"Scan": 4, "Exchange": 4, "BroadcastExchange": 3,
+                          "ArrowEvalPython": 3},
+    "bm25_topk": {"Scan": 6, "Exchange": 10, "BroadcastExchange": 5,
+                  "BroadcastNestedLoopJoin": 2, "WindowGroupLimit": 2},
+    "contamination_check": {"Scan": 2, "Exchange": 2, "BroadcastExchange": 1,
+                            "ArrowEvalPython": 2},
+    "corpus_prep_pipeline": {"Scan": 1, "Exchange": 2},
+    "dedup_embedding_cosine": {"Scan": 2, "Exchange": 1,
+                               "BroadcastExchange": 1,
+                               "BroadcastNestedLoopJoin": 1},
+    "dedup_exact": {"Scan": 1, "Exchange": 1},
+    "dedup_levenshtein": {"Scan": 17, "Exchange": 32,
+                          "BroadcastExchange": 14, "ArrowEvalPython": 15},
+    "dedup_minhash_lsh": {"Scan": 1, "Exchange": 3, "ArrowEvalPython": 1},
+    "dedup_ngram_jaccard": {"Scan": 3, "Exchange": 6, "BroadcastExchange": 2,
+                            "ArrowEvalPython": 3},
+    "domain_mixture_sample": {"Scan": 5, "Exchange": 3,
+                              "BroadcastExchange": 4,
+                              "BroadcastNestedLoopJoin": 1},
+    "embedding_quantize": {"Scan": 1},
+    "events_hourly_windows": {"Scan": 1, "Exchange": 1},
+    "funnel": {"Scan": 1, "Exchange": 2},
+    "funnel_conversion_window": {"Scan": 1, "Exchange": 2},
+    "fuzzy_join_damerau": {"Scan": 6, "Exchange": 8, "BroadcastExchange": 5,
+                           "ArrowEvalPython": 6},
+    "fuzzy_join_exact": {"Scan": 4, "Exchange": 7, "BroadcastExchange": 3,
+                         "ArrowEvalPython": 4},
+    "group_array_sorted": {"Scan": 1, "Exchange": 1, "WindowGroupLimit": 2},
+    "loader_throughput": {"Scan": 1, "Exchange": 2, "ArrowEvalPython": 1},
+    "loader_throughput_jvm": {"Scan": 1, "Exchange": 2},
+    "ngram_containment": {"Scan": 3, "Exchange": 6, "BroadcastExchange": 2,
+                          "ArrowEvalPython": 3},
+    "pagerank_summary": {"Scan": 1, "Exchange": 1},
+    "pmi_collocations": {"Scan": 4, "Exchange": 5, "BroadcastExchange": 3,
+                         "ArrowEvalPython": 1, "BroadcastNestedLoopJoin": 1},
+    "profile_approx_contract": {"Scan": 4, "Exchange": 6,
+                                "BroadcastExchange": 2,
+                                "BroadcastNestedLoopJoin": 2},
+    "q10_returned_items": {"Scan": 4, "Exchange": 1, "BroadcastExchange": 3},
+    "q1_pricing_summary": {"Scan": 1, "Exchange": 1},
+    "q21_waiting_supplier": {"Scan": 3, "Exchange": 3, "BroadcastExchange": 2},
+    "q3_shipping_priority": {"Scan": 3, "Exchange": 1, "BroadcastExchange": 2},
+    "q5_region_revenue": {"Scan": 6, "Exchange": 1, "BroadcastExchange": 5},
+    "q7_volume_shipping": {"Scan": 6, "Exchange": 1, "BroadcastExchange": 5},
+    "ranking_metrics": {"Scan": 1, "Exchange": 1},
+    "semantic_dedup": {"Scan": 2, "Exchange": 3, "BroadcastExchange": 1},
+    "sequence_count": {"Scan": 1, "Exchange": 2},
+    "sequence_match": {"Scan": 2, "Exchange": 2, "BroadcastExchange": 1},
+    "sequence_match_events": {"Scan": 1, "Exchange": 1},
+    "sequence_match_multi": {"Scan": 2, "Exchange": 2, "BroadcastExchange": 1},
+    "sequence_match_timed": {"Scan": 2, "Exchange": 2, "BroadcastExchange": 1},
+    "sequence_next_node": {"Scan": 2, "Exchange": 3, "BroadcastExchange": 1,
+                           "WindowGroupLimit": 2},
+    "sessionize": {"Scan": 1, "Exchange": 1},
+    "similarity_topk": {"Scan": 2, "Exchange": 1, "BroadcastExchange": 1,
+                        "BroadcastNestedLoopJoin": 1, "WindowGroupLimit": 2},
+    "similarity_topk_blas": {"Scan": 1, "Exchange": 1, "MapInPandas": 1,
+                             "WindowGroupLimit": 2},
+    "text_token_counts": {"Scan": 1},
+    "tf_idf_topk": {"Scan": 3, "Exchange": 6, "BroadcastExchange": 2,
+                    "BroadcastNestedLoopJoin": 1, "WindowGroupLimit": 2},
+    "transform_chain": {"Scan": 1, "Exchange": 1},
+    "triangle_count": {"Scan": 36, "Exchange": 74, "BroadcastExchange": 20,
+                       "SortMergeJoin": 8, "BroadcastNestedLoopJoin": 2},
+    "window_topk_per_customer": {"Scan": 1, "Exchange": 1,
+                                 "WindowGroupLimit": 2},
+    "winnow_fingerprint": {"Scan": 1, "ArrowEvalPython": 1},
+}
+
+
+@pytest.mark.parametrize("name", sorted(PLAN_PINS))
+def test_plan_node_counts(spark, sf_dir, name):
+    """The static plan's pinned node counts equal ``PLAN_PINS[name]``."""
+    from clickhouse_hdfs_loader_spark.plans.queries import REGISTRY
+    assert name in REGISTRY and set(PLAN_PINS[name]) <= set(PINNED_NODES)
+    df = REGISTRY[name].fn(spark, sf_dir)
+    counts = plan_node_counts(df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"))
+    want = {n: PLAN_PINS[name].get(n, 0) for n in PINNED_NODES}
+    now = {n: c for n, c in counts.items() if c}
+    assert counts == want, (f"{name} plan shape moved; if deliberate, "
+                            f"re-pin it as\n    {name!r}: {now!r},")
 
 
 def test_not_in_plans_as_broadcast_anti_join(spark, sf_dir):
