@@ -231,6 +231,16 @@ def brier_score(df: DataFrame, group_col: str, prob_col: str,
                     F.expr("_sq div n").alias("brier_e6")))
 
 
+def events_pred_label(events: DataFrame) -> DataFrame:
+    """The graded classification input over the events table: pred =
+    event_id parity, label = user parity, NULL user/event_id rows out.
+    One copy for the registry wrapper and the stream twin."""
+    return (events.where(F.col("user_id").isNotNull()
+                         & F.col("event_id").isNotNull())
+            .withColumn("pred", F.pmod(F.col("event_id"), F.lit(2)))
+            .withColumn("label", F.pmod(F.col("user_id"), F.lit(2))))
+
+
 def clsrep_update(state: "DataFrame | None", batch: DataFrame,
                   group_col: str = "event_type",
                   pred_col: str = "pred",
@@ -567,6 +577,20 @@ def _mi_report(joined: DataFrame, group_col: str) -> DataFrame:
                 " div least(hx_n_milli, hy_n_milli) END"))
             .select(F.col("_g").alias(group_col), "n", "hx_n_milli",
                     "hy_n_milli", "mi_n_milli", "nmi_milli"))
+
+
+def events_xy_bins(events: DataFrame) -> DataFrame:
+    """The contingency grading input over the events table: value mod-7
+    bucket x user mod-5 class, NULL users and non-finite values out
+    (an Inf would saturate floor().cast(long) Spark-side while DuckDB
+    drops the row). One copy for the registry wrappers and the stream
+    twin."""
+    return (events.where(F.col("user_id").isNotNull()
+                         & _quantizable_col("value"))
+            .withColumn("xbin",
+                        F.pmod(F.floor(F.col("value")).cast("long"),
+                               F.lit(7)))
+            .withColumn("ybin", F.pmod(F.col("user_id"), F.lit(5))))
 
 
 def mi_update(state: "DataFrame | None", batch: DataFrame,
@@ -954,6 +978,14 @@ def rrf_fuse(rankings: DataFrame, query_col: str = "query_id",
         F.col("rrf_micro").desc(), F.col(doc_col).asc())
     return (per_doc.withColumn("fused_rank", F.row_number().over(w))
             .where(F.col("fused_rank") <= int(top_n)))
+
+
+def events_user_sides(events: DataFrame) -> DataFrame:
+    """The graded two-sample input over the events table: side = user
+    parity, NULL users out. One copy for the registry wrappers and the
+    stream twin."""
+    return (events.where(F.col("user_id").isNotNull())
+            .withColumn("side", F.pmod(F.col("user_id"), F.lit(2))))
 
 
 def ttest_update(state: "DataFrame | None", batch: DataFrame,
@@ -1882,6 +1914,18 @@ def two_proportion_z(df: DataFrame, group_col: str, side_col: str,
         prop_update(None, df, group_col, side_col, flag_col,
                     op="two_proportion_z"),
         group_col)
+
+
+def events_conversion_sides(events: DataFrame) -> DataFrame:
+    """The graded conversion input over the events table: side = user
+    parity, flag = event_id parity, NULL user/event_id/group rows out
+    (the oracle's WHERE). One copy for the registry wrapper and the
+    stream twin — a second copy once lost the NULL-group filter."""
+    return (events.where(F.col("user_id").isNotNull()
+                         & F.col("event_id").isNotNull()
+                         & F.col("event_type").isNotNull())
+            .withColumn("side", F.pmod(F.col("user_id"), F.lit(2)))
+            .withColumn("flag", F.pmod(F.col("event_id"), F.lit(2))))
 
 
 def prop_update(state: "DataFrame | None", batch: DataFrame,

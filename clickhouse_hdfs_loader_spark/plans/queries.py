@@ -5201,9 +5201,8 @@ _MOMENTS_CTE = f"""
 
 def _sided_events(spark, sf_dir):
     """The batch twins' side derivation: user parity, NULL users out."""
-    return (_t(spark, sf_dir, "events")
-            .where(F.col("user_id").isNotNull())
-            .withColumn("side", F.pmod(F.col("user_id"), F.lit(2))))
+    from ..operators.stats import events_user_sides
+    return events_user_sides(_t(spark, sf_dir, "events"))
 
 
 # pmod-safe category derivations shared by the whole contingency-table
@@ -5222,18 +5221,9 @@ _XY_B_CTE = f"""
 
 
 def _xy_binned_events(spark, sf_dir):
-    """The contingency grading input: value mod-7 bucket x user mod-5
-    class, NULL users and non-finite values out (mirrored in
-    ``_XY_B_CTE``; an Inf would saturate floor().cast(long) Spark-side
-    while DuckDB drops the row — the r11 review catch)."""
-    from ..operators.analytics import _quantizable_col
-    return (_t(spark, sf_dir, "events")
-            .where(F.col("user_id").isNotNull()
-                   & _quantizable_col("value"))
-            .withColumn("xbin",
-                        F.pmod(F.floor(F.col("value")).cast("long"),
-                               F.lit(7)))
-            .withColumn("ybin", F.pmod(F.col("user_id"), F.lit(5))))
+    """The contingency grading input (mirrored in ``_XY_B_CTE``)."""
+    from ..operators.stats import events_xy_bins
+    return events_xy_bins(_t(spark, sf_dir, "events"))
 
 
 @query("group_array_sorted", oracle="""
@@ -7042,9 +7032,8 @@ def heavy_hitters_decayed_q(spark, sf_dir):
 
 
 # --- r14 promotions: the eleven r13-built operators (VERDICT r13 item
-# 1). SQL moved verbatim from the in-test oracles named in the r14
-# rotation comment; the only edits are the both-sides drift hardenings
-# noted per entry.
+# 1). SQL moved verbatim from their in-test oracles; the only edits
+# are the both-sides drift hardenings noted per entry.
 
 @query("quantile_timing_weighted", oracle=f"""
     WITH v AS (SELECT event_type AS g,
@@ -7360,14 +7349,10 @@ def two_proportion_z_q(spark, sf_dir):
     verbatim from the r13 in-test oracle
     (tests/test_stats_operators.py).
     operators/stats.py:two_proportion_z."""
+    from ..operators.stats import events_conversion_sides
     from ..operators.stats import two_proportion_z as _tpz
-    ev = (_t(spark, sf_dir, "events")
-          .where(F.col("user_id").isNotNull()
-                 & F.col("event_id").isNotNull()
-                 & F.col("event_type").isNotNull())
-          .withColumn("side", F.pmod(F.col("user_id"), F.lit(2)))
-          .withColumn("flag", F.pmod(F.col("event_id"), F.lit(2))))
-    return _tpz(ev, "event_type", "side", "flag")
+    return _tpz(events_conversion_sides(_t(spark, sf_dir, "events")),
+                "event_type", "side", "flag")
 
 
 @query("stream_two_proportion", oracle=_PROP_Z_ORACLE)
@@ -7467,10 +7452,9 @@ def feature_hashing_summary_q(spark, sf_dir):
 
 
 # --- r15 promotions: the eight r14-built operators (VERDICT r14 item
-# 2). SQL moved verbatim from the in-test oracles named in the r15
-# rotation comment; the only edits are the both-sides drift hardenings
-# noted per entry (the ranking_metrics distinctness guard — ADVICE
-# r14).
+# 2). SQL moved verbatim from their in-test oracles; the only edits
+# are the both-sides drift hardenings noted per entry (the
+# ranking_metrics distinctness guard — ADVICE r14).
 
 @query("cohens_d", oracle=f"""{_MOMENTS_CTE}
     SELECT event_type, n1, n2, sum1, sum2, sumsq1, sumsq2,
@@ -7751,9 +7735,9 @@ def byte_jaccard_pairs_q(spark, sf_dir):
 
 
 # --- r16 promotions: the r15-built operators, SQL verbatim from their
-# in-test DuckDB oracles (named in the rotation comment; the r12/r14
-# promotion recipe — re-run every string FROM THE REGISTRY after the
-# move, never trust the pre-move test copy).
+# in-test DuckDB oracles (the r12/r14 promotion recipe — re-run every
+# string FROM THE REGISTRY after the move, never trust the pre-move test
+# copy).
 
 @query("roc_auc", oracle=f"""
     WITH b AS (SELECT event_type,
@@ -7860,12 +7844,9 @@ def classification_report_q(spark, sf_dir):
     (tests/test_stats_operators.py). operators/stats.py:
     classification_report."""
     from ..operators.stats import classification_report as _cr
-    ev = (_t(spark, sf_dir, "events")
-          .where(F.col("user_id").isNotNull()
-                 & F.col("event_id").isNotNull())
-          .withColumn("pred", F.pmod(F.col("event_id"), F.lit(2)))
-          .withColumn("label", F.pmod(F.col("user_id"), F.lit(2))))
-    return _cr(ev, "event_type", "pred", "label")
+    from ..operators.stats import events_pred_label
+    return _cr(events_pred_label(_t(spark, sf_dir, "events")),
+               "event_type", "pred", "label")
 
 
 @query("stream_classification_report", oracle=_CLSREP_ORACLE)
@@ -8223,234 +8204,6 @@ def holt_summary_q(spark, sf_dir):
 # by tests/test_oracle_parity.py and the verify harness.
 # ---------------------------------------------------------------------------
 
-# r11 rotation (r10 verdict items 1-3, executed as scheduled): the
-# §2.A/§2.B reference core and the loader end-to-end stay pinned.
-# 15 slots are first-grades — the whole late-r10 stats family
-# (group_array_sorted, arg_min_max_by_group, mann_whitney_u,
-# welch_ttest, student_ttest, ks_test, theils_u, cramers_v(+the
-# contingency coefficient riding along), skew_kurt, map_aggregate,
-# rrf_fuse, rank_corr, the stream_ab_test foreachBatch twin graded
-# against the combined welch+student oracle) plus TWO formerly
-# replay-only operators promoted via the golden ladder (ema_summary:
-# floor(ema·1e6) is stable because the fold is bitwise-replayable;
-# lttb_summary: the pick fold is same-order IEEE, selections pinned by
-# the Fraction replay) — SQL moved verbatim from
-# tests/test_stats_operators.py. 3 slots RE-grade queries whose graded
-# surface changed this round: minmax_normalize (the r10 never-green,
-# re-projected to scalar rows), dimension_stats (isfinite element
-# mirror), covariance_stats (duplicate-vec_id oracle guard). The
-# remaining 15 slots re-confirm the r10-displaced r9 batch
-# (multimodal_header_decode, regexp_extract_groups,
-# case_when_bucketing, array_ops, q2/q4/q6, set_intersect/set_except,
-# q8/q9/q11) and start the r6-graded TPC-H backlog (q14).
-#
-# Future-window schedule (fold 3-6 re-confirmations per round; new
-# registrations ALWAYS take same-round slots):
-#   r12: promote the late-r11 odds-and-ends aggregates
-#        (group_bit_aggregate and/or/xor, avg_weighted, pearson_corr,
-#        mean_z_test, anova_f, cramers_v_bias_corrected,
-#        categorical_iv — in-test DuckDB oracles at
-#        tests/test_stats_operators.py, finishes already shared:
-#        AVG_WEIGHTED_SQL / RANK_CORR_SQL / mean_z_sql() /
-#        ANOVA_F_SQL / CRAMERS_V_BC_SQL; categorical_iv is fully
-#        integer, no float finish) and the post-endgame r11 batch
-#        (mutual_information — theils_u's shared rollup, integer;
-#        kendall_tau — KENDALL_TAU_SQL finish, O(n²) pair-join twin;
-#        simpson_diversity / gini_coefficient / mad_outliers —
-#        operators/dispersion.py, fully integer; zipf_fit —
-#        corpus.py, ZIPF_S_SQL/ZIPF_R2_SQL finishes; cohort_overlap —
-#        analytics.py, fully integer; stream_mutual_information —
-#        foreachBatch twin on the mi_update cell-count monoid, graded
-#        against the mutual_information oracle like stream_entropy;
-#        pmi_collocations — corpus.py, milli-log2 integer with a
-#        TakeOrderedAndProject top-k (oracle at
-#        tests/test_llm_operators.py); histogram_equi_depth /
-#        cusum_changepoint — analytics.py, rank-formula buckets and
-#        n-scaled integer CUSUM, both single-scan;
-#        group_array_intersect — stats.py, scalar-row output;
-#        benford_deviation — dispersion.py, BENFORD_P_E6 shared
-#        literals; trimmed_mean / robust_scale / psi_drift —
-#        dispersion.py, rank-exact / smoothed milli-log2;
-#        stream_exact_quantiles — foreachBatch twin on the
-#        quantile_update count monoid (graded like stream_entropy);
-#        mann_kendall_trend — stats.py thin wrapper over kendall_tau
-#        (time as x; kendall's pair-join oracle shape applies);
-#        corr_matrix — features.py over the covariance gemm,
-#        CORR_MATRIX_SQL verbatim finish (oracle at
-#        tests/test_whitening.py); runs_test — analytics.py,
-#        RUNS_Z_SQL verbatim finish;
-#        other oracles at tests/test_stats_operators.py +
-#        tests/test_dispersion_operators.py +
-#        tests/test_interval_combinators.py; jaro_winkler_e6_udf —
-#        functions/text.py, textbook-pinned exact e6 (pair queries
-#        would grade via a fuzzy_join-style projection);
-#        feature_hashing —
-#        features.py, XXH64-golden-pinned (grade rows-only or via a
-#        pinned-literal checksum golden); ols_fit / isotonic_fit /
-#        kaplan_meier / histogram_adaptive stay replay-pinned by
-#        design — LAPACK-solve ulps / non-SQL PAVA / non-SQL truncated
-#        product fold / non-SQL greedy merge, the pca_whiten rationale
-#        — with the bitwise/Fraction/stepwise replays at
-#        tests/test_whitening.py + tests/test_dispersion_operators.py);
-#        re-confirm the rest of the r6-graded TPC-H (q15-q22), the
-#        r10-displaced re-confirmation remainder (q12_priority_shipping,
-#        quality_expectations, limit_offset, having_filter,
-#        nulls_ordering, pii_scrub, embedding_quantize,
-#        q19_disjunctive_predicates), then second confirmations of the
-#        r10 first-grades (interval/series combinators, entropy,
-#        weighted aggregates, goldens, streaming twins) as slots allow.
-#   r12 EXECUTED (this window): all 27 queue names first-grade — the
-#        odds-and-ends batch (group_bit_aggregate and/or/xor unioned,
-#        avg_weighted, pearson_corr, mean_z_test, anova_f,
-#        cramers_v_bias_corrected, categorical_iv), the association/
-#        dispersion/cohort batch (mutual_information + stream twin,
-#        kendall_tau, mann_kendall_trend, simpson_diversity,
-#        gini_coefficient, mad_outliers, zipf_fit, cohort_overlap,
-#        pmi_collocations, histogram_equi_depth, cusum_changepoint,
-#        group_array_intersect, benford_deviation, trimmed_mean,
-#        robust_scale, psi_drift, stream_exact_quantiles, corr_matrix,
-#        runs_test) — plus 2 of the 4 oldest latest-green queries
-#        (date_arithmetic, json_extract; pivot_status and
-#        window_running_sum yielded their slots to curate_report and
-#        the semantic_dedup re-grade — they lead the r13 staleness
-#        batch; VERDICT r12 finding 1). The replay-pinned four (ols_fit,
-#        isotonic_fit, kaplan_meier, histogram_adaptive) stay out per
-#        the pca_whiten precedent; feature_hashing stays XXH64-golden
-#        in tests (candidate for a pinned-checksum golden later).
-#   r13 EXECUTED (this window): the staleness rotation in full — the
-#        r1 tail (window_running_sum, pivot_status) + the r3-era core
-#        (dedup_exact, dedup_minhash_lsh, dedup_ngram_jaccard,
-#        dedup_simhash, dedup_fingerprint, dedup_embedding_cosine,
-#        similarity_topk, similarity_topk_blas, q1_pricing_summary,
-#        q3_shipping_priority, q5_region_revenue); first-grades for
-#        the three r12 combinators (quantile_timing,
-#        sequence_match_multi with K=3 patterns, heavy_hitters_decayed
-#        with the ADVICE-r12 ref-instant mirror); re-grades for
-#        kendall_tau + mann_kendall_trend (pair CTE gained the
-#        duplicate-event_id guard — changed-surface rule) and
-#        group_array_moving_sum (window gained the NULL-id
-#        ordering-key exclusion — review-caught r13); and 12 of the 15
-#        backlog re-confirmations (q15-q18+q20-q22 TPC-H, q12,
-#        quality_expectations, having_filter, nulls_ordering, q19).
-#        pii_scrub + embedding_quantize + limit_offset (r10, youngest
-#        of the backlog) deferred to r14 — their slots went to the
-#        kendall and moving-sum re-grades.
-#   r14 EXECUTED (this window): the eleven r13-built operators
-#        first-graded (quantile_timing_weighted, sequence_match_timed,
-#        group_array_moving_avg, tukey_outliers, brown_forsythe,
-#        autocorr_lag, series_period_detect, two_proportion_z +
-#        stream_two_proportion against the SAME batch oracle,
-#        seasonal_decompose, feature_hashing_summary golden-sf0.01);
-#        kendall_tau + mann_kendall_trend re-graded (pair-CTE guard
-#        narrowed to per-group uniqueness — ADVICE r13,
-#        changed-surface rule); the deferred backlog trio (pii_scrub,
-#        embedding_quantize, limit_offset); and 15 of the r3-era
-#        staleness 17 (VERDICT r13 corrected the queue: r3 is the
-#        oldest tail, NOT r4) — join_semi, join_anti,
-#        broadcast_join_agg, orderby_topk, window_topk_per_customer,
-#        count_distinct_exact, approx_count_distinct, rollup_agg,
-#        events_hourly_windows, window_rank_functions, stats_agg,
-#        sql_api_q6, asof_join_events, ann_ivf_topk,
-#        dedup_connected_components.
-#   r15 EXECUTED (this window): the two r3-era deferrals graded FIRST
-#        (multimodal_decode, corpus_prep_pipeline — closes the r3 era
-#        entirely); the eight r14-built operators promoted (cohens_d,
-#        linear_trend + stream_linear_trend on the shared batch
-#        oracle, etd_summary golden-sf0.01, sequence_match_events,
-#        ranking_metrics with the ADVICE-r14 per-group id-distinctness
-#        guard, damerau_pairs + byte_jaccard_pairs on DuckDB-NATIVE
-#        twins); the full r4-era staleness 19 rotated (all
-#        pre-verified hash-exact at sf0.1 in r14); and 2
-#        second-confirmations of the r13 first-grade trio
-#        (quantile_timing, sequence_match_multi —
-#        heavy_hitters_decayed defers to r16 and leads its
-#        re-confirmation queue).
-#   r16 EXECUTED as pre-computed (this round): 19 pinned + the 12
-#        promotions below + the q9 exact-cents re-grade + 18 of the
-#        r5-era 19 (events_gap_fill defers to r17). q7_volume_shipping
-#        and q10_returned_items converted to exact cents WITH their
-#        re-grade slots (VERDICT r15 item 9, the q9 recipe — operator
-#        and oracle share _REV_CENTS). r17 queue: the r8-era 24-name
-#        staleness cohort + events_gap_fill + heavy_hitters_decayed's
-#        second confirmation + the r12 second-confirmation batch as
-#        slots allow; convert the remaining round(sum(double)) TPC-H
-#        queries (q1/q3/q5/q8/q11/q15/q20) to exact cents WITH their
-#        own re-grade slots, not en masse.
-#   r16 queue WAS (kept for the audit trail): promote THIS round's new operators (all with
-#        promotion-ready in-test DuckDB oracles at registry standard):
-#        roc_auc (mann_whitney CTE + ROC_AUC_E6_DUCK finish,
-#        tests/test_stats_operators.py), brier_score,
-#        classification_report + stream_classification_report (the
-#        clsrep monoid twin — grades against the SAME batch oracle,
-#        the stream_two_proportion precedent),
-#        rolling_corr (RANK_CORR_SQL over one
-#        trailing frame — same file), vwap_resample (AVG_WEIGHTED_SQL
-#        per (series, hour) — same file), non_negative_derivative +
-#        sequence_match_events_ids (_timed_events_ladder_sql
-#        with_ids=True — tests/test_interval_combinators.py),
-#        triangle_count (id-ordered 3-join twin,
-#        tests/test_components.py), js_divergence (milli-log2 ladder,
-#        tests/test_dispersion_operators.py), fuzzy_join_damerau
-#        (shingle-pair + native damerau twin,
-#        tests/test_llm_operators.py), holt_summary golden
-#        (HOLT_GOLDEN_ORACLE at tests/test_stats_operators.py — tag
-#        golden-sf0.01, move the literals to THIS file on promotion,
-#        the etd_summary single-source lesson);
-#        then rotate the r5-era staleness tail — PRE-COMPUTED at r15
-#        end (latest-green recomputed from CORRECTNESS_r01..r14 with
-#        the r15 window assumed green; re-verify against the actual
-#        CORRECTNESS_r15): EXACTLY 19 names — ann_ivf_trained_topk,
-#        correlated_exists, cube_agg, custdist_two_level_agg,
-#        embedding_label_centroids, events_forward_fill,
-#        events_gap_fill, from_json_struct, grouping_sets,
-#        multimodal_frame_sample, not_in_subquery, pack_token_budget,
-#        q10_returned_items, q7_volume_shipping, scalar_subquery_agg,
-#        streaming_dedup, streaming_static_join, train_val_test_split,
-#        unpivot_doc_metrics. PLUS the q9_product_profit
-#        changed-surface RE-GRADE (late r15: the full-registry sf0.1
-#        sweep caught round(sum(double)) one cent off — engine
-#        summation order crossed a rounding boundary; the oracle and
-#        operator now share the exact-cents _Q9_AMOUNT_CENTS contract,
-#        verified hash-exact at sf0.01 AND sf0.1). 19 pinned + 12
-#        promotions + the re-grade + 18 of the r5-era 19 = EXACTLY 50
-#        — events_gap_fill, heavy_hitters_decayed's second
-#        confirmation, and the r12 batch slide to r17 (the r8-era
-#        24-name cohort is r17's staleness tail).
-#   r15 PLANNED (kept for the audit trail):
-#        FIRST grade the two r3-era deferrals (multimodal_decode,
-#        corpus_prep_pipeline — the last ten-round-stale names); then
-#        promote the r14-built batch (promotion-ready in-test DuckDB
-#        oracles, registry standard): cohens_d (COHENS_D_SQL over
-#        _MOMENTS_CTE, tests/test_stats_operators.py), linear_trend +
-#        stream_linear_trend (TREND_SLOPE/ICEPT_SQL, HUGEINT twin in
-#        the same test; the stream twin grades against the batch
-#        oracle per the stream_two_proportion precedent),
-#        etd_summary (ETD_GOLDEN_ORACLE at
-#        tests/test_stats_operators.py — tag golden-sf0.01, the EMA
-#        golden-ladder recipe executed), sequence_match_events
-#        (_timed_events_ladder_sql — the witness-chain ladder,
-#        tests/test_interval_combinators.py), ranking_metrics
-#        (NDCG/MRR/hits@k, _ILOG2 twin at tests/test_llm_operators.py),
-#        and pair queries over damerau_levenshtein_udf /
-#        byte_jaccard_e6_udf (DuckDB-NATIVE twins —
-#        damerau_levenshtein / floor(jaccard*1e6+0.5), the capped-pair
-#        shapes in tests/test_llm_operators.py); then rotate the
-#        r4-era staleness tail (ann_lsh_near_dup, ann_lsh_topk,
-#        chunk_documents, contamination_check, dedup_levenshtein,
-#        profile_documents, range_join_events, scalar_functions,
-#        session_window_agg, sessionize, stratified_sample,
-#        streaming_hourly_windows, text_fingerprint, text_langid,
-#        text_quality, text_repetition, text_token_counts,
-#        window_functions_sampler, winnow_fingerprint — the 19 names
-#        judge-style-recomputed from CORRECTNESS_r01..r13, latest-green
-#        r4; ALL 19 pre-verified hash-exact at sf0.1 late in the r14
-#        session AND green at sf0.01 in the full r14 contract drive),
-#        oldest first; second-confirm the r13
-#        first-grade trio (quantile_timing, sequence_match_multi,
-#        heavy_hitters_decayed) and start the r12 second-confirmation
-#        batch (27 promotions + curate_report) as slots allow.
-#   r16+: continue the r4/r5-era staleness tail; keep folding 3-6
-#        re-confirmations per round.
 # pca_whiten stays replay-pinned BY DESIGN: a golden would bake in
 # LAPACK-build-specific eigh ulps (the projection magnifies them past
 # the floor-quantize step), unlike the EMA/LTTB folds which are pure
@@ -8469,8 +8222,8 @@ _GRADING_WINDOW = [
     # loader end-to-end (golden; the reference's actual workload)
     "loader_throughput", "loader_throughput_jvm",
     # --- r16 first-grades: the twelve r15-built operators (VERDICT
-    # r15 item 5 — oracles promoted verbatim from the in-test copies
-    # named in the rotation comment; registration-same-round rule)
+    # r15 item 5 — oracles promoted verbatim from the in-test copies;
+    # registration-same-round rule)
     "roc_auc", "brier_score", "classification_report",
     "stream_classification_report", "rolling_corr", "vwap_resample",
     "non_negative_derivative", "sequence_match_events_ids",

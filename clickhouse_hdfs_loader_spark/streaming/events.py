@@ -8,6 +8,18 @@ Kafka-sourced continuous variant of the same daily-load semantics.
 ``availableNow`` processes the current table content and stops — that
 makes the streaming path deterministically testable against the same
 DuckDB oracle as the batch query.
+
+Every twin is built from three helpers:
+
+- ``_table_stream`` — the glob-filtered parquet file-source stream over
+  one fixture table;
+- ``_drain`` — run a stream into a fresh memory sink (shuffle width
+  pinned, loud on timeout) and return the sink as a table;
+- ``_fold`` — ``foreachBatch`` fold of a ``step(state, batch)`` over the
+  micro-batches, checkpointing each new state and releasing the old one.
+
+A new state twin is its ``step`` over ``_fold`` plus its report from
+the final state.
 """
 
 from __future__ import annotations
@@ -68,13 +80,68 @@ def _run_to_completion(q, timeout: int = 300) -> None:
         q.stop()
 
 
+def _table_stream(spark: SparkSession, sf_dir: str,
+                  table: str) -> DataFrame:
+    """File-source stream over one fixture table: file sources take a
+    directory, so glob-filter to the table's parquet file."""
+    schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    return (spark.readStream.schema(schema)
+            .option("pathGlobFilter", f"{table}.parquet")
+            .parquet(sf_dir))
+
+
+def _drain(spark: SparkSession, df: DataFrame,
+           mode: str = "append") -> DataFrame:
+    """Run ``df`` availableNow into a fresh memory sink under the pinned
+    stream shuffle width and return the sink's table."""
+    sink = f"drain_{uuid.uuid4().hex[:8]}"
+    with _stream_shuffle_partitions(spark):
+        q = (df.writeStream.format("memory").queryName(sink)
+             .outputMode(mode)
+             .trigger(availableNow=True)
+             .start())
+        _run_to_completion(q)
+    return spark.table(sink)
+
+
+def _fold(stream: DataFrame, step):
+    """Fold ``state = step(state, batch)`` over the stream's
+    micro-batches via ``foreachBatch`` and return the final state.
+    ``step`` sees ``None`` on the first batch; the state is a DataFrame
+    or a tuple of them. Each new state is checkpointed (its lineage
+    stays one batch deep) and the superseded one unpersisted — a
+    long-running stream would otherwise pin one state copy per
+    micro-batch. At scale the state lives in a table the step merges
+    into; here it is driver-held so availableNow runs compare
+    deterministically."""
+    held: list = []
+
+    def fold(bdf: DataFrame, _epoch: int) -> None:
+        prev = held[0] if held else None
+        nxt = step(prev, bdf)
+        if isinstance(nxt, tuple):
+            nxt = tuple(d.localCheckpoint(eager=True) for d in nxt)
+        else:
+            nxt = nxt.localCheckpoint(eager=True)
+        if held:
+            for d in prev if isinstance(prev, tuple) else (prev,):
+                d.unpersist()
+        held[:] = [nxt]
+
+    q = (stream.writeStream.foreachBatch(fold)
+         .trigger(availableNow=True)
+         .start())
+    _run_to_completion(q)
+    if not held:
+        raise RuntimeError("stream produced no batches")
+    return held[0]
+
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # nanosAsLong is set BEFORE _table_stream reads the schema — in the
+    # other order NANOS-typed fixtures break
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # file-source streams take a directory; glob-filter to the events table
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "events.parquet")
-              .parquet(sf_dir))
+    stream = _table_stream(spark, sf_dir, "events")
     # normalize ts (ns-long or TIMESTAMP_NTZ → LTZ) so watermarks/windows
     # see real event time; see sources.tables.normalize_event_time
     return normalize_event_time(spark, stream)
@@ -95,15 +162,8 @@ def hourly_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the windowed agg as an actual stream (availableNow → memory
     sink), return the materialized result. Complete output mode because the
     sink is the full aggregate state."""
-    sink = f"evt_hourly_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (hourly_window_agg(events_stream(spark, sf_dir))
-             .writeStream.format("memory").queryName(sink)
-             .outputMode("complete")
-             .trigger(availableNow=True)
-             .start())
-        _run_to_completion(q)
-    return spark.table(sink)
+    return _drain(spark, hourly_window_agg(events_stream(spark, sf_dir)),
+                  "complete")
 
 
 def sliding_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,7 +173,6 @@ def sliding_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow → complete-mode memory sink, so the result is the full
     aggregate state and must converge to the batch twin
     (plans/queries.py:events_sliding_windows, same oracle)."""
-    sink = f"evt_sliding_{uuid.uuid4().hex[:8]}"
     s = events_stream(spark, sf_dir)
     agg = (s.withWatermark("ts", "2 hours")
            .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"),
@@ -122,13 +181,7 @@ def sliding_windows_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("value"), 2).alias("total_value"))
            .select(F.unix_timestamp(F.col("w.start")).alias("win_start"),
                    "event_type", "cnt", "total_value"))
-    with _stream_shuffle_partitions(spark):
-        q = (agg.writeStream.format("memory").queryName(sink)
-             .outputMode("complete")
-             .trigger(availableNow=True)
-             .start())
-        _run_to_completion(q)
-    return spark.table(sink)
+    return _drain(spark, agg, "complete")
 
 
 def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,19 +191,12 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     evicted — the scale-safe form of streaming exact dedup). Append-mode
     stream; the per-type count runs batch-side on the sink so the stream
     holds exactly one stateful operator."""
-    sink = f"evt_dedup_{uuid.uuid4().hex[:8]}"
     s = events_stream(spark, sf_dir)
     doubled = (s.withColumn("copy", F.explode(F.array(F.lit(1), F.lit(2))))
                .drop("copy"))
     deduped = (doubled.withWatermark("ts", "1 hour")
                .dropDuplicatesWithinWatermark(["event_id"]))
-    with _stream_shuffle_partitions(spark):
-        q = (deduped.writeStream.format("memory").queryName(sink)
-             .outputMode("append")
-             .trigger(availableNow=True)
-             .start())
-        _run_to_completion(q)
-    return (spark.table(sink).groupBy("event_type")
+    return (_drain(spark, deduped).groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("cnt")))
 
 
@@ -160,17 +206,11 @@ def stream_static_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical dimension-enrichment shape. The join runs in-stream
     (append mode, stateless); the per-nation rollup runs batch-side on
     the sink."""
-    sink = f"evt_enrich_{uuid.uuid4().hex[:8]}"
     s = events_stream(spark, sf_dir)
     dim = (spark.read.parquet(f"{sf_dir}/customer.parquet")
            .select(F.col("c_custkey").alias("user_id"), "c_nationkey"))
     joined = s.join(F.broadcast(dim), "user_id")
-    q = (joined.writeStream.format("memory").queryName(sink)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    return (spark.table(sink).groupBy("c_nationkey")
+    return (_drain(spark, joined).groupBy("c_nationkey")
             .agg(F.count(F.lit(1)).alias("cnt"),
                  F.round(F.sum("value"), 2).alias("total_value")))
 
@@ -189,7 +229,6 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     forever. Append mode — matched pairs are final the moment both
     watermarks pass the interval, so the sink receives each pair exactly
     once and must converge to the batch twin's pair list."""
-    sink = f"evt_ssjoin_{uuid.uuid4().hex[:8]}"
     clicks = (events_stream(spark, sf_dir)
               .where(F.col("event_type") == "click")
               .select(F.col("event_id").alias("click_id"),
@@ -206,14 +245,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         buys,
         F.expr("c_user = p_user AND p_ts >= c_ts "
                "AND p_ts < c_ts + INTERVAL 1 HOUR"))
-    with _stream_shuffle_partitions(spark):
-        q = (pairs.select("click_id", "purchase_id")
-             .writeStream.format("memory").queryName(sink)
-             .outputMode("append")
-             .trigger(availableNow=True)
-             .start())
-        _run_to_completion(q)
-    return spark.table(sink)
+    return _drain(spark, pairs.select("click_id", "purchase_id"))
 
 
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str,
@@ -230,11 +262,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str,
     aggregate-then-anti-join because the join key IS the group key."""
     from ..functions.text import md5_fingerprint
 
-    sink = f"doc_incdedup_{uuid.uuid4().hex[:8]}"
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir)
+    stream = (_table_stream(spark, sf_dir, "documents")
               .where(F.col("doc_id") % batch_mod == 0)
               .select("doc_id", md5_fingerprint(F.col("text")).alias("fp")))
     store = (spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -242,12 +270,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str,
              .select(md5_fingerprint(F.col("text")).alias("fp"))
              .distinct())
     fresh = stream.join(F.broadcast(store), "fp", "left_anti")
-    q = (fresh.writeStream.format("memory").queryName(sink)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    return (spark.table(sink).groupBy("fp")
+    return (_drain(spark, fresh).groupBy("fp")
             .agg(F.min("doc_id").alias("doc_id"),
                  F.count(F.lit(1)).alias("copies"))
             .select("doc_id", "fp", "copies"))
@@ -272,10 +295,7 @@ def stream_incremental_minhash(spark: SparkSession, sf_dir: str,
     deterministically comparable to the batch twin."""
     from ..operators.dedup import incremental_minhash_dedup, minhash_band_index
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir)
+    stream = (_table_stream(spark, sf_dir, "documents")
               .where(F.col("doc_id") % batch_mod == 0))
     store_idx = minhash_band_index(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -304,27 +324,11 @@ def stream_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically."""
     from ..operators.rollup import build_rollup, merge_rollups
 
-    # events_stream sets nanosAsLong BEFORE the schema read — inlining
-    # the two steps in the wrong order breaks on NANOS-typed fixtures
-    stream = events_stream(spark, sf_dir)
-    state: list = []
-
-    def merge(bdf: DataFrame, _epoch: int) -> None:
+    def step(state, bdf: DataFrame) -> DataFrame:
         part = build_rollup(bdf)
-        nxt = (part if not state else merge_rollups(state[0], part)) \
-            .localCheckpoint(eager=True)
-        if state:
-            state[0].unpersist()   # release the superseded state's
-            # blocks (one rollup copy per micro-batch otherwise)
-        state[:] = [nxt]
+        return part if state is None else merge_rollups(state, part)
 
-    q = (stream.writeStream.foreachBatch(merge)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return state[0]
+    return _fold(events_stream(spark, sf_dir), step)
 
 
 def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,44 +350,21 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame so runs compare deterministically."""
     from ..operators.cdc import cdc_apply, merge_upsert
 
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "orders.parquet")
-              .parquet(sf_dir))
-
-    def as_ops(df: DataFrame) -> DataFrame:
-        return df.select(
+    def step(snapshot, bdf: DataFrame) -> DataFrame:
+        ops = bdf.select(
             "o_custkey", "o_orderkey", "o_orderdate", "o_orderstatus",
             F.round("o_totalprice", 2).alias("o_totalprice"),
             F.when(F.col("o_orderkey") % 7 == 0, F.lit("delete"))
             .otherwise(F.lit("upsert")).alias("op"))
-
-    state: list = []
-
-    def merge(bdf: DataFrame, _epoch: int) -> None:
-        changes = cdc_apply(as_ops(bdf), ["o_custkey"],
+        changes = cdc_apply(ops, ["o_custkey"],
                             ["o_orderdate", "o_orderkey"],
                             keep_deletes=True)
-        if not state:
-            base = changes.drop("op").limit(0)
-        else:
-            base = state[0]
-        nxt = merge_upsert(base, changes, ["o_custkey"]) \
-            .localCheckpoint(eager=True)
-        if state:
-            state[0].unpersist()   # drop the superseded snapshot's
-            # blocks — a long-running stream would otherwise pin one
-            # full snapshot copy per micro-batch
-        state[:] = [nxt]
+        base = changes.drop("op").limit(0) if snapshot is None else snapshot
+        return merge_upsert(base, changes, ["o_custkey"])
 
-    q = (stream.writeStream.foreachBatch(merge)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return (state[0].select("o_custkey", "o_orderkey", "o_totalprice",
-                            "o_orderstatus"))
+    return (_fold(_table_stream(spark, sf_dir, "orders"), step)
+            .select("o_custkey", "o_orderkey", "o_totalprice",
+                    "o_orderstatus"))
 
 
 def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,26 +381,11 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.analytics import (normalize_transitions,
                                        transitions_update)
 
-    stream = events_stream(spark, sf_dir)   # ts-drift-safe events read
-    state: list = []
-
-    def fold(bdf: DataFrame, _epoch: int) -> None:
-        prev_counts, prev_last = state[0] if state else (None, None)
-        counts, last = transitions_update(prev_counts, prev_last, bdf)
-        counts = counts.localCheckpoint(eager=True)
-        last = last.localCheckpoint(eager=True)
-        if state:
-            state[0][0].unpersist()
-            state[0][1].unpersist()
-        state[:] = [(counts, last)]
-
-    q = (stream.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return normalize_transitions(state[0][0])
+    counts, _last = _fold(
+        events_stream(spark, sf_dir),
+        lambda state, bdf: transitions_update(*(state or (None, None)),
+                                              bdf))
+    return normalize_transitions(counts)
 
 
 def stream_funnel(spark: SparkSession, sf_dir: str,
@@ -434,25 +400,10 @@ def stream_funnel(spark: SparkSession, sf_dir: str,
     from ..operators.analytics import funnel_counts, funnel_update
 
     steps = steps or ["view", "click", "purchase"]
-    stream = events_stream(spark, sf_dir)   # ts-drift-safe events read
-    state: list = []
-
-    def fold(bdf: DataFrame, _epoch: int) -> None:
-        prev = state[0] if state else None
-        chain = funnel_update(prev, bdf, steps,
-                              within_hours=within_hours) \
-            .localCheckpoint(eager=True)
-        if state:
-            state[0].unpersist()
-        state[:] = [chain]
-
-    q = (stream.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return funnel_counts(state[0], steps)
+    chain = _fold(events_stream(spark, sf_dir),
+                  lambda state, bdf: funnel_update(
+                      state, bdf, steps, within_hours=within_hours))
+    return funnel_counts(chain, steps)
 
 
 def stream_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -464,23 +415,8 @@ def stream_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     state alone — raw events are never rescanned."""
     from ..operators.analytics import entropy_from_state, entropy_update
 
-    stream = events_stream(spark, sf_dir)   # ts-drift-safe events read
-    state: list = []
-
-    def fold(bdf: DataFrame, _epoch: int) -> None:
-        nxt = entropy_update(state[0] if state else None, bdf) \
-            .localCheckpoint(eager=True)
-        if state:
-            state[0].unpersist()
-        state[:] = [nxt]
-
-    q = (stream.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return entropy_from_state(state[0])
+    return entropy_from_state(_fold(events_stream(spark, sf_dir),
+                                    entropy_update))
 
 
 def stream_retention(spark: SparkSession, sf_dir: str,
@@ -493,27 +429,11 @@ def stream_retention(spark: SparkSession, sf_dir: str,
     this module — and the report derives from state alone."""
     from ..operators.analytics import retention_from_state, retention_update
 
-    stream = events_stream(spark, sf_dir)   # ts-drift-safe events read
-    state: list = []
-
-    def fold(bdf: DataFrame, _epoch: int) -> None:
-        pf, pa = state[0] if state else (None, None)
-        first, active = retention_update(pf, pa, bdf)
-        first = first.localCheckpoint(eager=True)
-        active = active.localCheckpoint(eager=True)
-        if state:
-            state[0][0].unpersist()
-            state[0][1].unpersist()
-        state[:] = [(first, active)]
-
-    q = (stream.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return retention_from_state(state[0][0], state[0][1],
-                                max_offset=max_offset)
+    first, active = _fold(
+        events_stream(spark, sf_dir),
+        lambda state, bdf: retention_update(*(state or (None, None)),
+                                            bdf))
+    return retention_from_state(first, active, max_offset=max_offset)
 
 
 def stream_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -524,29 +444,12 @@ def stream_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the O(|groups|) state alone. Side = user parity (the batch
     twin's derivation); rows with NULL users are excluded identically.
     Matches the batch operators exactly by test."""
-    from pyspark.sql import functions as F
+    from ..operators.stats import (events_user_sides, ttest_from_state,
+                                   ttest_update)
 
-    from ..operators.stats import ttest_from_state, ttest_update
-
-    stream = events_stream(spark, sf_dir)   # ts-drift-safe events read
-    state: list = []
-
-    def fold(bdf: DataFrame, _epoch: int) -> None:
-        sided = (bdf.where(F.col("user_id").isNotNull())
-                 .withColumn("side", F.pmod(F.col("user_id"), F.lit(2))))
-        nxt = ttest_update(state[0] if state else None, sided) \
-            .localCheckpoint(eager=True)
-        if state:
-            state[0].unpersist()
-        state[:] = [nxt]
-
-    q = (stream.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return ttest_from_state(state[0])
+    return ttest_from_state(_fold(
+        events_stream(spark, sf_dir),
+        lambda state, bdf: ttest_update(state, events_user_sides(bdf))))
 
 
 def stream_two_proportion(spark: SparkSession,
@@ -561,38 +464,15 @@ def stream_two_proportion(spark: SparkSession,
     report derives from the O(|groups|) state alone through
     ``stats.prop_from_state``. Matches the batch operator exactly by
     test."""
-    from pyspark.sql import functions as F
+    from ..operators.stats import (events_conversion_sides,
+                                   prop_from_state, prop_update)
 
-    from ..operators.stats import prop_from_state, prop_update
-
-    stream = events_stream(spark, sf_dir)   # ts-drift-safe events read
-    state: list = []
-
-    def fold(bdf: DataFrame, _epoch: int) -> None:
-        # NULL group keys out, mirroring the graded oracle's
-        # event_type IS NOT NULL (review-caught r14: the batch twin
-        # filters in its registry wrapper; a stream twin has no
-        # wrapper, so the exclusion lives here — the r9 drift stance)
-        sided = (bdf.where(F.col("user_id").isNotNull()
-                           & F.col("event_id").isNotNull()
-                           & F.col("event_type").isNotNull())
-                 .withColumn("side", F.pmod(F.col("user_id"),
-                                            F.lit(2)))
-                 .withColumn("flag", F.pmod(F.col("event_id"),
-                                            F.lit(2))))
-        nxt = prop_update(state[0] if state else None, sided) \
-            .localCheckpoint(eager=True)
-        if state:
-            state[0].unpersist()
-        state[:] = [nxt]
-
-    q = (stream.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return prop_from_state(state[0])
+    # the derivation is the registry wrapper's own function, so the
+    # NULL-group exclusion cannot drift between the twins again
+    return prop_from_state(_fold(
+        events_stream(spark, sf_dir),
+        lambda state, bdf: prop_update(state,
+                                       events_conversion_sides(bdf))))
 
 
 def stream_mutual_information(spark: SparkSession,
@@ -606,36 +486,13 @@ def stream_mutual_information(spark: SparkSession,
     entropy/retention contract) — and the milli-log2 MI/NMI report
     derives from state alone through the SAME rollup code path as the
     batch operator."""
-    from pyspark.sql import functions as F
+    from ..operators.stats import events_xy_bins, mi_from_state, mi_update
 
-    from ..operators.analytics import _quantizable_col
-    from ..operators.stats import mi_from_state, mi_update
-
-    stream = events_stream(spark, sf_dir)   # ts-drift-safe events read
-    state: list = []
-
-    def fold(bdf: DataFrame, _epoch: int) -> None:
-        binned = (bdf.where(F.col("user_id").isNotNull()
-                            & _quantizable_col("value"))
-                  .withColumn("xbin",
-                              F.pmod(F.floor(F.col("value"))
-                                     .cast("long"), F.lit(7)))
-                  .withColumn("ybin",
-                              F.pmod(F.col("user_id"), F.lit(5))))
-        nxt = mi_update(state[0] if state else None, binned,
-                        "event_type", "xbin", "ybin") \
-            .localCheckpoint(eager=True)
-        if state:
-            state[0].unpersist()
-        state[:] = [nxt]
-
-    q = (stream.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return mi_from_state(state[0], "event_type", "xbin", "ybin")
+    cells = _fold(
+        events_stream(spark, sf_dir),
+        lambda state, bdf: mi_update(state, events_xy_bins(bdf),
+                                     "event_type", "xbin", "ybin"))
+    return mi_from_state(cells, "event_type", "xbin", "ybin")
 
 
 def stream_exact_quantiles(spark: SparkSession, sf_dir: str,
@@ -651,23 +508,9 @@ def stream_exact_quantiles(spark: SparkSession, sf_dir: str,
     from ..operators.analytics import (quantile_update,
                                        quantiles_from_state)
 
-    stream = events_stream(spark, sf_dir)   # ts-drift-safe events read
-    state: list = []
-
-    def fold(bdf: DataFrame, _epoch: int) -> None:
-        nxt = quantile_update(state[0] if state else None, bdf) \
-            .localCheckpoint(eager=True)
-        if state:
-            state[0].unpersist()
-        state[:] = [nxt]
-
-    q = (stream.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return quantiles_from_state(state[0], qs_milli=qs_milli)
+    return quantiles_from_state(
+        _fold(events_stream(spark, sf_dir), quantile_update),
+        qs_milli=qs_milli)
 
 
 def stream_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -679,28 +522,11 @@ def stream_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract), and the slope/intercept report derives from the
     O(|groups|) state alone through ``stats.trend_from_state``.
     Matches the batch ``linear_trend`` exactly by test."""
-    from pyspark.sql import functions as F
-
     from ..operators.stats import trend_from_state, trend_update
 
-    stream = events_stream(spark, sf_dir)   # ts-drift-safe events read
-    state: list = []
-
-    def fold(bdf: DataFrame, _epoch: int) -> None:
-        batch = bdf.where(F.col("event_type").isNotNull())
-        nxt = trend_update(state[0] if state else None, batch) \
-            .localCheckpoint(eager=True)
-        if state:
-            state[0].unpersist()
-        state[:] = [nxt]
-
-    q = (stream.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return trend_from_state(state[0])
+    # trend_update excludes NULL groups itself, per batch
+    return trend_from_state(_fold(events_stream(spark, sf_dir),
+                                  trend_update))
 
 
 def stream_classification_report(spark: SparkSession,
@@ -715,30 +541,9 @@ def stream_classification_report(spark: SparkSession,
     rule); precision/recall/F1/accuracy derive from the O(|groups|)
     state alone through ``stats.clsrep_from_state``. Matches the
     batch ``classification_report`` exactly by test."""
-    from pyspark.sql import functions as F
+    from ..operators.stats import (clsrep_from_state, clsrep_update,
+                                   events_pred_label)
 
-    from ..operators.stats import clsrep_from_state, clsrep_update
-
-    stream = events_stream(spark, sf_dir)   # ts-drift-safe events read
-    state: list = []
-
-    def fold(bdf: DataFrame, _epoch: int) -> None:
-        labeled = (bdf.where(F.col("user_id").isNotNull()
-                             & F.col("event_id").isNotNull())
-                   .withColumn("pred", F.pmod(F.col("event_id"),
-                                              F.lit(2)))
-                   .withColumn("label", F.pmod(F.col("user_id"),
-                                               F.lit(2))))
-        nxt = clsrep_update(state[0] if state else None, labeled) \
-            .localCheckpoint(eager=True)
-        if state:
-            state[0].unpersist()
-        state[:] = [nxt]
-
-    q = (stream.writeStream.foreachBatch(fold)
-         .trigger(availableNow=True)
-         .start())
-    _run_to_completion(q)
-    if not state:
-        raise RuntimeError("stream produced no batches")
-    return clsrep_from_state(state[0])
+    return clsrep_from_state(_fold(
+        events_stream(spark, sf_dir),
+        lambda state, bdf: clsrep_update(state, events_pred_label(bdf))))

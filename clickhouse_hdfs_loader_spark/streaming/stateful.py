@@ -54,17 +54,11 @@ def sessionize_with_state(events: DataFrame) -> DataFrame:
 def run_sessionize_stream(spark, sf_dir: str) -> DataFrame:
     """availableNow one-shot run of the stateful sessionizer over the
     events fixture; returns the final per-user counts."""
-    import uuid
-
-    from .events import _run_to_completion, events_stream
-    sink = f"sessions_{uuid.uuid4().hex[:8]}"
-    q = (sessionize_with_state(events_stream(spark, sf_dir)
-                               .select("user_id", "ts"))
-         .writeStream.format("memory").queryName(sink)
-         .outputMode("update").trigger(availableNow=True).start())
-    _run_to_completion(q)
+    from .events import _drain, events_stream
+    df = _drain(spark, sessionize_with_state(events_stream(spark, sf_dir)
+                                             .select("user_id", "ts")),
+                "update")
     # update mode may emit a row per micro-batch; keep the last per user
-    df = spark.table(sink)
     from pyspark.sql import Window, functions as F
     w = Window.partitionBy("user_id").orderBy(F.monotonically_increasing_id().desc())
     return (df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)

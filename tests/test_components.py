@@ -9,6 +9,7 @@ from clickhouse_hdfs_loader_spark.operators.components import (
     connected_components,
     dedup_components,
 )
+from clickhouse_hdfs_loader_spark.plans.queries import REGISTRY
 
 
 def test_chain_collapses_to_one_component(spark):
@@ -67,21 +68,8 @@ def test_triangle_count_oracle_and_hand_cases(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW lineitem AS SELECT * FROM "
                 f"'{sf_dir}/lineitem.parquet'")
-    want = [tuple(r) for r in con.execute("""
-        WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-        e AS (SELECT DISTINCT a.l_suppkey AS lo, b.l_suppkey AS hi
-              FROM ps a JOIN ps b ON a.l_partkey = b.l_partkey
-               AND a.l_suppkey < b.l_suppkey),
-        n AS (SELECT count(DISTINCT id) AS nodes FROM
-              (SELECT lo AS id FROM e UNION ALL SELECT hi FROM e)),
-        m AS (SELECT CAST(count(*) AS BIGINT) AS edges FROM e),
-        t AS (SELECT CAST(count(*) AS BIGINT) AS triangles
-              FROM e e1
-              JOIN e e2 ON e2.lo = e1.lo AND e2.hi > e1.hi
-              JOIN e e3 ON e3.lo = e1.hi AND e3.hi = e2.hi)
-        SELECT CAST(n.nodes AS BIGINT) AS nodes, m.edges, t.triangles
-        FROM n, m, t
-    """).fetchall()]
+    want = [tuple(r) for r in con.execute(
+        REGISTRY["triangle_count"].oracle).fetchall()]
     assert got == want and len(got) == 1
     assert got[0][2] > 0
 

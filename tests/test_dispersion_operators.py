@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from clickhouse_hdfs_loader_spark.operators.dispersion import (
     gini_coefficient, mad_outliers, simpson_diversity)
+from clickhouse_hdfs_loader_spark.plans.queries import REGISTRY
 from clickhouse_hdfs_loader_spark.sources.tables import read_table
 
 
@@ -50,41 +51,8 @@ def test_tukey_outliers_oracle_and_hand_cases(spark, sf_dir):
     ev = _ev(spark, sf_dir)
     got = sorted(map(tuple, tukey_outliers(
         ev, "event_type", "value").collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH v AS (SELECT event_type AS g,
-                          CAST(floor(value * 1000) AS BIGINT) AS vm
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND event_type IS NOT NULL),
-        r AS (SELECT g, vm,
-                     row_number() OVER (PARTITION BY g ORDER BY vm)
-                       AS rn,
-                     count(*) OVER (PARTITION BY g) AS n
-              FROM v),
-        q AS (SELECT g, max(n) AS n,
-                     max(CASE WHEN rn = (n * 250 + 999) // 1000
-                         THEN vm END) AS q1,
-                     max(CASE WHEN rn = (n * 750 + 999) // 1000
-                         THEN vm END) AS q3
-              FROM r GROUP BY 1),
-        f AS (SELECT g, n, q1, q3,
-                     q1 - ((q3 - q1) * 1500) // 1000 AS lo,
-                     q3 + ((q3 - q1) * 1500) // 1000 AS hi
-              FROM q)
-        SELECT f.g AS event_type, CAST(f.n AS BIGINT) AS n,
-               CAST(q1 AS BIGINT) AS q1_milli,
-               CAST(q3 AS BIGINT) AS q3_milli,
-               CAST(lo AS BIGINT) AS lo_milli,
-               CAST(hi AS BIGINT) AS hi_milli,
-               CAST(sum(CASE WHEN vm < lo THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_low,
-               CAST(sum(CASE WHEN vm > hi THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_high,
-               CAST((sum(CASE WHEN vm < lo OR vm > hi THEN 1 ELSE 0
-                    END) * 10000) // f.n AS BIGINT) AS outlier_rate_e4
-        FROM v JOIN f ON v.g = f.g
-        GROUP BY f.g, f.n, q1, q3, lo, hi
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["tukey_outliers"].oracle).fetchall()))
     assert got == want and len(got) == 5
 
     def run(vals, k_e3=1500):
@@ -120,26 +88,8 @@ def test_simpson_diversity_oracle_and_hand_cases(spark, sf_dir):
     ev = _ev(spark, sf_dir)
     got = sorted(map(tuple, simpson_diversity(
         ev, "event_type", "user_id").collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH c AS (SELECT event_type AS g, user_id AS v,
-                          CAST(count(*) AS BIGINT) AS c
-                   FROM events WHERE user_id IS NOT NULL
-                     AND event_type IS NOT NULL
-                   GROUP BY 1, 2),
-        a AS (SELECT g, CAST(sum(c) AS BIGINT) AS n,
-                     CAST(count(*) AS BIGINT) AS k,
-                     CAST(sum(c * (c - 1)) AS BIGINT) AS same
-              FROM c GROUP BY 1)
-        SELECT g AS event_type, n, k,
-               CAST(CASE WHEN n < 2 THEN NULL ELSE
-                 (same * CAST(1000000 AS BIGINT)) // (n * (n - 1))
-                 END AS BIGINT) AS d_e6,
-               CAST(CASE WHEN n < 2 THEN NULL ELSE
-                 CAST(1000000 AS BIGINT)
-                 - (same * CAST(1000000 AS BIGINT)) // (n * (n - 1))
-                 END AS BIGINT) AS gs_e6
-        FROM a
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["simpson_diversity"].oracle).fetchall()))
     assert got == want and len(got) == 5
     # the complement identity holds row-for-row by construction
     assert all(d + gs == 1_000_000 for (_, _, _, d, gs) in got)
@@ -167,30 +117,8 @@ def test_gini_coefficient_oracle_and_hand_cases(spark, sf_dir):
     ev = _ev(spark, sf_dir)
     got = sorted(map(tuple, gini_coefficient(
         ev, "event_type", "value").collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH v AS (SELECT event_type AS g,
-                          CAST(floor(value * 1000) AS BIGINT) AS vm
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND event_type IS NOT NULL),
-        r AS (SELECT g, vm,
-                     CAST(row_number() OVER (PARTITION BY g
-                       ORDER BY vm) AS BIGINT) AS i
-              FROM v),
-        a AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-                     CAST(sum(vm) AS BIGINT) AS s,
-                     CAST(sum(i * vm) AS BIGINT) AS isum
-              FROM r GROUP BY 1),
-        d AS (SELECT g, n, s, 2 * isum - (n + 1) * s AS num,
-                     n * s AS den
-              FROM a)
-        SELECT g AS event_type, n, s AS sum_milli,
-               CAST(CASE WHEN n < 1 OR s = 0 THEN NULL ELSE
-                 ((num * 1000) // den) * 1000
-                 + (((num * 1000) % den) * 1000) // den
-                 END AS BIGINT) AS g_e6
-        FROM d
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["gini_coefficient"].oracle).fetchall()))
     assert got == want and len(got) == 5
     assert all(0 <= g <= 1_000_000 for (_, _, _, g) in got)
 
@@ -220,36 +148,8 @@ def test_mad_outliers_oracle_and_hand_cases(spark, sf_dir):
     ev = _ev(spark, sf_dir)
     got = sorted(map(tuple, mad_outliers(
         ev, "event_type", "value", k=3).collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH v AS (SELECT event_type AS g,
-                          CAST(floor(value * 1000) AS BIGINT) AS vm
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND event_type IS NOT NULL),
-        m AS (SELECT g, vm AS med FROM (
-                SELECT g, vm,
-                       row_number() OVER (PARTITION BY g ORDER BY vm)
-                         AS rn,
-                       count(*) OVER (PARTITION BY g) AS n
-                FROM v) WHERE rn = (n + 1) // 2),
-        d AS (SELECT v.g, abs(vm - med) AS dev, med
-              FROM v JOIN m ON v.g = m.g),
-        md AS (SELECT g, dev AS mad FROM (
-                 SELECT g, dev,
-                        row_number() OVER (PARTITION BY g ORDER BY dev)
-                          AS rn,
-                        count(*) OVER (PARTITION BY g) AS n
-                 FROM d) WHERE rn = (n + 1) // 2)
-        SELECT d.g AS event_type, CAST(count(*) AS BIGINT) AS n,
-               CAST(max(med) AS BIGINT) AS median_milli,
-               CAST(max(mad) AS BIGINT) AS mad_milli,
-               CAST(sum(CASE WHEN dev > 3 * mad THEN 1 ELSE 0 END)
-                    AS BIGINT) AS outlier_cnt,
-               CAST((sum(CASE WHEN dev > 3 * mad THEN 1 ELSE 0 END)
-                     * 10000) // count(*) AS BIGINT)
-                 AS outlier_rate_e4
-        FROM d JOIN md ON d.g = md.g GROUP BY 1
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["mad_outliers"].oracle).fetchall()))
     assert got == want and len(got) == 5
 
     def run(vals, k=3):
@@ -351,25 +251,8 @@ def test_cohort_overlap_oracle_and_hand_cases(spark, sf_dir):
     ev = _ev(spark, sf_dir)
     got = sorted(map(tuple, cohort_overlap(
         ev, "event_type", "user_id").collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH d AS (SELECT DISTINCT event_type AS g, user_id AS id
-                   FROM events
-                   WHERE event_type IS NOT NULL
-                     AND user_id IS NOT NULL),
-        s AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM d
-              GROUP BY 1),
-        i AS (SELECT a.g AS ga, b.g AS gb,
-                     CAST(count(*) AS BIGINT) AS o
-              FROM d a JOIN d b ON a.id = b.id AND a.g < b.g
-              GROUP BY 1, 2)
-        SELECT sa.g AS g_a, sb.g AS g_b, sa.n AS n_a, sb.n AS n_b,
-               CAST(coalesce(o, 0) AS BIGINT) AS overlap_cnt,
-               CAST((coalesce(o, 0) * 10000)
-                    // (sa.n + sb.n - coalesce(o, 0)) AS BIGINT)
-                 AS jaccard_e4
-        FROM s sa JOIN s sb ON sa.g < sb.g
-        LEFT JOIN i ON i.ga = sa.g AND i.gb = sb.g
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["cohort_overlap"].oracle).fetchall()))
     assert got == want and len(got) == 10   # C(5, 2) pairs, zero-filled
 
     # hand case: A={1,2,3}, B={2,3}, C={9}; duplicates collapse; the
@@ -400,27 +283,8 @@ def test_histogram_equi_depth_oracle_and_hand_cases(spark, sf_dir):
     ev = _ev(spark, sf_dir)
     got = sorted(map(tuple, histogram_equi_depth(
         ev, "event_type", "value", buckets=7).collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH v AS (SELECT event_type AS g,
-                          CAST(floor(value * 1000) AS BIGINT) AS vm
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND event_type IS NOT NULL),
-        r AS (SELECT g, vm,
-                     CAST(row_number() OVER (PARTITION BY g
-                       ORDER BY vm) AS BIGINT) AS rn,
-                     CAST(count(*) OVER (PARTITION BY g) AS BIGINT)
-                       AS n
-              FROM v)
-        SELECT g AS event_type,
-               CAST(CASE WHEN ((rn - 1) * 7) // n < 6
-                    THEN ((rn - 1) * 7) // n ELSE 6 END AS BIGINT)
-                 AS bucket,
-               CAST(count(*) AS BIGINT) AS cnt,
-               CAST(min(vm) AS BIGINT) AS lo_milli,
-               CAST(max(vm) AS BIGINT) AS hi_milli
-        FROM r GROUP BY 1, 2
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["histogram_equi_depth"].oracle).fetchall()))
     assert got == want and len(got) == 35   # 5 groups x 7 buckets
     # equi-depth invariant: per-group bucket counts differ by <= 1
     from collections import defaultdict
@@ -452,39 +316,8 @@ def test_cusum_changepoint_oracle_and_hand_cases(spark, sf_dir):
 
     ev = _ev(spark, sf_dir)
     got = sorted(map(tuple, cusum_changepoint(ev).collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH v AS (SELECT event_type AS g, epoch_us(ts) AS us,
-                          event_id AS id,
-                          CAST(floor(value * 1000) AS BIGINT) AS vm
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND ts IS NOT NULL AND event_type IS NOT NULL
-                     AND event_id IS NOT NULL),
-        c AS (SELECT g, us,
-                     CAST(row_number() OVER w AS BIGINT) AS k,
-                     CAST(sum(vm) OVER w AS BIGINT) AS pre,
-                     CAST(count(*) OVER (PARTITION BY g) AS BIGINT)
-                       AS n,
-                     CAST(sum(vm) OVER (PARTITION BY g) AS BIGINT)
-                       AS tot
-              FROM v
-              WINDOW w AS (PARTITION BY g ORDER BY us, id
-                           ROWS UNBOUNDED PRECEDING)),
-        s AS (SELECT g, us, k, n, tot, n * pre - k * tot AS sn,
-                     max(abs(n * pre - k * tot))
-                       OVER (PARTITION BY g) AS amax
-              FROM c)
-        SELECT g AS event_type, CAST(max(n) AS BIGINT) AS n,
-               CAST(max(tot) AS BIGINT) AS sum_milli,
-               CAST(max(sn) AS BIGINT) AS s_n_max,
-               CAST(min(sn) AS BIGINT) AS s_n_min,
-               CAST(min(CASE WHEN abs(sn) = amax THEN k END)
-                    AS BIGINT) AS cp_pos,
-               CAST(min(CASE WHEN abs(sn) = amax
-                    THEN struct_pack(k := k, us := us) END).us
-                    AS BIGINT) AS cp_ts_us
-        FROM s GROUP BY 1
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["cusum_changepoint"].oracle).fetchall()))
     assert got == want and len(got) == 5
 
     # hand case: a clean level shift 0,0,0 -> 10,10,10; the extreme
@@ -579,32 +412,8 @@ def test_trimmed_mean_oracle_and_hand_cases(spark, sf_dir):
     ev = _ev(spark, sf_dir)
     got = sorted(map(tuple, trimmed_mean(
         ev, "event_type", "value", trim_milli=100).collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH v AS (SELECT event_type AS g,
-                          CAST(floor(value * 1000) AS BIGINT) AS vm
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND event_type IS NOT NULL),
-        r AS (SELECT g, vm,
-                     CAST(row_number() OVER (PARTITION BY g
-                       ORDER BY vm) AS BIGINT) AS rn,
-                     CAST(count(*) OVER (PARTITION BY g) AS BIGINT)
-                       AS n
-              FROM v),
-        k AS (SELECT g, n, vm,
-                     rn > (n * 100) // 1000
-                     AND rn <= n - (n * 100) // 1000 AS keep
-              FROM r)
-        SELECT g AS event_type, CAST(max(n) AS BIGINT) AS n,
-               CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-                 AS kept,
-               CAST(sum(CASE WHEN keep THEN vm ELSE 0 END) AS BIGINT)
-                 AS sum_kept_milli,
-               CAST(sum(CASE WHEN keep THEN vm ELSE 0 END)
-                    // sum(CASE WHEN keep THEN 1 ELSE 0 END)
-                    AS BIGINT) AS mean_milli
-        FROM k GROUP BY 1
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["trimmed_mean"].oracle).fetchall()))
     assert got == want and len(got) == 5
     # robustness direction: trimming pulls the mean toward the median
     # on the right-skewed fixture values (sanity, not a pin)
@@ -634,35 +443,8 @@ def test_robust_scale_oracle_and_hand_cases(spark, sf_dir):
     ev = _ev(spark, sf_dir)
     got = sorted(map(tuple, robust_scale(ev, "event_type", "value")
                      .select("event_id", "scaled_milli").collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH v AS (SELECT event_id, event_type AS g,
-                          CASE WHEN value IS NOT NULL
-                               AND isfinite(value)
-                          THEN CAST(floor(value * 1000) AS BIGINT)
-                          END AS vm
-                   FROM events WHERE event_type IS NOT NULL),
-        r AS (SELECT event_id, g, vm,
-                     row_number() OVER (PARTITION BY g
-                       ORDER BY vm ASC NULLS LAST) AS rn,
-                     count(vm) OVER (PARTITION BY g) AS n
-              FROM v),
-        m AS (SELECT *, max(CASE WHEN rn = (n + 1) // 2 THEN vm END)
-                          OVER (PARTITION BY g) AS med
-              FROM r),
-        d AS (SELECT *, abs(vm - med) AS dev,
-                     row_number() OVER (PARTITION BY g
-                       ORDER BY abs(vm - med) ASC NULLS LAST) AS rd
-              FROM m),
-        md AS (SELECT *, max(CASE WHEN rd = (n + 1) // 2 THEN dev END)
-                           OVER (PARTITION BY g) AS mad
-               FROM d)
-        SELECT event_id,
-               CAST(CASE WHEN vm IS NULL OR mad IS NULL OR mad = 0
-                    THEN NULL
-                    ELSE ((vm - med) * 1000) // mad END AS BIGINT)
-                 AS scaled_milli
-        FROM md
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["robust_scale"].oracle).fetchall()))
     assert got == want and len(got) == 1000
 
     # hand case: [1,2,3,100] -> med 2, MAD 1; the row set passes

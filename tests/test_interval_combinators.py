@@ -18,21 +18,13 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from clickhouse_hdfs_loader_spark.plans.queries import REGISTRY
 from clickhouse_hdfs_loader_spark.sources.tables import read_table
 
 # interval derivation shared by the interval-op tests: each event opens
 # a half-open interval of floor(value*10) seconds at floor(epoch) —
-# integer-exact on both engines (identical float expression order)
-_IV_SQL = """
-    SELECT event_type AS g, event_id AS id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS s,
-           CAST(floor(epoch(ts)) AS BIGINT)
-             + CAST(floor(value * 10) AS BIGINT) AS e
-    FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-      AND isfinite(value)
-"""
-
-
+# integer-exact on both engines (identical float expression order; the
+# DuckDB side is the registry's _IV_SQL)
 def _iv_spark(spark, sf_dir):
     from clickhouse_hdfs_loader_spark.operators.analytics import (
         _quantizable_col)
@@ -59,28 +51,8 @@ def test_interval_length_sum_oracle_and_hand_case(spark, sf_dir):
 
     got = sorted(map(tuple, interval_length_sum(
         _iv_spark(spark, sf_dir), "g", "s", "e", id_col="id").collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute(f"""
-        WITH iv AS ({_IV_SQL}),
-        f AS (SELECT * FROM iv WHERE e >= s),
-        m AS (SELECT g, id, s, e,
-                CASE WHEN max(e) OVER pw IS NULL OR s > max(e) OVER pw
-                     THEN 1 ELSE 0 END AS nw
-              FROM f
-              WINDOW pw AS (PARTITION BY g ORDER BY s, e, id
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND 1 PRECEDING)),
-        seg AS (SELECT g, e, s, sum(nw) OVER (
-                  PARTITION BY g ORDER BY s, e, id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS sid
-                FROM m),
-        per AS (SELECT g, sid, max(e) - min(s) AS len, count(*) AS n
-                FROM seg GROUP BY 1, 2)
-        SELECT g, CAST(sum(len) AS BIGINT) AS union_len,
-               CAST(count(*) AS BIGINT) AS segments,
-               CAST(sum(n) AS BIGINT) AS intervals
-        FROM per GROUP BY g
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["interval_length_sum"].oracle).fetchall()))
     assert got == want and len(got) == 5
 
     # hand case: [0,10) ∪ [5,12) ∪ [12,20) merge (touching joins the
@@ -115,22 +87,8 @@ def test_max_intersections_oracle_and_hand_case(spark, sf_dir):
 
     got = sorted(map(tuple, max_intersections(
         _iv_spark(spark, sf_dir), "g", "s", "e").collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute(f"""
-        WITH iv AS ({_IV_SQL}),
-        f AS (SELECT * FROM iv WHERE e > s),
-        pts AS (SELECT g, s AS p, 1 AS d FROM f
-                UNION ALL SELECT g, e, -1 FROM f),
-        c AS (SELECT g, p, sum(d) OVER (
-                PARTITION BY g ORDER BY p, d
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-              FROM pts),
-        mx AS (SELECT g, CAST(max(c) AS BIGINT) AS max_intersections
-               FROM c GROUP BY g)
-        SELECT c.g, mx.max_intersections,
-               CAST(min(c.p) AS BIGINT) AS position
-        FROM c JOIN mx ON c.g = mx.g AND c.c = mx.max_intersections
-        GROUP BY 1, 2
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["max_intersections"].oracle).fetchall()))
     assert got == want and len(got) == 5
     assert all(r[1] >= 1 for r in got)
 
@@ -150,21 +108,8 @@ def test_delta_sum_oracle_and_hand_case(spark, sf_dir):
 
     ev = read_table(spark, sf_dir, "events")
     got = sorted(map(tuple, delta_sum(ev).collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH v AS (SELECT event_type,
-                          CAST(floor(value * 1000) AS BIGINT) AS vm,
-                          lag(CAST(floor(value * 1000) AS BIGINT)) OVER (
-                            PARTITION BY event_type ORDER BY ts, event_id)
-                            AS pv
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND ts IS NOT NULL)
-        SELECT event_type,
-               CAST(sum(CASE WHEN pv IS NULL THEN 0
-                             ELSE greatest(0, vm - pv) END) AS BIGINT)
-                 AS delta_sum_milli
-        FROM v GROUP BY event_type
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["delta_sum"].oracle).fetchall()))
     assert got == want and len(got) == 5
 
     # counter with a reset: 1 -> 3 (+2), 3 -> 2 (reset, +0), 2 -> 5 (+3)
@@ -188,24 +133,8 @@ def test_non_negative_derivative_oracle_and_hand_cases(spark, sf_dir):
 
     ev = read_table(spark, sf_dir, "events")
     got = sorted(map(tuple, non_negative_derivative(ev).collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH v AS (SELECT event_type, epoch_us(ts) AS tus, event_id,
-                          CAST(floor(value * 1000) AS BIGINT) AS vm,
-                          lag(CAST(floor(value * 1000) AS BIGINT)) OVER w
-                            AS pvm,
-                          lag(epoch_us(ts)) OVER w AS pus
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND ts IS NOT NULL AND event_id IS NOT NULL
-                   WINDOW w AS (PARTITION BY event_type
-                                ORDER BY epoch_us(ts), event_id))
-        SELECT event_type, CAST(tus AS BIGINT) AS t_us, event_id,
-               CAST(CASE WHEN pus IS NULL OR tus = pus THEN NULL
-                    ELSE greatest(0, ((vm - pvm) * 1000000)
-                                     // (tus - pus)) END
-                    AS BIGINT) AS rate_milli_per_s
-        FROM v
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["non_negative_derivative"].oracle).fetchall()))
     assert got == want and len(got) > 0
     assert any(r[3] is not None and r[3] > 0 for r in got)
 
@@ -239,31 +168,8 @@ def test_bounding_ratio_oracle_and_hand_case(spark, sf_dir):
 
     ev = read_table(spark, sf_dir, "events")
     got = sorted(map(tuple, bounding_ratio(ev).collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH v AS (SELECT event_type,
-                          CAST(floor(value * 1000) AS BIGINT) AS vm,
-                          epoch_us(ts) AS tus,
-                          row_number() OVER (PARTITION BY event_type
-                            ORDER BY epoch_us(ts), event_id) AS ra,
-                          row_number() OVER (PARTITION BY event_type
-                            ORDER BY epoch_us(ts) DESC, event_id DESC)
-                            AS rd
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND ts IS NOT NULL),
-        a AS (SELECT event_type,
-                     max(CASE WHEN ra = 1 THEN vm END) AS yf,
-                     max(CASE WHEN rd = 1 THEN vm END) AS yl,
-                     max(tus) - min(tus) AS den_us
-              FROM v GROUP BY event_type)
-        SELECT event_type, CAST(yl - yf AS BIGINT) AS num_milli,
-               CAST(den_us AS BIGINT) AS den_us,
-               CASE WHEN den_us = 0 THEN NULL ELSE
-                 floor(CAST(yl - yf AS DOUBLE) * 1000000.0
-                       / CAST(den_us AS DOUBLE) * 10000.0 + 0.5)
-                 / 10000.0 END AS slope_milli_per_sec_e4
-        FROM a
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["bounding_ratio"].oracle).fetchall()))
     assert got == want and len(got) == 5
 
     # hand case: (t=0, 1.0) -> (t=10s, 21.0): +20000 milli over 10 s
@@ -288,21 +194,8 @@ def test_sequence_next_node_oracle_and_hand_case(spark, sf_dir):
     ev = read_table(spark, sf_dir, "events")
     steps = ["view", "click"]
     got = sorted(map(tuple, sequence_next_node(ev, steps).collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH s0 AS (SELECT user_id, min(ts) AS t FROM events
-                    WHERE event_type = 'view' GROUP BY 1),
-        s1 AS (SELECT e.user_id, min(e.ts) AS t
-               FROM events e JOIN s0 USING (user_id)
-               WHERE e.event_type = 'click' AND e.ts > s0.t GROUP BY 1),
-        nxt AS (SELECT e.user_id, e.event_type
-                FROM events e JOIN s1 USING (user_id)
-                WHERE e.ts > s1.t
-                QUALIFY row_number() OVER (PARTITION BY e.user_id
-                  ORDER BY e.ts, e.event_id) = 1)
-        SELECT event_type AS next_event_type,
-               CAST(count(*) AS BIGINT) AS users
-        FROM nxt GROUP BY 1
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["sequence_next_node"].oracle).fetchall()))
     assert got == want and len(got) > 0
 
     # hand case: the chain completes at the click; the NEXT event is the
@@ -348,28 +241,8 @@ def test_window_funnel_strict_order_oracle_and_hand_cases(spark, sf_dir):
     steps = ["view", "click", "purchase"]
     got = sorted(map(tuple, window_funnel_strict_order(
         ev, steps, within_hours=24).collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH b AS (SELECT user_id, event_type, epoch_us(ts) AS tus,
-                          event_id
-                   FROM events WHERE ts IS NOT NULL),
-        l AS (SELECT user_id,
-                CASE WHEN event_type = 'view'
-                      AND lead(event_type, 1) OVER w = 'click'
-                      AND lead(tus, 1) OVER w <= tus + 86400000000
-                      AND lead(event_type, 2) OVER w = 'purchase'
-                      AND lead(tus, 2) OVER w <= tus + 86400000000
-                     THEN 3
-                     WHEN event_type = 'view'
-                      AND lead(event_type, 1) OVER w = 'click'
-                      AND lead(tus, 1) OVER w <= tus + 86400000000
-                     THEN 2
-                     WHEN event_type = 'view' THEN 1 ELSE 0 END AS lvl
-              FROM b
-              WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-        p AS (SELECT user_id, max(lvl) AS level FROM l GROUP BY 1)
-        SELECT level, CAST(count(*) AS BIGINT) AS users
-        FROM p GROUP BY 1
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["window_funnel_strict_order"].oracle).fetchall()))
     assert got == want and len(got) > 0
     n_users = _duck(sf_dir).execute(
         "SELECT count(DISTINCT user_id) FROM events WHERE ts IS NOT "
@@ -473,31 +346,8 @@ def test_entropy_by_group_oracle_and_hand_cases(spark, sf_dir):
 
     ev = read_table(spark, sf_dir, "events")
     got = sorted(map(tuple, entropy_by_group(ev).collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH c AS (SELECT event_type AS g, user_id AS v,
-                          CAST(count(*) AS BIGINT) AS c
-                   FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2),
-        cl AS (SELECT g, c,
-                      CAST(length(ltrim(bin(c), '0')) - 1 AS BIGINT)
-                        AS e
-               FROM c),
-        clg AS (SELECT g, c,
-                       e * 1000 + ((c - (1::BIGINT << e)) * 1000)
-                         // (1::BIGINT << e) AS lg
-                FROM cl),
-        a AS (SELECT g, CAST(sum(c) AS BIGINT) AS n,
-                     CAST(sum(c * lg) AS BIGINT) AS s
-              FROM clg GROUP BY g),
-        al AS (SELECT g, n, s,
-                      CAST(length(ltrim(bin(n), '0')) - 1 AS BIGINT)
-                        AS e
-               FROM a)
-        SELECT g AS event_type, n,
-               CAST((n * (e * 1000 + ((n - (1::BIGINT << e)) * 1000)
-                          // (1::BIGINT << e)) - s) // n AS BIGINT)
-                 AS entropy_milli
-        FROM al
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["entropy_by_group"].oracle).fetchall()))
     assert got == want and len(got) == 5
     # profile sanity: every group sees many users -> entropy well above 0
     assert all(r[2] > 1000 for r in got)
@@ -556,6 +406,75 @@ def test_stream_entropy_matches_batch_any_partition(spark, sf_dir):
         assert got == one_shot
 
     check()
+
+
+def test_fold_threads_state_across_micro_batches(spark, tmp_path):
+    """``_fold`` hands ``step`` None on the first micro-batch and the
+    previous state after that; over a two-file stream read one file per
+    trigger the final state equals one batch fold over both files."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from clickhouse_hdfs_loader_spark.streaming.events import _fold
+
+    pq.write_table(pa.table({"g": ["a", "b", "a"], "v": [1, 2, 3]}),
+                   tmp_path / "part-0.parquet")
+    pq.write_table(pa.table({"g": ["a", "c"], "v": [10, 20]}),
+                   tmp_path / "part-1.parquet")
+    # the file source orders files by modification time
+    os.utime(tmp_path / "part-1.parquet", (2_000_000_000, 2_000_000_000))
+    schema = "g string, v long"
+    seen = []
+
+    def sums(df):
+        return df.groupBy("g").agg(F.sum("v").alias("v"))
+
+    def step(state, bdf):
+        seen.append(None if state is None
+                    else sorted(map(tuple, state.collect())))
+        return sums(bdf if state is None else state.unionByName(bdf))
+
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(str(tmp_path)))
+    got = sorted(map(tuple, _fold(stream, step).collect()))
+    one_shot = sorted(map(tuple, sums(
+        spark.read.schema(schema).parquet(str(tmp_path))).collect()))
+    assert seen == [None, [("a", 4), ("b", 2)]]
+    assert got == one_shot == [("a", 14), ("b", 2), ("c", 20)]
+
+
+def test_fold_raises_when_the_stream_has_no_batches(spark, tmp_path):
+    """An empty source runs zero micro-batches: ``_fold`` raises instead
+    of returning a missing state."""
+    from clickhouse_hdfs_loader_spark.streaming.events import _fold
+
+    stream = spark.readStream.schema("g string").parquet(str(tmp_path))
+    with pytest.raises(RuntimeError, match="stream produced no batches"):
+        _fold(stream, lambda state, bdf: bdf)
+
+
+def test_run_to_completion_raises_on_timeout_and_stops():
+    """A query still running at the timeout fails loudly (a memory sink
+    read then would be partial) and is stopped all the same."""
+    from clickhouse_hdfs_loader_spark.streaming.events import (
+        _run_to_completion)
+
+    class StillRunning:
+        name = "q"
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = StillRunning()
+    with pytest.raises(TimeoutError, match="still running after 1s"):
+        _run_to_completion(q, timeout=1)
+    assert q.stopped
 
 
 def test_pagerank_exact_python_replay_and_hand_case(spark, sf_dir):
@@ -973,40 +892,8 @@ def test_seasonal_decompose_oracle_and_hand_cases(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH b AS (SELECT event_type AS g, ts, event_id,
-                          CAST(floor(value * 1000) AS BIGINT) AS vm
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND ts IS NOT NULL AND event_id IS NOT NULL
-                     AND event_type IS NOT NULL),
-        r AS (SELECT g, vm, row_number() OVER w AS pos,
-                     count(*) OVER (PARTITION BY g) AS n,
-                     sum(vm) OVER (w ROWS BETWEEN 3 PRECEDING
-                       AND 3 FOLLOWING) AS ws
-              FROM b
-              WINDOW w AS (PARTITION BY g ORDER BY ts, event_id)),
-        t AS (SELECT g, pos, vm,
-                     CASE WHEN pos > 3 AND pos <= n - 3
-                          THEN ws // 7 END AS trend,
-                     (pos - 1) % 7 AS ph
-              FROM r),
-        -- dd is NULL outside the interior; sum/count over the
-        -- (g, phase) partition therefore see interior rows only
-        -- (mirrors the operator's window form — no join)
-        s AS (SELECT g, pos, vm, trend, vm - trend AS dd,
-                     sum(vm - trend) OVER (PARTITION BY g, ph) AS ssum,
-                     count(vm - trend) OVER (PARTITION BY g, ph)
-                       AS scnt
-              FROM t)
-        SELECT g AS event_type, CAST(pos AS INT) AS pos,
-               vm AS vm_milli, CAST(trend AS BIGINT) AS trend_milli,
-               CAST(CASE WHEN scnt > 0 THEN ssum // scnt END
-                    AS BIGINT) AS seasonal_milli,
-               CAST(dd - CASE WHEN scnt > 0 THEN ssum // scnt END
-                    AS BIGINT) AS resid_milli
-        FROM s
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["seasonal_decompose"].oracle).fetchall()))
     assert got == want and len(got) > 0
 
     # linear + periodic hand case: vm = 10 + 2t + s[t % 3] with

@@ -11,6 +11,7 @@ from clickhouse_hdfs_loader_spark.functions.fingerprint import winnow
 from clickhouse_hdfs_loader_spark.operators import dedup as DD
 from clickhouse_hdfs_loader_spark.operators import multimodal as MM
 from clickhouse_hdfs_loader_spark.operators import similarity as SIM
+from clickhouse_hdfs_loader_spark.plans.queries import REGISTRY
 
 BASE = ("the quick brown fox jumps over the lazy dog while the cat "
         "watches from the warm window sill and the birds sing in the "
@@ -1118,30 +1119,8 @@ def test_anomaly_zscore_oracle_and_planted_spike(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH hourly AS (
-          SELECT event_type, date_trunc('hour', ts) AS h,
-                 count(*) AS cnt
-          FROM events GROUP BY 1, 2),
-        stats AS (
-          SELECT event_type, h, cnt,
-                 count(*) OVER w AS n,
-                 sum(CAST(cnt AS DOUBLE)) OVER w AS s,
-                 sum(CAST(cnt * cnt AS DOUBLE)) OVER w AS sq
-          FROM hourly
-          WINDOW w AS (PARTITION BY event_type ORDER BY h
-                       ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)),
-        scored AS (
-          SELECT event_type, h, cnt, n, s / n AS mean,
-                 (sq - s * s / n) / (n - 1) AS var,
-                 (cnt - s / n) / sqrt((sq - s * s / n) / (n - 1)) AS z
-          FROM stats)
-        SELECT event_type, CAST(epoch(h) AS BIGINT) AS hour_epoch, cnt,
-               floor(mean * 10000 + 0.5) / 10000 AS mean_cnt,
-               floor(z * 10000 + 0.5) / 10000 AS z
-        FROM scored
-        WHERE n >= 8 AND var > 0 AND abs(z) >= 2.0
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["anomaly_zscore"].oracle).fetchall()))
     assert got == want
     base = dt.datetime(2024, 1, 1)
     rows = []
@@ -1177,20 +1156,8 @@ def test_funnel_oracle_and_ordering_semantics(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH s0 AS (SELECT user_id, min(ts) AS t FROM events
-                    WHERE event_type = 'view' GROUP BY 1),
-        s1 AS (SELECT e.user_id, min(e.ts) AS t
-               FROM events e JOIN s0 USING (user_id)
-               WHERE e.event_type = 'click' AND e.ts > s0.t GROUP BY 1),
-        s2 AS (SELECT e.user_id, min(e.ts) AS t
-               FROM events e JOIN s1 USING (user_id)
-               WHERE e.event_type = 'purchase' AND e.ts > s1.t GROUP BY 1)
-        SELECT CAST(0 AS INT) AS step_idx, 'view' AS step,
-               (SELECT count(*) FROM s0) AS users
-        UNION ALL SELECT 1, 'click', (SELECT count(*) FROM s1)
-        UNION ALL SELECT 2, 'purchase', (SELECT count(*) FROM s2)
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["funnel"].oracle).fetchall()))
     assert got == want
     assert got[0][2] >= got[1][2] >= got[2][2] > 0   # monotone funnel
     t = dt.datetime(2024, 1, 1)
@@ -1220,20 +1187,8 @@ def test_retention_cohorts_oracle(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH first AS (
-          SELECT user_id, date_trunc('week', min(ts)) AS cohort
-          FROM events GROUP BY 1),
-        active AS (
-          SELECT DISTINCT user_id, date_trunc('week', ts) AS wk
-          FROM events)
-        SELECT CAST(epoch(cohort) AS BIGINT) AS cohort_epoch,
-               CAST(date_diff('day', cohort, wk) / 7 AS INT) AS offset,
-               count(*) AS active_users
-        FROM active JOIN first USING (user_id)
-        WHERE date_diff('day', cohort, wk) BETWEEN 0 AND 56
-        GROUP BY 1, 2
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["retention_cohorts"].oracle).fetchall()))
     assert got == want and len(got) > 0
 
 
@@ -1439,32 +1394,8 @@ def test_ngram_containment_oracle_and_asymmetry(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM "
                 f"'{sf_dir}/documents.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH ws AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                             w -> w <> '') AS w
-          FROM documents),
-        sh AS (
-          SELECT DISTINCT doc_id,
-                 unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                                       FOR i IN generate_series(1, len(w) - 2)])) AS s
-          FROM ws WHERE len(w) >= 3),
-        sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        shared AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
-        SELECT id_a, id_b, shared,
-               floor(CAST(shared AS DOUBLE) / sa.n * 1000000 + 0.5)
-                 / 1000000 AS cont_a_in_b,
-               floor(CAST(shared AS DOUBLE) / sb.n * 1000000 + 0.5)
-                 / 1000000 AS cont_b_in_a
-        FROM shared JOIN sizes sa ON sa.doc_id = id_a
-                    JOIN sizes sb ON sb.doc_id = id_b
-        WHERE CAST(shared AS DOUBLE) / sa.n >= 0.5
-           OR CAST(shared AS DOUBLE) / sb.n >= 0.5
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["ngram_containment"].oracle).fetchall()))
     assert got == want
     long_text = ("the quick brown fox jumps over the lazy dog while "
                  "rivers run past old stone mills every cold morning "
@@ -1494,16 +1425,8 @@ def test_exact_median_by_group_oracle(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW lineitem AS SELECT * FROM "
                 f"'{sf_dir}/lineitem.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH r AS (
-          SELECT l_linestatus, l_quantity,
-                 row_number() OVER (PARTITION BY l_linestatus
-                                    ORDER BY l_quantity) AS rn,
-                 count(*) OVER (PARTITION BY l_linestatus) AS n
-          FROM lineitem WHERE l_quantity IS NOT NULL)
-        SELECT l_linestatus, l_quantity AS median_lo
-        FROM r WHERE rn = (n + 1) // 2
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["exact_median_by_group"].oracle).fetchall()))
     assert got == want and len(got) > 0
     # odd-count hand case: median of [1, 7, 9] is 7; even [1,3,5,9] -> 3
     synth = spark.createDataFrame(
@@ -1713,13 +1636,8 @@ def test_heavy_hitters_exact_with_certificate(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        SELECT event_type AS value, count(*) AS cnt,
-               CAST(row_number() OVER (ORDER BY count(*) DESC, event_type)
-                    AS INT) AS rank
-        FROM events WHERE event_type IS NOT NULL
-        GROUP BY event_type ORDER BY cnt DESC, value LIMIT 3
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["heavy_hitters"].oracle).fetchall()))
     assert got == want and len(got) == 3
     # flat distribution + tiny capacity: no value can certify -> raises
     flat = spark.range(0, 5000).select(
@@ -1868,50 +1786,8 @@ def test_bm25_topk_oracle_and_ranking(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM "
                 f"'{sf_dir}/documents.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH ws AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                             w -> w <> '') AS l
-          FROM documents),
-        toks AS (SELECT doc_id, unnest(l) AS term FROM ws),
-        tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-        dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        stats AS (SELECT (SELECT count(*) FROM documents) AS n,
-                         (SELECT count(*) FROM toks) AS s),
-        qraw(query_id, qtext) AS (VALUES
-          (1, 'vector hash join'), (2, 'customer order stream'),
-          (3, 'zzzunseen fast fast')),
-        q AS (SELECT DISTINCT query_id,
-                     unnest(list_filter(string_split_regex(lower(qtext),
-                            '[^a-z0-9]+'), w -> w <> '')) AS term
-              FROM qraw),
-        m AS (SELECT q.query_id, tf.doc_id, tf.tf, dl.dl, dfreq.df,
-                     stats.n, stats.s,
-                     (2 * (n + 1) * 1000000) // (2 * df + 1) AS x
-              FROM tf JOIN q USING (term) JOIN dfreq USING (term)
-                   JOIN dl USING (doc_id) CROSS JOIN stats),
-        lg AS (SELECT *, length(ltrim(bin(x), '0')) - 1 AS e FROM m),
-        c AS (SELECT query_id, doc_id, tf,
-                     CAST(e AS BIGINT) * 1000
-                       + ((x - (1::BIGINT << e)) * 1000)
-                         // (1::BIGINT << e) - 19907 AS idf,
-                     250 + (750 * ((dl * 1000 * n) // s)) // 1000 AS ndl
-              FROM lg),
-        c2 AS (SELECT query_id, doc_id,
-                      (idf * tf * 2200 * 1000)
-                        // (tf * 1000 + (1200 * ndl) // 1000) AS contrib
-               FROM c),
-        sc AS (SELECT query_id, doc_id,
-                      CAST(sum(contrib) AS BIGINT) AS score_micro
-               FROM c2 GROUP BY 1, 2),
-        r AS (SELECT *, row_number() OVER (
-                PARTITION BY query_id
-                ORDER BY score_micro DESC, doc_id ASC) AS rank FROM sc)
-        SELECT query_id, doc_id, score_micro, CAST(rank AS INT) AS rank
-        FROM r WHERE rank <= 10
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["bm25_topk"].oracle).fetchall()))
     assert got == want and len(got) > 0
     # every query with any in-vocabulary term produced a full page
     from collections import Counter
@@ -1946,12 +1822,8 @@ def test_kfold_assign_oracle_balance_determinism(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM "
                 f"'{sf_dir}/documents.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        SELECT doc_id,
-               CAST(('0x' || substr(md5('42:' || CAST(doc_id AS VARCHAR)),
-                     1, 8))::BIGINT % 3 AS INT) AS fold
-        FROM documents
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["kfold_assign"].oracle).fetchall()))
     assert got == want and len(got) == 500
     assert {f for _i, f in got} == {0, 1, 2}
     # deterministic: a second independent plan produces the same folds
@@ -1988,24 +1860,8 @@ def test_time_weighted_avg_oracle_and_hand_case(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH r AS (
-          SELECT event_type, value,
-                 coalesce(lead(epoch_us(ts)) OVER (
-                     PARTITION BY event_type ORDER BY ts, event_id)
-                   - epoch_us(ts), 0) AS dur
-          FROM events WHERE value IS NOT NULL AND isfinite(value)
-            AND ts IS NOT NULL),
-        a AS (SELECT event_type,
-                     CAST(sum(CAST(floor(value * 1000) AS BIGINT) * dur)
-                          AS BIGINT) AS num,
-                     CAST(sum(dur) AS BIGINT) AS den
-              FROM r GROUP BY 1)
-        SELECT event_type, num, den,
-               CASE WHEN den = 0 THEN NULL
-                    ELSE CAST(num // den AS BIGINT) END AS twap_milli
-        FROM a
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["time_weighted_avg"].oracle).fetchall()))
     assert got == want and len(got) > 0
     # hand case: v=1.0 held 3s then v=5.0 held 1s -> (1000*3e6 + 5000*1e6)
     # div 4e6 = 2000; series 'solo' has one event -> den 0, NULL twap
@@ -2194,19 +2050,8 @@ def test_exact_quantiles_by_group_oracle(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH r AS (
-          SELECT event_type, value,
-                 row_number() OVER (PARTITION BY event_type
-                                    ORDER BY value) AS rn,
-                 count(*) OVER (PARTITION BY event_type) AS n
-          FROM events WHERE value IS NOT NULL),
-        q(q_milli) AS (VALUES (0), (250), (500), (750), (1000))
-        SELECT event_type, CAST(q_milli AS INT) AS q_milli,
-               value AS q_value
-        FROM r CROSS JOIN q
-        WHERE rn = greatest(1, (n * q_milli + 999) // 1000)
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["exact_quantiles_by_group"].oracle).fetchall()))
     assert got == want and len(got) > 0
     med = {(r[0], r[1]) for r in
            exact_median_by_group(ev, "event_type", "value").collect()}
@@ -2431,24 +2276,8 @@ def test_key_skew_report_oracle_and_salting_advice(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = [tuple(r) for r in con.execute("""
-        WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY 1),
-        r AS (SELECT cnt, row_number() OVER (ORDER BY cnt) AS rn,
-                     count(*) OVER () AS n FROM c),
-        q AS (SELECT
-                min(CASE WHEN rn = greatest(1, (n * 500 + 999) // 1000)
-                    THEN cnt END) AS p50_cnt,
-                min(CASE WHEN rn = greatest(1, (n * 990 + 999) // 1000)
-                    THEN cnt END) AS p99_cnt FROM r),
-        t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_rows,
-                     count(*) AS n_keys,
-                     CAST(max(cnt) AS BIGINT) AS max_cnt FROM c)
-        SELECT n_rows, n_keys, max_cnt, p50_cnt, p99_cnt,
-               (max_cnt * 1000) // n_rows AS top_share_milli,
-               greatest(1, (max_cnt * 200 + n_rows - 1) // n_rows)
-                 AS suggested_salts
-        FROM t CROSS JOIN q
-    """).fetchall()]
+    want = [tuple(r) for r in con.execute(
+        REGISTRY["key_skew_report"].oracle).fetchall()]
     assert got == want and len(got) == 1
 
     # synthetic: one key holds half the rows -> at parallelism 8 the hot
@@ -2646,42 +2475,8 @@ def test_fuzzy_join_damerau_oracle_and_hand_cases(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM "
                 f"'{sf_dir}/documents.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH l AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
-        r AS (SELECT doc_id + 100000 AS doc_id,
-                     text || ' zzzextra zzzmore' AS text FROM l),
-        uni AS (SELECT 'L' AS side, * FROM l
-                UNION ALL SELECT 'R', * FROM r),
-        ws AS (SELECT side, doc_id,
-                      list_filter(string_split_regex(lower(text),
-                                  '[^a-z0-9]+'), w -> w <> '') AS w
-               FROM uni),
-        sh AS (SELECT DISTINCT side, doc_id,
-                      unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-                             FOR i IN generate_series(1, len(w) - 2)])) AS s
-               FROM ws WHERE len(w) >= 3),
-        sizes AS (SELECT side, doc_id, count(*) AS n FROM sh
-                  GROUP BY 1, 2),
-        shared AS (
-          SELECT a.doc_id AS id_l, b.doc_id AS id_r, count(*) AS shared
-          FROM (SELECT * FROM sh WHERE side = 'L') a
-          JOIN (SELECT * FROM sh WHERE side = 'R') b ON a.s = b.s
-          GROUP BY 1, 2)
-        SELECT id_l AS left_doc_id, id_r AS right_doc_id,
-               CAST(shared AS BIGINT) AS shared,
-               CAST(sa.n AS BIGINT) AS na, CAST(sb.n AS BIGINT) AS nb,
-               CAST((shared * 1000)
-                    // (sa.n + sb.n - shared) AS BIGINT) AS jaccard_milli,
-               CAST(damerau_levenshtein(la.text, ra.text)
-                    AS BIGINT) AS damerau
-        FROM shared
-        JOIN (SELECT * FROM sizes WHERE side = 'L') sa ON sa.doc_id = id_l
-        JOIN (SELECT * FROM sizes WHERE side = 'R') sb ON sb.doc_id = id_r
-        JOIN l la ON la.doc_id = id_l
-        JOIN r ra ON ra.doc_id = id_r
-        WHERE (shared * 1000) // (sa.n + sb.n - shared) >= 1
-          AND damerau_levenshtein(la.text, ra.text) <= 40
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["fuzzy_join_damerau"].oracle).fetchall()))
     assert got == want and len(got) > 0
     # every planted twin (distance exactly 17 — the appended suffix)
     # survives both stages; a tighter max_edit keeps exactly the
@@ -3194,17 +2989,8 @@ def test_group_array_moving_avg_oracle_and_hand_cases(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        SELECT event_type,
-               CAST(row_number() OVER w AS INT) AS pos,
-               CAST(sum(CAST(floor(value * 1000) AS BIGINT)) OVER (
-                 w ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-                 AS BIGINT) // 5 AS avg_milli
-        FROM events
-        WHERE value IS NOT NULL AND isfinite(value) AND ts IS NOT NULL
-          AND event_id IS NOT NULL
-        WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["group_array_moving_avg"].oracle).fetchall()))
     assert got == want and len(got) > 0
 
     # hand case: n=2 — warm-up row STILL divides by 2 (the ClickHouse
@@ -3585,14 +3371,8 @@ def test_damerau_levenshtein_udf_duckdb_parity(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM "
                 f"'{sf_dir}/documents.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(damerau_levenshtein(substr(a.text, 1, 32),
-                                        substr(b.text, 1, 32))
-                    AS BIGINT) AS d
-        FROM documents a JOIN documents b ON a.doc_id < b.doc_id
-        WHERE a.doc_id < 24 AND b.doc_id < 24
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["damerau_pairs"].oracle).fetchall()))
     assert got == want and len(got) == 276
 
 
@@ -3690,15 +3470,8 @@ def test_byte_jaccard_e6_udf_duckdb_parity(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM "
                 f"'{sf_dir}/documents.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(floor(jaccard(substr(a.text, 1, 48),
-                                  substr(b.text, 1, 48))
-                    * 1000000 + 0.5) AS BIGINT) AS s
-        FROM documents a JOIN documents b ON a.doc_id < b.doc_id
-        WHERE a.doc_id < 40 AND b.doc_id < 40
-          AND length(a.text) > 0 AND length(b.text) > 0
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["byte_jaccard_pairs"].oracle).fetchall()))
     assert got == want and len(got) > 0
 
 

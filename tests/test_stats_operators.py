@@ -2143,23 +2143,8 @@ def test_group_array_intersect_oracle_and_hand_cases(spark, sf_dir):
                 .alias("types")))
     got = sorted(map(tuple, group_array_intersect(
         arr, "g", "types").collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH ud AS (SELECT user_id * 100
-                           + ((CAST(epoch(CAST(ts AS DATE)) AS BIGINT)
-                               // 604800) % 100 + 100) % 100 AS g,
-                           CAST(ts AS DATE) AS d, event_type
-                    FROM events
-                    WHERE user_id IS NOT NULL AND ts IS NOT NULL
-                      AND event_type IS NOT NULL
-                    GROUP BY 1, 2, 3),
-        days AS (SELECT g, CAST(count(DISTINCT d) AS BIGINT) AS rows
-                 FROM ud GROUP BY 1),
-        pe AS (SELECT g, event_type AS elem,
-                      CAST(count(DISTINCT d) AS BIGINT) AS c
-               FROM ud GROUP BY 1, 2)
-        SELECT g, elem, rows FROM pe JOIN days USING (g)
-        WHERE c = rows
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["group_array_intersect"].oracle).fetchall()))
     # 8 intersect rows over ~400 user-week groups at sf0.001 — most
     # weeks have NO every-day type (non-vacuous in both directions)
     assert got == want and len(got) >= 5
@@ -2546,18 +2531,8 @@ def test_brier_score_oracle_and_hand_cases(spark, sf_dir):
     # only needs finiteness (quantization IS the contract)
     got = sorted(map(tuple, brier_score(
         _sided(spark, sf_dir), "event_type", "value", "side").collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH b AS (SELECT event_type,
-                          CAST(floor(value * 1000) AS BIGINT) AS pm,
-                          CAST(((user_id % 2 + 2) % 2) AS BIGINT) AS y
-                   FROM events
-                   WHERE value IS NOT NULL AND isfinite(value)
-                     AND user_id IS NOT NULL)
-        SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-               CAST(sum((pm - 1000 * y) * (pm - 1000 * y))
-                    // count(*) AS BIGINT) AS brier_e6
-        FROM b GROUP BY 1
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["brier_score"].oracle).fetchall()))
     assert got == want and len(got) == 5
 
     def run(rows):

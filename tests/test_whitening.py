@@ -11,6 +11,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from clickhouse_hdfs_loader_spark.plans.queries import REGISTRY
+
 COV_SQL = """
     WITH q AS (SELECT vec_id AS rid,
                       generate_subscripts(embedding, 1) - 1 AS d2,
@@ -342,23 +344,8 @@ def test_feature_hashing_summary_golden(spark):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM "
                 f"'{sf01}/documents.parquet'")
-    want = [tuple(r) for r in con.execute("""
-        SELECT CAST(8804 AS BIGINT) AS n_rows,
-               CAST(1653 AS BIGINT) AS sum_w,
-               CAST(24915 AS BIGINT) AS sum_abs_w,
-               CAST(-201 AS BIGINT) AS sum_dim_w,
-               CAST(403705 AS BIGINT) AS sum_doc_w
-        WHERE (SELECT CASE WHEN count(*) = 500
-               AND sum(length(text)) = 149174
-               AND sum(doc_id) = 124750 THEN 1
-               ELSE error('feature_hashing_summary golden: the sf0.01 '
-                          || 'documents fixture drifted from the '
-                          || 'pinned content (need count 500, '
-                          || 'sum(length(text)) 149174, sum(doc_id) '
-                          || '124750) — re-derive the literals '
-                          || 'Spark-free') END
-               FROM documents) = 1
-    """).fetchall()]
+    want = [tuple(r) for r in con.execute(
+        REGISTRY["feature_hashing_summary"].oracle).fetchall()]
     assert got == want and len(got) == 1
 
 
