@@ -97,10 +97,11 @@ class ClickHouseClient:
         except (urllib.error.URLError, OSError):
             return False
 
-    def execute(self, sql: str) -> str:
-        """POST a statement; returns the raw response body (TabSeparated)."""
-        req = urllib.request.Request(self._url(), data=sql.encode("utf-8"),
-                                     method="POST")
+    def execute(self, sql: str | bytes) -> str:
+        """POST a statement — a ``bytes`` body as is, a ``str`` as UTF-8;
+        returns the raw response body (TabSeparated)."""
+        body = sql if isinstance(sql, bytes) else sql.encode("utf-8")
+        req = urllib.request.Request(self._url(), data=body, method="POST")
         try:
             with urllib.request.urlopen(req, timeout=self.timeout) as r:
                 return r.read().decode("utf-8")

@@ -100,7 +100,7 @@ class LifecycleManager:
         return get_client(host, self.http_port, user=self.user,
                           password=self.password)
 
-    def run(self, host: str, sql: str, tier: str = "ddl") -> str:
+    def run(self, host: str, sql: str | bytes, tier: str = "ddl") -> str:
         """POST ``sql`` to ``host`` under the ``tier`` retry ladder; returns
         the response body."""
         cli = self.client(host)

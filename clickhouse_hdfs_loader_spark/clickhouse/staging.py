@@ -26,9 +26,10 @@ an aborted attempt's table is simply never promoted — duplicate promotion
 is impossible without distributed coordination, which is the same
 guarantee level the reference achieves by disabling speculation.
 
-The batch policy — serialization, routing, per-shard buffers, flush cap —
-is owned by writer.py and shared with the direct mode; hosts, login, alive
-probe and retries come from the cluster handle
+The batch policy — the write tasks' projection, the wire lines built on
+Arrow, routing, per-shard buffers, flush cap — is owned by writer.py
+(``serialize_for_load``, ``shard_payloads``) and shared with the direct
+mode; hosts, login, alive probe and retries come from the cluster handle
 (``lifecycle.LifecycleManager``). This module owns only what differs: the
 temp-table target, one host per shard per task, and failures that raise (a
 retried task writes a fresh table, so re-raising is safe here).
@@ -45,8 +46,7 @@ from pyspark.sql import DataFrame
 
 from ..config import LoaderConfig
 from .lifecycle import TEMP_DATABASE, LifecycleManager
-from .writer import (insert_header, routed_lines, serialize_for_load,
-                     shard_batches)
+from .writer import insert_header, serialize_for_load, shard_payloads
 
 
 def temp_table_prefix(table: str, dt: str) -> str:
@@ -88,7 +88,7 @@ def stage_partitions(df: DataFrame, key_col: str | None, cluster: LifecycleManag
     scan tasks' ``mapInArrow``. Returns the promote plan."""
     from pyspark import TaskContext
 
-    serialized, payload_prefix = serialize_for_load(df, key_col, config)
+    serialized, wire = serialize_for_load(df, key_col, config)
     # once per host from the driver, not once per task per host; a down
     # replica is skipped here just as the tasks' probe skips it
     cluster.exec_all(f"CREATE DATABASE IF NOT EXISTS {TEMP_DATABASE}",
@@ -98,18 +98,18 @@ def stage_partitions(df: DataFrame, key_col: str | None, cluster: LifecycleManag
         ctx = TaskContext.get()
         temp = temp_table_name(prefix, ctx.partitionId(), ctx.attemptNumber())
         ddl = rewrite_ddl_to_striplog(create_ddl, TEMP_DATABASE, temp)
-        header = insert_header(TEMP_DATABASE, temp, config.clickhouse_format)
+        head = (insert_header(TEMP_DATABASE, temp, config.clickhouse_format)
+                + "\n").encode("utf-8")
         picked: dict[int, str] = {}   # shard → staging host, once per task
-        for shard, _n, payload in shard_batches(
-                routed_lines(batches, cluster.topology), config.batch_size,
-                payload_prefix):
+        for shard, _n, payload in shard_payloads(
+                batches, wire, cluster.topology.route, config.batch_size):
             if shard not in picked:
                 # a single down first-replica must not fail the staged load
                 host = cluster.first_alive(cluster.topology.nodes[shard].hosts)
                 if host not in picked.values():   # temp table once per host
                     cluster.run(host, ddl)
                 picked[shard] = host
-            cluster.run(picked[shard], f"{header}\n{payload}", tier="staged")
+            cluster.run(picked[shard], head + payload, tier="staged")
         # mapper output of W3: ("taskId@host", temp_table) pairs
         hosts = sorted(set(picked.values()))
         if hosts:

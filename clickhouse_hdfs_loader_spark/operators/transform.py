@@ -207,6 +207,12 @@ def wire_line_col(df: DataFrame, data_cols: list[str], sep: str,
     ``replace_char`` because payload rows join on ``\\n`` — then nulls →
     ``\\N`` and ``concat_ws``. Unsanitized tabs/newlines in a value would
     shift the row width or split the row on the TabSeparated wire.
+
+    The loader builds the same line on Arrow in its write tasks
+    (``clickhouse.writer.WireFormat.lines``); this JVM form is the
+    reference its parity test compares against. ``translate`` maps
+    characters by position, so it is exact only for a one-character
+    ``replace_char``.
     """
     string_cols = {f.name for f in df.schema.fields
                    if f.dataType.typeName() == "string"}

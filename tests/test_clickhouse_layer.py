@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import logging
 
+import numpy as np
+import pyarrow as pa
 import pytest
 
 from clickhouse_hdfs_loader_spark.clickhouse import client as client_mod
@@ -26,8 +28,9 @@ from clickhouse_hdfs_loader_spark.clickhouse.staging import (
     temp_table_prefix,
 )
 from clickhouse_hdfs_loader_spark.clickhouse.writer import (
+    WireFormat,
     insert_header,
-    shard_batches,
+    shard_payloads,
     write_direct,
 )
 from clickhouse_hdfs_loader_spark.config import LoaderConfig
@@ -462,37 +465,97 @@ def test_write_direct_sanitizes_wire_fields(spark, mocks):
 
 
 def test_write_direct_honours_replace_char(spark, mocks):
-    """``--replace-char`` reaches the wire: the in-field separator and
-    newline become the configured character, not the default space."""
-    cfg = LoaderConfig(batch_size=10, replace_char="_")
+    """``--replace-char`` reaches the wire: the in-field separator, newline
+    and CR each become the whole configured string — one character, none,
+    several or a non-ASCII one — and ``\\`` becomes ``/``."""
+    df = spark.createDataFrame(
+        [("k1", "a\tb\\c"), ("k2", "d\ne"), ("k3", "a\tb\\c\nd\re")],
+        ["k", "s"])
     topo = topo_of(mocks[:1])
-    df = spark.createDataFrame([("k1", "a\tb\\c"), ("k2", "d\ne")],
-                               ["k", "s"])
-    write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
-                 table="t")
-    rows = sorted(line for ins in mocks[0].inserts()
-                  for line in ins.splitlines()[1:])
-    assert rows == ["k1\ta_b/c", "k2\td_e"]
+    for rc in ("_", "", "--", "，"):
+        cfg = LoaderConfig(batch_size=10, replace_char=rc)
+        mocks[0].statements.clear()
+        write_direct(df, "k", cluster_of(topo, cfg), cfg, database="db",
+                     table="t")
+        rows = sorted(line for ins in mocks[0].inserts()
+                      for line in ins.splitlines()[1:])
+        assert rows == [f"k1\ta{rc}b/c", f"k2\td{rc}e",
+                        f"k3\ta{rc}b/c{rc}d{rc}e"], rc
+        if rc == "":
+            assert rows[2] == "k3\tab/cde"
+
+
+def test_wire_lines_sanitize_with_any_replace_string():
+    """``WireFormat.lines`` without Spark: on the string-typed columns the
+    separator, newline and CR each become the whole replace string and
+    ``\\`` becomes ``/``, all at once (a backslash replace string is not
+    turned into ``/``); other columns pass as they are; nulls become
+    ``\\N``. A sliced batch, an all-null column and large_string columns
+    give the same lines."""
+    values = ["a\tb\\c", "d\ne\rf", None, "数\\,"]
+
+    def sanitized(v, rc):
+        return "\\N" if v is None else "".join(
+            "/" if c == "\\" else rc if c in "\t\n\r" else c for c in v)
+
+    def raw(v):
+        return "\\N" if v is None else v
+
+    for typ in (pa.string(), pa.large_string()):
+        cols = [["k"] * 5, ["x", *values], [None] * 5, ["x", *values]]
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(c, typ) for c in cols], ["key", "c0", "c1", "c2"])
+        for rc in (" ", "\\", "", "$1", "--"):
+            wire = WireFormat("\t", rc, (True, True, False))
+            want = [f"{sanitized(v, rc)}\t\\N\t{raw(v)}" for v in values]
+            assert wire.lines(batch.slice(1)).to_pylist() == want, (typ, rc)
+
+
+def payloads(rows, batch_size, prefix="", cuts=()):
+    """``shard_payloads`` over ``(shard, line)`` rows handed to it as the
+    write task's Arrow batches, cut at the row positions ``cuts``: the key
+    column carries the shard number, which the route reads back."""
+    bounds = [0, *cuts, len(rows)]
+    batches = [pa.RecordBatch.from_arrays(
+        [pa.array([str(s) for s, _l in rows[a:b]], pa.string()),
+         pa.array([line for _s, line in rows[a:b]], pa.string())],
+        ["key", "c0"])
+        for a, b in zip(bounds, bounds[1:])]
+    wire = WireFormat("\t", " ", (True,), prefix.encode())
+    return [(s, n, p.decode()) for s, n, p in shard_payloads(
+        batches, wire, lambda keys: np.array([int(k) for k in keys]),
+        batch_size)]
 
 
 def test_shard_batches_clamps_orders_and_prefixes(monkeypatch):
-    """The per-shard batch loop both load modes share: a batch never
+    """The per-shard batch step both load modes share: a batch never
     exceeds FLUSH_CAP even when batch_size is larger, rows keep their
-    order within a shard, the tail flush emits the partial buffers, and
-    the WithNames prefix leads every payload."""
+    order within a shard, shards flush in the order of the row that
+    filled them, the tail flush emits the partial buffers in the order
+    their shards first appeared, and the
+    WithNames prefix leads every payload — however the rows arrive in
+    Arrow batches, a shard's cap crossed inside one batch or across two."""
     monkeypatch.setattr(writer, "FLUSH_CAP", 3)
     rows = [(i % 2, f"r{i}") for i in range(11)]   # shard 0: 6 rows, 1: 5
-    batches = list(shard_batches(rows, 100, prefix="k\tv\n"))
-    assert all(n <= 3 for _s, n, _p in batches)
-    assert [(s, n) for s, n, _p in batches] == [(0, 3), (1, 3), (0, 3), (1, 2)]
-    for shard in (0, 1):
-        sent = [line for s, _n, p in batches if s == shard
-                for line in p.split("\n")[1:]]
-        assert sent == [f"r{i}" for i in range(shard, 11, 2)]
-    for _s, n, payload in batches:
-        assert payload.startswith("k\tv\n")
-        assert len(payload.split("\n")) == n + 1
-    assert [n for _s, n, _p in shard_batches(rows, 2)] == [2, 2, 2, 2, 2, 1]
+    splits = [(), *[(c,) for c in range(1, 11)], (4, 7), tuple(range(1, 11))]
+    for cuts in splits:
+        batches = payloads(rows, 100, prefix="k\tv\n", cuts=cuts)
+        assert all(n <= 3 for _s, n, _p in batches)
+        assert [(s, n) for s, n, _p in batches] == \
+            [(0, 3), (1, 3), (0, 3), (1, 2)], cuts
+        for shard in (0, 1):
+            sent = [line for s, _n, p in batches if s == shard
+                    for line in p.split("\n")[1:]]
+            assert sent == [f"r{i}" for i in range(shard, 11, 2)]
+        for _s, n, payload in batches:
+            assert payload.startswith("k\tv\n")
+            assert len(payload.split("\n")) == n + 1
+        assert [n for _s, n, _p in payloads(rows, 2, cuts=cuts)] == \
+            [2, 2, 2, 2, 2, 1]
+        # the tail flush follows the order the shards first appeared in
+        swapped = [(1 - s, line) for s, line in rows[:10]]
+        assert [(s, n) for s, n, _p in payloads(swapped, 100, cuts=cuts)] \
+            == [(1, 3), (0, 3), (1, 2), (0, 2)]
 
 
 def test_write_direct_failure_counts_without_task_retry(spark, mocks):

@@ -4,6 +4,9 @@ quick-start worked example (doc/quick-start.md, FIXTURES.md §2)."""
 
 from __future__ import annotations
 
+from datetime import date, datetime
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,9 +16,13 @@ from clickhouse_hdfs_loader_spark.operators import transform as T
 
 
 def wire_lines(df, fmt="TabSeparated"):
-    """T10 — the loader's serialized wire line per row."""
-    return serialize_for_load(df, df.columns[0],
-                              LoaderConfig(clickhouse_format=fmt))[0]
+    """T10 — the loader's wire line per row, built as the write tasks
+    build it: ``serialize_for_load``'s projection, then
+    ``WireFormat.lines`` over its Arrow batches."""
+    serialized, wire = serialize_for_load(df, df.columns[0],
+                                          LoaderConfig(clickhouse_format=fmt))
+    return [line for batch in serialized.toArrow().to_batches()
+            for line in wire.lines(batch).to_pylist()]
 
 
 def test_tokenize_trailing_delimiter(spark):
@@ -84,9 +91,9 @@ def test_additional_columns_and_serialize(spark):
     df = spark.createDataFrame([("a", 1)], ["s", "i"])
     out = T.append_additional_columns(df, ("2017-01-07", "9"))
     assert out.columns == ["s", "i", "addcol0", "addcol1"]
-    line = wire_lines(out, "TabSeparated").first()["line"]
+    line = wire_lines(out, "TabSeparated")[0]
     assert line == "a\t1\t2017-01-07\t9"
-    csv = wire_lines(out, "CSV").first()["line"]
+    csv = wire_lines(out, "CSV")[0]
     assert csv == "a,1,2017-01-07,9"
 
 
@@ -111,8 +118,38 @@ def test_serialize_nulls_as_marker(spark):
     # keep the column count stable (wire-format width invariant)
     df = spark.createDataFrame([("a", None, 1), (None, "b", None)],
                                ["s1", "s2", "i"])
-    lines = sorted(r["line"] for r in wire_lines(df).collect())
+    lines = sorted(wire_lines(df))
     assert lines == ["\\N\tb\t\\N", "a\t\\N\t1"]
+
+
+@pytest.mark.parametrize(
+    "fmt", ["TabSeparated", "CSV", "TabSeparatedWithNamesAndTypes"])
+def test_arrow_wire_lines_match_jvm_wire_line_col(spark, fmt):
+    """The write tasks' Arrow wire lines equal the JVM ``wire_line_col``
+    line for every row: sanitized separators, backslashes, newlines and
+    CRs, nulls and a literal ``\\N``, empty and non-ASCII strings, and
+    Spark's cast-to-string formatting of non-string columns."""
+    schema = ("id INT, s STRING, t STRING, i LONG, d DOUBLE, "
+              "m DECIMAL(10,3), day DATE, ts TIMESTAMP, b BOOLEAN")
+    ts = datetime(2017, 1, 7, 12, 0, 1, 500)
+    df = spark.createDataFrame([
+        (1, "a\tb,c", "c\\d", 7, 1.5, Decimal("1.250"), date(2017, 1, 7),
+         ts, True),
+        (2, "e\nf\rg", None, None, None, None, None, None, None),
+        (3, "\\N", "", -3, 1e20, Decimal("-0.001"), date(1970, 1, 1),
+         datetime(1999, 12, 31, 23, 59, 59), False),
+        (4, "数据\tключ", "café\r\n\\", 2**40, -0.25, Decimal("0.000"),
+         date(2024, 2, 29), ts, None),
+        (5, None, ",\t,", 0, float("nan"), Decimal("1234567.5"), None, ts,
+         True),
+    ], schema)
+    ref = [r[0] for r in df.select(T.wire_line_col(
+        df, df.columns, T.wire_separator(fmt))).collect()]
+    got = wire_lines(df, fmt)
+    assert sorted(got) == sorted(ref) and len(got) == 5
+    if fmt == "TabSeparated":
+        assert sorted(got)[0] == ("1\ta b,c\tc/d\t7\t1.5\t1.250\t2017-01-07\t"
+                                  "2017-01-07 12:00:01.0005\ttrue")
 
 
 def test_permissive_csv_reject_accounting(spark, tmp_path):
