@@ -33,11 +33,11 @@ Spark shape: one ``mapInArrow`` over the projection, so the scan tasks
 themselves serialize, route (``ClusterTopology.route``), batch and write —
 the reference's map-only job with 0 reducers. No per-row Python runs in a
 write task: each Arrow batch is sanitized, joined, routed and gathered by
-``pyarrow.compute`` and numpy; only the key column becomes a list, for the
-murmur router. Each task keeps per-shard buffers, the exact
-HostRecordsCache design, with connections from the per-process client
-cache; write parallelism is the input split count. Each task yields its
-``(ok, failed)`` counts as one row.
+``pyarrow.compute`` and numpy, the murmur router hashing the key column's
+Arrow buffers. Each task keeps per-shard buffers, the exact HostRecordsCache
+design, with connections from the per-process client cache; write
+parallelism is the input split count. Each task yields its ``(ok, failed)``
+counts as one row.
 
 Speculative execution must stay off (session.py: spark.speculation=false,
 mirroring ClickhouseHdfsLoader.java:194-197) or retried tasks double-insert
@@ -151,20 +151,20 @@ def serialize_for_load(df: DataFrame, key_col: str | None,
 
 
 def shard_payloads(batches: Iterable[pa.RecordBatch], wire: WireFormat,
-                   route: Callable[[list], np.ndarray],
+                   route: Callable[[pa.Array], np.ndarray],
                    batch_size: int) -> Iterator[tuple[int, int, bytes]]:
     """Per-shard buffers over a write task's Arrow batches
     (HostRecordsCache.java:6-17): yield ``(shard, n_rows, payload)``
     whenever a shard's buffer reaches ``min(batch_size, FLUSH_CAP)`` rows,
     in the order of the row where each shard filled, then the partial
     buffers in the order their shards first appeared. ``route`` maps the
-    batch's keys to shard indexes; rows keep their order within a shard;
+    batch's key column to shard indexes; rows keep their order within a shard;
     each payload is ``wire.payload`` of its lines."""
     cap = max(1, min(batch_size, FLUSH_CAP))
     pending: dict[int, list[pa.Array]] = {}   # shard → unflushed line chunks
     for batch in batches:
         lines = wire.lines(batch)
-        shards = route(batch.column(0).to_pylist())
+        shards = route(batch.column(0))
         present, first = np.unique(shards, return_index=True)
         full = []   # (row at which the shard filled, shard, its line chunks)
         for shard in present[np.argsort(first)].tolist():

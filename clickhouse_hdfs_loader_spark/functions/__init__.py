@@ -11,7 +11,7 @@ Reference parity: the routing hash is the loader's P1 shard hash
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
 
@@ -19,10 +19,12 @@ def register_sql_functions(spark: SparkSession) -> None:
     """Register engine UDFs in the session's SQL function registry:
 
     - ``guava_shard_code(key)`` — murmur3_128 ``asInt() & MAX_INT``
-      (reference P1 routing hash, Guava-parity, vectorized numpy)
+      (reference P1 routing hash, Guava-parity, vectorized numpy);
+      NULL for a NULL key
     - ``guava_shard(key, total_weight)`` — weighted slot in
       ``[0, total_weight)``: ``guava_shard_code(key) % total_weight``,
-      the value the cumulative-weight walk maps onto a shard
+      the value the cumulative-weight walk maps onto a shard; NULL for a
+      NULL key
     - ``winnow_size(text)`` — number of winnowing fingerprints
 
     Safe to call more than once per session (re-registration replaces).
@@ -33,19 +35,24 @@ def register_sql_functions(spark: SparkSession) -> None:
     from .fingerprint import winnow_batch
     from .murmur_np import guava_shard_codes
 
-    @F.pandas_udf(LongType())
-    def _code(keys: pd.Series) -> pd.Series:
-        return pd.Series(guava_shard_codes([str(k) for k in keys]))
+    def codes(keys: pa.Array):
+        keys = keys.cast(pa.string())
+        return guava_shard_codes(keys), keys.is_null().to_numpy(zero_copy_only=False)
 
-    @F.pandas_udf(LongType())
-    def _slot(keys: pd.Series, weights: pd.Series) -> pd.Series:
-        codes = guava_shard_codes([str(k) for k in keys])
-        return pd.Series(codes % weights.astype("int64").to_numpy())
+    @F.arrow_udf(LongType())
+    def _code(keys: pa.Array) -> pa.Array:
+        code, null = codes(keys)
+        return pa.array(code, mask=null)
 
-    @F.pandas_udf(IntegerType())
-    def _winnow_size(texts: pd.Series) -> pd.Series:
-        fps = winnow_batch(texts.tolist())
-        return pd.Series([len(f) for f in fps], dtype="int32")
+    @F.arrow_udf(LongType())
+    def _slot(keys: pa.Array, weights: pa.Array) -> pa.Array:
+        code, null = codes(keys)
+        return pa.array(code % weights.cast(pa.int64()).to_numpy(), mask=null)
+
+    @F.arrow_udf(IntegerType())
+    def _winnow_size(texts: pa.Array) -> pa.Array:
+        fps = winnow_batch(texts.to_pylist())
+        return pa.array([len(f) for f in fps], pa.int32())
 
     spark.udf.register("guava_shard_code", _code)
     spark.udf.register("guava_shard", _slot)

@@ -11,8 +11,9 @@ Spark design: the loader routes inside its write tasks, as the
 reference's mapper does — ``ClusterTopology.route`` maps a batch of keys
 to node indexes with the numpy murmur (functions/murmur_np), no shuffle.
 ``assign_shard`` exposes the same placement as a column through an
-Arrow-batched pandas UDF for queries (Spark's ``F.hash`` is murmur3_32 and
-cannot reproduce Guava's placement — SURVEY §7 "hash parity").
+Arrow-batched UDF (``F.arrow_udf``) for queries (Spark's ``F.hash`` is
+murmur3_32 and cannot reproduce Guava's placement — SURVEY §7 "hash
+parity").
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
@@ -62,20 +63,20 @@ class ClusterTopology:
             table.extend([i] * n.shard_weight)
         return table
 
-    def route(self, keys: "list[str | None]") -> np.ndarray:
-        """Node index in ``nodes`` for each key (Guava-parity placement)."""
+    def route(self, keys: pa.Array) -> np.ndarray:
+        """Node index in ``nodes`` for each key of a string column
+        (Guava-parity placement)."""
         slots = shard_slots(keys, self.total_weight)
         return np.asarray(self.slot_to_shard_index())[slots]
 
 
-def shard_slot_udf(total_weight: int) -> "F.pandas_udf":
-    """Vectorized ``key → murmur-code % total_weight``; null/blank keys get a
-    per-row random route exactly like the reference's UUID fallback."""
-    @F.pandas_udf(IntegerType())
-    def _slot(keys: pd.Series) -> pd.Series:
-        # the column is cast to string upstream, so tolist() already
-        # yields str/None — no per-row str() pass
-        return pd.Series(shard_slots(keys.tolist(), total_weight).astype("int32"))
+def shard_slot_udf(total_weight: int) -> "F.arrow_udf":
+    """Vectorized ``key → murmur-code % total_weight`` over the string key
+    column; null/blank keys get a per-row random route exactly like the
+    reference's UUID fallback."""
+    @F.arrow_udf(IntegerType())
+    def _slot(keys: pa.Array) -> pa.Array:
+        return pa.array(shard_slots(keys, total_weight).astype("int32"))
 
     return _slot
 
@@ -85,7 +86,7 @@ def assign_shard(df: DataFrame, key_col: str, topology: ClusterTopology,
     """Adds ``out_col`` = node index in ``topology.nodes`` for each row.
 
     ``parity=True`` (default) reproduces the reference's Guava murmur3_128
-    placement exactly (pandas UDF). ``parity=False`` routes with the
+    placement exactly (Arrow UDF). ``parity=False`` routes with the
     JVM-native ``xxhash64`` — same weighted distribution, different
     placement — for loads where cross-engine placement parity doesn't
     matter and routing must stay off the Python path entirely (~10× the

@@ -89,20 +89,6 @@ def null_normalize(df: DataFrame, string_cols: set[str] | None = None,
     return df.select(*out)
 
 
-def sanitize_fields(df: DataFrame, sep: str = "|", replace_char: str = " ",
-                    cols: list[str] | None = None) -> DataFrame:
-    """T5 — replace in-field delimiter with ``replace_char`` and ``\\``→``/``
-    (AbstractClickhouseLoaderMapper.java:201). Only needed when serializing
-    to a delimited wire format; a typed writer escapes on its own.
-    """
-    targets = cols or [f.name for f in df.schema.fields
-                       if f.dataType.typeName() == "string"]
-    out = df
-    for name in targets:
-        out = out.withColumn(name, F.translate(F.col(name), sep + "\\", replace_char + "/"))
-    return out
-
-
 def extract_hive_partitions(path: str) -> list[tuple[str, str]]:
     """T6 (driver side) — ordered ``k=v`` pairs parsed from an input path,
     same regex walk as AbstractClickhouseLoaderMapper.java:658-676.

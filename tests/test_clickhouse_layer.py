@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import logging
 
-import numpy as np
 import pyarrow as pa
 import pytest
 
@@ -523,7 +522,7 @@ def payloads(rows, batch_size, prefix="", cuts=()):
         for a, b in zip(bounds, bounds[1:])]
     wire = WireFormat("\t", " ", (True,), prefix.encode())
     return [(s, n, p.decode()) for s, n, p in shard_payloads(
-        batches, wire, lambda keys: np.array([int(k) for k in keys]),
+        batches, wire, lambda keys: keys.cast(pa.int64()).to_numpy(),
         batch_size)]
 
 

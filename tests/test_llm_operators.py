@@ -1667,19 +1667,8 @@ def test_event_transitions_oracle_and_tiebreak(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH ordered AS (
-          SELECT event_type AS from_type,
-                 lead(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-          FROM events),
-        c AS (SELECT from_type, to_type, count(*) AS n
-              FROM ordered WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        t AS (SELECT from_type, sum(n) AS tot FROM c GROUP BY 1)
-        SELECT c.from_type, c.to_type, CAST(n AS BIGINT) AS n,
-               CAST((n * 1000) // tot AS BIGINT) AS p_milli
-        FROM c JOIN t USING (from_type)
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["event_transitions"].oracle).fetchall()))
     assert got == want and len(got) > 0
     # per-row normalization: milli probs over a from_type sum to <= 1000
     # and within 1 milli per to_type of it (pure floor loss)
@@ -2175,32 +2164,8 @@ def test_linreg_by_group_oracle_and_perfect_line(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH b AS (
-          SELECT event_type, epoch_us(ts) AS us,
-                 CAST(floor(value * 1000) AS BIGINT) AS y
-          FROM events WHERE value IS NOT NULL),
-        g AS (SELECT event_type, min(us) AS us0 FROM b GROUP BY 1),
-        x AS (SELECT event_type, (us - us0) // 1000000 AS x, y
-              FROM b JOIN g USING (event_type)),
-        s AS (SELECT event_type, count(*) AS n,
-                     CAST(sum(x) AS BIGINT) AS sx,
-                     CAST(sum(y) AS BIGINT) AS sy,
-                     CAST(sum(x * y) AS BIGINT) AS sxy,
-                     CAST(sum(x * x) AS BIGINT) AS sxx
-              FROM x GROUP BY 1)
-        SELECT event_type, CAST(n AS BIGINT) AS n, sx, sy, sxy, sxx,
-               CASE WHEN (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) = 0.0
-                    THEN NULL
-                    ELSE CAST(floor((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                               - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                              * 1000.0
-                              / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                                 - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                         AS BIGINT) END AS slope_micro_per_s
-        FROM s
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["linreg_by_group"].oracle).fetchall()))
     assert got == want and len(got) > 0
 
     t0 = dt.datetime(2024, 1, 1)
@@ -2511,24 +2476,8 @@ def test_exact_weighted_quantiles_oracle_and_consistency(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH b AS (
-          SELECT event_type, value, (event_id % 5) + 1 AS w
-          FROM events WHERE value IS NOT NULL),
-        r AS (
-          SELECT event_type, value, w,
-                 sum(w) OVER (PARTITION BY event_type ORDER BY value
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS cum,
-                 sum(w) OVER (PARTITION BY event_type) AS tot
-          FROM b),
-        q(q_milli) AS (VALUES (250), (500), (750))
-        SELECT event_type, CAST(q_milli AS INT) AS q_milli,
-               value AS q_value
-        FROM r CROSS JOIN q
-        WHERE cum >= greatest(1, (tot * q_milli + 999) // 1000)
-          AND cum - w < greatest(1, (tot * q_milli + 999) // 1000)
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["exact_weighted_quantiles_by_group"].oracle).fetchall()))
     assert got == want and len(got) > 0
 
     # all-equal weights degenerate to the unweighted exact quantiles
@@ -2651,19 +2600,8 @@ def test_retention_flags_oracle_and_anchor_semantics(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH f AS (
-          SELECT user_id,
-                 max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS f0,
-                 max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS f1,
-                 max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   AS f2
-          FROM events GROUP BY 1)
-        SELECT 0 AS cond_idx, 'view' AS cond,
-               CAST(sum(f0) AS BIGINT) AS users FROM f
-        UNION ALL SELECT 1, 'click', CAST(sum(f0 * f1) AS BIGINT) FROM f
-        UNION ALL SELECT 2, 'purchase', CAST(sum(f0 * f2) AS BIGINT) FROM f
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["retention_flags"].oracle).fetchall()))
     assert got == want and len(got) == 3
     by_idx = {i: u for i, _c, u in got}
     assert by_idx[0] >= by_idx[1] and by_idx[0] >= by_idx[2] > 0
@@ -2873,15 +2811,8 @@ def test_heavy_hitters_weighted_oracle_certificate_and_guards(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        SELECT event_type AS value,
-               CAST(sum((event_id % 5) + 1) AS BIGINT) AS weight,
-               CAST(row_number() OVER (
-                 ORDER BY sum((event_id % 5) + 1) DESC, event_type)
-                 AS INT) AS rank
-        FROM events WHERE event_type IS NOT NULL
-        GROUP BY event_type ORDER BY weight DESC, value LIMIT 3
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["heavy_hitters_weighted"].oracle).fetchall()))
     assert got == want and len(got) == 3
 
     # unit weights degenerate to the unweighted operator exactly
@@ -2942,17 +2873,8 @@ def test_group_array_moving_sum_oracle_and_hand_case(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"'{sf_dir}/events.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        SELECT event_type,
-               CAST(row_number() OVER w AS INT) AS pos,
-               CAST(sum(CAST(floor(value * 1000) AS BIGINT)) OVER (
-                 w ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-                 AS BIGINT) AS moving_milli
-        FROM events
-        WHERE value IS NOT NULL AND isfinite(value) AND ts IS NOT NULL
-          AND event_id IS NOT NULL
-        WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["group_array_moving_sum"].oracle).fetchall()))
     assert got == want and len(got) > 0
 
     # hand case: values 1,2,3,4 with n=2 -> sums 1000,3000,5000,7000;

@@ -62,7 +62,10 @@ def test_shard_code_non_negative():
 
 def test_numpy_parity_with_scalar_hypothesis():
     """Vectorized murmur (functions/murmur_np) is bit-exact with the
-    golden-verified scalar implementation across arbitrary unicode."""
+    golden-verified scalar implementation across arbitrary unicode, fed as
+    a list and as sliced (non-zero offset) ``string`` and ``large_string``
+    Arrow arrays."""
+    import pyarrow as pa
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -70,12 +73,16 @@ def test_numpy_parity_with_scalar_hypothesis():
         guava_shard_codes,
     )
 
-    @given(st.lists(st.text(max_size=48), min_size=1, max_size=50))
+    text = st.text(max_size=48)
+
+    @given(st.lists(text, min_size=1, max_size=50), text, text)
     @settings(max_examples=150, deadline=None)
-    def check(keys):
-        got = list(guava_shard_codes(keys))
+    def check(keys, before, after):
         want = [guava_shard_code(k) for k in keys]
-        assert got == want
+        assert list(guava_shard_codes(keys)) == want
+        for typ in (pa.string(), pa.large_string()):
+            arr = pa.array([before, *keys, after], typ).slice(1, len(keys))
+            assert list(guava_shard_codes(arr)) == want
 
     check()
 
@@ -90,9 +97,9 @@ def test_numpy_parity_on_goldens():
 
 
 def test_numpy_bulk_encode_fallback_non_bmp():
-    """The bulk-encode fast path detects non-BMP keys (1 code point, 4
-    UTF-16 bytes — the joined-encode length check fails) and falls back to
-    per-key encodes, staying bit-exact; mixed batches included."""
+    """Non-BMP keys (1 code point, 2 UTF-16 code units from a 4-byte UTF-8
+    lead) take the same bulk-encode path as every key and stay bit-exact;
+    mixed batches included."""
     from clickhouse_hdfs_loader_spark.functions.murmur_np import (
         guava_shard_codes,
     )

@@ -4,6 +4,8 @@ cumulative walk, and partition co-location."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+
 from clickhouse_hdfs_loader_spark.functions.murmur import guava_shard_code
 from clickhouse_hdfs_loader_spark.operators.sharding import (
     ClusterTopology,
@@ -45,6 +47,14 @@ def test_blank_key_random_route(spark):
     assert shards.issubset({0, 1, 2}) and len(shards) >= 2
     routed = set(t.route([""] * 100 + [None] * 100).tolist())
     assert routed.issubset({0, 1, 2}) and len(routed) >= 2
+    # the Arrow key column: real keys keep their Guava shard, blank ones
+    # (null or "", not whitespace) spread
+    real = [f"key-{i}" for i in range(50)] + [" "]
+    col = pa.array(real + [None, ""] * 100, pa.large_string())
+    routed = t.route(col).tolist()
+    assert routed[:len(real)] == [guava_shard_code(k) % 3 for k in real]
+    assert set(routed[len(real):]).issubset({0, 1, 2})
+    assert len(set(routed[len(real):])) >= 2
 
 
 def test_repartition_colocates_shards(spark):

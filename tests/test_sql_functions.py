@@ -13,15 +13,19 @@ from .test_murmur import GOLDEN
 
 def test_sql_guava_shard_code_matches_goldens(spark):
     register_sql_functions(spark)
-    keys = [k for k, _, _ in GOLDEN if k]  # skip "": SQL NULL-vs-empty noise
-    df = spark.createDataFrame([(k,) for k in keys], ["key"])
+    keys = [k for k, _, _ in GOLDEN] + [None]
+    df = spark.createDataFrame([(k,) for k in keys], "key string")
     df.createOrReplaceTempView("golden_keys")
     rows = spark.sql(
         "SELECT key, guava_shard_code(key) AS code, "
         "guava_shard(key, 7) AS slot FROM golden_keys"
     ).collect()
     expected = {k: a & 0x7FFFFFFF for k, a, _ in GOLDEN}
+    assert len(rows) == len(keys)
     for r in rows:
+        if r.key is None:   # a NULL key has no code, not the code of "None"
+            assert r.code is None and r.slot is None
+            continue
         assert r.code == expected[r.key], r.key
         assert r.slot == expected[r.key] % 7, r.key
 

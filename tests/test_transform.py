@@ -71,13 +71,6 @@ def test_null_normalize_escape_false_keeps_marker(spark):
     assert sorted(r["s"] for r in out) == ["\\N", "\\N", "v"]
 
 
-def test_sanitize_fields(spark):
-    # AbstractClickhouseLoaderMapper.java:201 — sep→replace_char, \ → /
-    df = spark.createDataFrame([("a|b\\c",)], ["s"])
-    out = T.sanitize_fields(df, sep="|", replace_char=" ").first()
-    assert out["s"] == "a b/c"
-
-
 def test_hive_partition_extraction_and_append(spark):
     path = "/data/hive/t1/dt=2017-01-07/hour=12/part-0000"
     assert T.extract_hive_partitions(path) == [("dt", "2017-01-07"), ("hour", "12")]
