@@ -1,22 +1,3 @@
 """PySpark-native engine with the capabilities of jaykelin/clickhouse-hdfs-loader."""
 
 __version__ = "0.1.0"
-
-
-def _register_portable_pickling() -> None:
-    """Pickle worker-side modules BY VALUE so UDF closures survive on
-    executors that can't import this package (the round driver may launch
-    the session from any CWD; local-mode Python workers inherit the JVM's
-    original PYTHONPATH, not the driver's sys.path)."""
-    try:
-        from pyspark import cloudpickle
-
-        from .functions import fingerprint, murmur, murmur_np
-        from .operators import multimodal
-        for mod in (murmur, murmur_np, fingerprint, multimodal):
-            cloudpickle.register_pickle_by_value(mod)
-    except Exception:  # pragma: no cover — best-effort portability shim
-        pass
-
-
-_register_portable_pickling()

@@ -11,6 +11,7 @@ Reference parity: the routing hash is the loader's P1 shard hash
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import SparkSession
 
@@ -24,7 +25,9 @@ def register_sql_functions(spark: SparkSession) -> None:
     - ``guava_shard(key, total_weight)`` — weighted slot in
       ``[0, total_weight)``: ``guava_shard_code(key) % total_weight``,
       the value the cumulative-weight walk maps onto a shard; NULL for a
-      NULL key
+      NULL key or a NULL weight; a weight below 1 raises, naming it (a
+      cluster's total weight is at least 1, and Spark's ANSI ``%`` also
+      raises on a zero divisor)
     - ``winnow_size(text)`` — number of winnowing fingerprints
 
     Safe to call more than once per session (re-registration replaces).
@@ -47,7 +50,14 @@ def register_sql_functions(spark: SparkSession) -> None:
     @F.arrow_udf(LongType())
     def _slot(keys: pa.Array, weights: pa.Array) -> pa.Array:
         code, null = codes(keys)
-        return pa.array(code % weights.cast(pa.int64()).to_numpy(), mask=null)
+        weights = weights.cast(pa.int64())
+        null |= weights.is_null().to_numpy(zero_copy_only=False)
+        weight = weights.fill_null(1).to_numpy()
+        bad = weight[~null & (weight < 1)]
+        if bad.size:
+            raise ValueError(
+                f"guava_shard: total_weight must be >= 1, got {bad[0]}")
+        return pa.array(code % np.where(null, 1, weight), mask=null)
 
     @F.arrow_udf(IntegerType())
     def _winnow_size(texts: pa.Array) -> pa.Array:

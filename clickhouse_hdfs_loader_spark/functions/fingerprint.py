@@ -7,15 +7,15 @@ hashes, keeping rightmost minima. Deterministic, so fingerprints are
 stable across runs and machines.
 
 This is the one text op that is genuinely iterative per document, so it
-runs as an Arrow-batched pandas UDF (SURVEY §7: pandas UDFs only where
-built-ins can't express the semantics). The md5/exact fingerprints in
+runs as an Arrow UDF (SURVEY §7: Python UDFs only where built-ins
+can't express the semantics). The md5/exact fingerprints in
 functions/text.py stay fully native.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
@@ -159,8 +159,9 @@ def winnow_batch(texts: list, k: int = 8, w: int = 4) -> list:
 
 
 def winnow_udf(k: int = 8, w: int = 4) -> Column:
-    @F.pandas_udf(ArrayType(LongType()))
-    def _winnow(texts: pd.Series) -> pd.Series:
-        return pd.Series(winnow_batch(texts.tolist(), k, w))
+    @F.arrow_udf(ArrayType(LongType()))
+    def _winnow(texts: pa.Array) -> pa.Array:
+        return pa.array(winnow_batch(texts.to_pylist(), k, w),
+                        pa.list_(pa.int64()))
 
     return _winnow

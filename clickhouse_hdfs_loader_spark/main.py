@@ -18,6 +18,8 @@ HTTP; step 5 is the only cluster-scale operation.
 
 from __future__ import annotations
 
+from urllib.parse import urlsplit
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .clickhouse.client import get_client
@@ -30,11 +32,11 @@ from .sources import catalog
 
 
 def _parse_connect(connect: str) -> tuple[str, int, str]:
-    """``jdbc:clickhouse://host:port/db`` → (host, http_port, database)."""
-    body = connect.split("://", 1)[-1]
-    hostport, _, db = body.partition("/")
-    host, _, port = hostport.partition(":")
-    return host, int(port or 8123), db or "default"
+    """``jdbc:clickhouse://host:port/db`` → (host, http_port, database);
+    an IPv6 host is bracketed, ``jdbc:clickhouse://[::1]:8124/db``."""
+    url = urlsplit("//" + connect.split("://", 1)[-1])
+    return (url.hostname or "", url.port or 8123,
+            url.path.lstrip("/") or "default")
 
 
 def read_input(spark: SparkSession, config: LoaderConfig,

@@ -1270,7 +1270,7 @@ _WINNOW_CASE = ("CASE b.i - a.i " + " ".join(
     FROM documents d LEFT JOIN counts c ON c.doc_id = d.doc_id
 """)
 def winnow_fingerprint(spark, sf_dir):
-    """Winnowing rolling-hash fingerprints (SIGMOD'03) — pandas-UDF
+    """Winnowing rolling-hash fingerprints (SIGMOD'03) — Arrow-UDF
     iterative op; the deterministic hash lets DuckDB replay it in SQL."""
     from ..functions.fingerprint import winnow_udf
     d = _t(spark, sf_dir, "documents")

@@ -12,6 +12,19 @@ Scale posture (100 TB / 1000 executors): AQE enabled for runtime shuffle
 coalescing + skew-join splitting, broadcast threshold left to Spark (dims
 like region/nation are broadcast automatically; big joins hint
 explicitly), Arrow enabled so the few pandas UDFs are batch-transferred.
+
+How the package reaches Spark's Python workers: the UDFs and the
+``mapInArrow`` / ``applyInPandas`` functions Spark sends to them refer to
+this package's modules by name, so each worker imports the package.
+:func:`ship_package` prepends the package's parent directory to the
+session's worker environment (``SparkContext.environment["PYTHONPATH"]``),
+which PySpark reads each time it wraps a Python function. That is enough
+in local mode, where the workers run on the session's own machine.
+``get_spark`` calls it on the session it returns, and
+``__spark_entry__.py`` calls it on a session someone else built. On a
+cluster the executors need their own copy: ``spark-submit --py-files <zip
+of clickhouse_hdfs_loader_spark>`` or the package installed as a wheel on
+every node.
 """
 
 from __future__ import annotations
@@ -19,6 +32,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the ``clickhouse_hdfs_loader_spark`` package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def ship_package(spark: SparkSession) -> SparkSession:
+    """Put this package on the Python workers' import path; idempotent.
+
+    Python functions wrapped before this call keep the environment they
+    were wrapped with, so call it before building any query.
+    """
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
+    return spark
 
 
 def get_spark(
@@ -52,4 +81,4 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return ship_package(builder.getOrCreate())

@@ -1042,10 +1042,10 @@ def test_lsh_topk_arrow_kernel_parity(spark, sf_dir):
 
 
 def test_bigram_likelihood_oracle_and_discrimination(spark, sf_dir):
-    """In-test DuckDB oracle (same rigor as the graded harness, minus the
-    window slot): the full train→score pipeline replays exactly in SQL on
-    the real corpus. Discrimination: a doc of common continuations scores
-    above a shuffled-word doc under the same model."""
+    """The graded registry oracle, called the way the registry query
+    calls the operator: the full train→score pipeline replays exactly in
+    SQL on the real corpus. Discrimination: a doc of common continuations
+    scores above a shuffled-word doc under the same model."""
     import duckdb
     from clickhouse_hdfs_loader_spark.operators.corpus import (
         bigram_likelihood)
@@ -1055,35 +1055,8 @@ def test_bigram_likelihood_oracle_and_discrimination(spark, sf_dir):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM "
                 f"'{sf_dir}/documents.parquet'")
-    want = sorted(map(tuple, con.execute("""
-        WITH ws AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                             w -> w <> '') AS l
-          FROM documents),
-        toks AS (SELECT doc_id, generate_subscripts(l, 1) AS i, l FROM ws),
-        bg AS (
-          SELECT doc_id, l[i] || ' ' || l[i+1] AS bg
-          FROM toks WHERE i < len(l)),
-        c2 AS (SELECT bg, count(*) AS c2 FROM bg GROUP BY bg),
-        c1 AS (SELECT string_split(bg, ' ')[1] AS w1, sum(c2) AS c1
-               FROM c2 GROUP BY 1),
-        model AS (
-          SELECT bg, CAST(floor(c2 * 1000000.0 / c1) AS BIGINT) AS q
-          FROM c2 JOIN c1 ON string_split(c2.bg, ' ')[1] = c1.w1),
-        agg AS (
-          SELECT b.doc_id, sum(coalesce(q, 0)) AS q_sum,
-                 count(*) AS n_bigrams
-          FROM bg b LEFT JOIN model USING (bg)
-          GROUP BY b.doc_id)
-        SELECT d.doc_id,
-               CAST(coalesce(q_sum, 0) AS BIGINT) AS q_sum,
-               CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-               CAST(CASE WHEN n_bigrams IS NULL THEN 0
-                    ELSE floor(q_sum * 1.0 / n_bigrams) END AS BIGINT)
-                 AS score
-        FROM documents d LEFT JOIN agg USING (doc_id)
-    """).fetchall()))
+    want = sorted(map(tuple, con.execute(
+        REGISTRY["bigram_likelihood"].oracle).fetchall()))
     assert got == want and len(got) > 0
     # discrimination on a held-out pair scored under the corpus model
     probe = spark.createDataFrame(

@@ -21,11 +21,11 @@ LOCAL_DDL = ("CREATE TABLE test_local.t1 (plat Int8, h_did String, v Int32) "
              "ENGINE = MergeTree ORDER BY h_did")
 
 
-@pytest.fixture()
-def cluster():
+def start_cluster() -> list[MockClickHouse]:
+    """Two one-replica shards; the first host answers the catalog of the
+    Distributed ``test.t1`` over ``test_local.t1``."""
     servers = [MockClickHouse() for _ in range(2)]
     entry = servers[0]
-    hosts = "','".join(f"{s.host}:{s.port}" for s in servers)
     entry.canned["SHOW CREATE TABLE test.t1"] = TARGET_DDL
     entry.canned["SHOW CREATE TABLE test_local.t1"] = LOCAL_DDL
     # a real server answers ORDER BY shard_num DESC — highest shard first
@@ -37,6 +37,12 @@ def cluster():
     entry.canned["system.columns"] = "3\n"
     for s in servers:
         s.canned.setdefault("system.tables", "")
+    return servers
+
+
+@pytest.fixture()
+def cluster():
+    servers = start_cluster()
     yield servers
     for s in servers:
         s.stop()
@@ -52,6 +58,11 @@ def _write_input(tmp_path, lines):
 def test_parse_connect():
     assert _parse_connect("jdbc:clickhouse://h1:8123/db") == ("h1", 8123, "db")
     assert _parse_connect("clickhouse://h2:9000/") == ("h2", 9000, "default")
+    # an IPv6 literal is bracketed in the URL, bare in the result
+    # (get_client brackets it again for the HTTP URL)
+    assert _parse_connect("jdbc:clickhouse://[::1]:8124/db") == \
+        ("::1", 8124, "db")
+    assert _parse_connect("jdbc:clickhouse://[::1]/db") == ("::1", 8123, "db")
 
 
 def test_quickstart_shaped_direct_load(spark, tmp_path, cluster):
@@ -403,6 +414,12 @@ def qs_cluster():
     entry.canned["system.columns"] = f"{len(QS_COLS)}\n"
     for s in servers:
         s.canned.setdefault("system.tables", "")
+    return servers
+
+
+@pytest.fixture()
+def cluster():
+    servers = start_cluster()
     yield servers
     for s in servers:
         s.stop()

@@ -5,6 +5,8 @@ routing hash — AbstractClickhouseLoaderMapper.java:60,276-284)."""
 
 from __future__ import annotations
 
+import pytest
+
 from clickhouse_hdfs_loader_spark.functions import register_sql_functions
 from clickhouse_hdfs_loader_spark.functions.fingerprint import winnow
 
@@ -28,6 +30,27 @@ def test_sql_guava_shard_code_matches_goldens(spark):
             continue
         assert r.code == expected[r.key], r.key
         assert r.slot == expected[r.key] % 7, r.key
+
+
+def test_sql_guava_shard_null_and_zero_weight(spark):
+    """A NULL key or a NULL weight gives NULL; a weight below 1 raises
+    an error that names it (as Spark's ANSI ``%`` raises on zero)."""
+    register_sql_functions(spark)
+    key, asint, _ = GOLDEN[0]
+    df = spark.createDataFrame(
+        [(key, 7), (key, None), (None, 7), (None, None)],
+        "key string, w int")
+    df.createOrReplaceTempView("weighted_keys")
+    rows = spark.sql("SELECT key, w, guava_shard(key, w) AS slot "
+                     "FROM weighted_keys").collect()
+    got = {(r.key, r.w): r.slot for r in rows}
+    assert got == {(key, 7): (asint & 0x7FFFFFFF) % 7, (key, None): None,
+                   (None, 7): None, (None, None): None}
+    for bad in (0, -3):
+        with pytest.raises(Exception, match=f"total_weight must be >= 1, "
+                                            f"got {bad}"):
+            spark.sql(f"SELECT guava_shard(key, {bad}) AS slot "
+                      "FROM weighted_keys WHERE key IS NOT NULL").collect()
 
 
 def test_sql_registration_is_idempotent(spark):

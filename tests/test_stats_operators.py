@@ -2548,50 +2548,19 @@ def test_brier_score_oracle_and_hand_cases(spark, sf_dir):
 
 
 def test_classification_report_oracle_and_hand_cases(spark, sf_dir):
-    """classification_report: in-test DuckDB oracle (registry
-    standard, r16 queue) — confusion counts + four exact e6 integer
-    metrics, each a single guarded division; hand cases pin a known
-    confusion matrix, every zero-denominator NULL, and the loud
-    validation on BOTH columns."""
+    """classification_report: the graded registry oracle, on the input
+    the registry query builds (``events_pred_label``) — confusion counts
+    + four exact e6 integer metrics, each a single guarded division;
+    hand cases pin a known confusion matrix, every zero-denominator
+    NULL, and the loud validation on BOTH columns."""
     from clickhouse_hdfs_loader_spark.operators.stats import (
-        classification_report)
+        classification_report, events_pred_label)
 
-    ev = (read_table(spark, sf_dir, "events")
-          .where(F.col("user_id").isNotNull()
-                 & F.col("event_id").isNotNull())
-          .withColumn("pred", F.pmod(F.col("event_id"), F.lit(2)))
-          .withColumn("label", F.pmod(F.col("user_id"), F.lit(2))))
+    ev = events_pred_label(read_table(spark, sf_dir, "events"))
     got = sorted(map(tuple, classification_report(
         ev, "event_type", "pred", "label").collect()))
-    want = sorted(map(tuple, _duck(sf_dir).execute("""
-        WITH b AS (SELECT event_type,
-                          CAST(((event_id % 2 + 2) % 2) AS BIGINT) AS p,
-                          CAST(((user_id % 2 + 2) % 2) AS BIGINT) AS y
-                   FROM events
-                   WHERE user_id IS NOT NULL AND event_id IS NOT NULL
-                     -- the fold drops NULL group keys (mirror — the
-                     -- r9 drift stance; the stream twin shares this
-                     -- WHERE by construction)
-                     AND event_type IS NOT NULL),
-        a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                     CAST(sum(p * y) AS BIGINT) AS tp,
-                     CAST(sum(p * (1 - y)) AS BIGINT) AS fp,
-                     CAST(sum((1 - p) * y) AS BIGINT) AS fn,
-                     CAST(sum((1 - p) * (1 - y)) AS BIGINT) AS tn
-              FROM b GROUP BY 1)
-        SELECT event_type, n, tp, fp, fn, tn,
-               CAST(CASE WHEN tp + fp = 0 THEN NULL
-                    ELSE (tp * 1000000) // (tp + fp) END AS BIGINT)
-                 AS precision_e6,
-               CAST(CASE WHEN tp + fn = 0 THEN NULL
-                    ELSE (tp * 1000000) // (tp + fn) END AS BIGINT)
-                 AS recall_e6,
-               CAST(CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
-                    ELSE (2 * tp * 1000000) // (2 * tp + fp + fn) END
-                    AS BIGINT) AS f1_e6,
-               CAST((tp + tn) * 1000000 // n AS BIGINT) AS accuracy_e6
-        FROM a
-    """).fetchall()))
+    want = sorted(map(tuple, _duck(sf_dir).execute(
+        REGISTRY["classification_report"].oracle).fetchall()))
     assert got == want and len(got) == 5
     # the fixture exercises non-degenerate metrics
     assert all(r[6] is not None and r[8] is not None for r in got)
