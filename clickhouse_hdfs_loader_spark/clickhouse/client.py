@@ -78,8 +78,7 @@ class ClickHouseClient:
     @property
     def _base_url(self) -> str:
         """``http://host:port/``, an IPv6 literal host in brackets."""
-        host = f"[{self.host}]" if ":" in self.host else self.host
-        return f"http://{host}:{self.http_port}/"
+        return f"http://{bracket_ipv6(self.host)}:{self.http_port}/"
 
     def _url(self, params: dict[str, str] | None = None) -> str:
         q = {"user": self.user, "database": self.database}
@@ -122,6 +121,24 @@ class ClickHouseClient:
         return [line.split("\t") for line in body.splitlines() if line != ""]
 
 
+def split_host_port(host: str) -> tuple[str, int | None]:
+    """``"h1:8124"`` → ``("h1", 8124)``, ``"[::1]:8124"`` → ``("::1", 8124)``;
+    a bare name or a bare IPv6 address (``"::1"``) carries no port."""
+    if host.startswith("["):
+        host, _, port_s = host[1:].partition("]")
+        return host, int(port_s[1:]) if port_s[1:] else None
+    if host.count(":") == 1:
+        host, port_s = host.split(":")
+        return host, int(port_s)
+    return host, None
+
+
+def bracket_ipv6(host: str) -> str:
+    """``host`` as the host part of ``host:port`` — an IPv6 literal in
+    brackets."""
+    return f"[{host}]" if ":" in host else host
+
+
 _CACHE: dict[str, ClickHouseClient] = {}
 
 
@@ -133,11 +150,6 @@ def get_client(host: str, http_port: int = 8123, user: str = "default",
     which overrides ``http_port`` — lets topologies address per-host HTTP
     endpoints; a bare IPv6 address (``"::1"``) carries none.
     """
-    if host.startswith("["):
-        host, _, port_s = host[1:].partition("]")
-        http_port = int(port_s[1:] or http_port)
-    elif host.count(":") == 1:
-        host, port_s = host.split(":")
-        http_port = int(port_s)
-    c = ClickHouseClient(host, http_port, user, password, database)
+    host, port = split_host_port(host)
+    c = ClickHouseClient(host, port or http_port, user, password, database)
     return _CACHE.setdefault(c.key, c)

@@ -5,7 +5,11 @@
 topology host: it holds the topology, the HTTP port, the login and the
 retry ladder (``client``, ``run``, ``first_alive``, ``replicas_of``).
 ``main.run_load`` builds it once and hands it to the writer, the staged
-path and the streaming sink.
+path and the streaming sink. Its driver-side per-host work (``exec_all``,
+the staged promote and drop, temp GC) runs through ``fan_out``: one
+thread per host, so the hosts' round trips overlap instead of adding up —
+the reference gets the same overlap from its parallel reducers
+(ClickhouseHdfsLoader.java:142-154).
 
 Driver-side DDL orchestration through that handle:
 - D6 Distributed-table resolution: regex over ``SHOW CREATE TABLE`` output
@@ -26,7 +30,8 @@ from __future__ import annotations
 
 import logging
 import re
-from collections.abc import Sequence
+from collections.abc import Callable, Iterable, Sequence
+from concurrent.futures import Future, ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
@@ -35,6 +40,7 @@ from ..operators.sharding import ClusterTopology
 from .client import ClickHouseClient, get_client, with_retries
 
 TEMP_DATABASE = "temp"  # database of the staged load's temp tables
+FAN_OUT_THREADS = 32   # most hosts ``fan_out`` reaches at once
 
 # `= Distributed(cluster, db, table[, sharding_expr])` — the resolution
 # regex of ClickhouseHdfsLoader.java:49
@@ -124,12 +130,30 @@ class LifecycleManager:
     def _hosts(self) -> list[str]:
         return [h for n in self.topology.nodes for h in n.hosts]
 
+    def fan_out(self, fn: Callable[[str], object],
+                hosts: Iterable[str] | None = None) -> None:
+        """Run ``fn(host)`` for each of ``hosts`` (default: every topology
+        host) on its own thread, at most ``FAN_OUT_THREADS`` at once; wait
+        for all of them, then raise the first failure (any later one is
+        logged)."""
+        hosts = self._hosts() if hosts is None else list(hosts)
+        if not hosts:
+            return
+        with ThreadPoolExecutor(min(FAN_OUT_THREADS, len(hosts))) as pool:
+            done = as_completed([pool.submit(fn, h) for h in hosts])
+            errors = [e for e in map(Future.exception, done) if e is not None]
+        for e in errors[1:]:
+            logging.getLogger(__name__).warning("another host failed: %s", e)
+        if errors:
+            raise errors[0]
+
     def exec_all(self, sql: str, alive_only: bool = False) -> None:
-        """Run ``sql`` on every topology host (DDL tier); ``alive_only``
-        skips the hosts that fail the alive probe."""
-        for h in self._hosts():
+        """Run ``sql`` on every topology host (DDL tier), all hosts at
+        once; ``alive_only`` skips the hosts that fail the alive probe."""
+        def one(h: str) -> None:
             if not alive_only or self.client(h).ping():
                 self.run(h, sql)
+        self.fan_out(one)
 
     # -- D2 ------------------------------------------------------------
     def create_daily_tables(self, create_ddl: str, database: str, table: str,
@@ -247,8 +271,9 @@ class LifecycleManager:
     def clean_temp_tables(self, prefix: str) -> None:
         """Drop ``temp.<prefix>%`` leftovers on every host — the end-of-job
         GC query of ClickhouseHdfsLoader.java:496-524 (which selects
-        ``concat(database,'.',name)`` with a LIKE filter)."""
-        for h in self._hosts():
+        ``concat(database,'.',name)`` with a LIKE filter), all hosts at
+        once; a host that fails is skipped."""
+        def clean(h: str) -> None:
             cli = self.client(h)
             try:
                 rows = cli.query_rows(
@@ -258,4 +283,5 @@ class LifecycleManager:
                 for (tablename,) in [r[:1] for r in rows]:
                     cli.execute(f"DROP TABLE IF EXISTS {tablename}")
             except Exception:  # noqa: BLE001 — best-effort GC
-                continue
+                pass
+        self.fan_out(clean)

@@ -12,13 +12,20 @@ Protocol (SURVEY §3.2-3.3):
 3. after the Spark action completes, the DRIVER promotes each
    (host, temp) with ``INSERT INTO target SELECT * FROM temp.x``
    (ClickhouseLoaderReducer.java:218-260) — no reducer stage needed,
-   Spark's driver already knows every (partition → shard → host) pair;
+   Spark's driver already knows every (partition → shard → host) pair.
+   One driver thread per staging host (``LifecycleManager.fan_out``)
+   runs that host's promotes in plan order, so the hosts promote at
+   once, as the reference's parallel reducers do
+   (ClickhouseHdfsLoader.java:142-154); after one host's promote fails,
+   no host starts another;
 4. non-replicated targets replay on sibling replicas via
    ``INSERT INTO target SELECT * FROM remote('h:9000', temp, u, p)``
-   (ClickhouseLoaderReducer.java:231-254);
+   (ClickhouseLoaderReducer.java:231-254), each right after its promote
+   on the staging host's thread;
 5. temp tables dropped on their staging host on success AND on abort — the
    CleanupTempTableOutputCommitter.java:62-87 / ClickhouseHdfsLoader.java:
-   496-524 GC, here a ``try/finally`` around the action.
+   496-524 GC, here a ``try/finally`` around the promote, again one
+   thread per host.
 
 Exactly-once posture: temp-table names are attempt-scoped
 (partitionId + attemptNumber), so a retried task writes a fresh table and
@@ -38,13 +45,16 @@ retried task writes a fresh table, so re-raising is safe here).
 from __future__ import annotations
 
 import re
+import threading
 import time
+from collections import defaultdict
 from dataclasses import dataclass, field
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..config import LoaderConfig
+from .client import bracket_ipv6, split_host_port
 from .lifecycle import TEMP_DATABASE, LifecycleManager
 from .writer import insert_header, serialize_for_load, shard_payloads
 
@@ -77,6 +87,13 @@ class StagedLoadPlan:
     target_database: str
     target_table: str
     temp_tables: list[tuple[str, str]] = field(default_factory=list)  # (host, temp)
+
+    def by_host(self) -> dict[str, list[str]]:
+        """Staging host → its temp tables, in plan order."""
+        out: dict[str, list[str]] = defaultdict(list)
+        for host, temp in self.temp_tables:
+            out[host].append(temp)
+        return out
 
 
 def stage_partitions(df: DataFrame, key_col: str | None, cluster: LifecycleManager,
@@ -122,36 +139,77 @@ def stage_partitions(df: DataFrame, key_col: str | None, cluster: LifecycleManag
     return plan
 
 
+def sql_string(value: str) -> str:
+    """``value`` as a ClickHouse string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def remote_replay(target: str, host: str, temp: str,
+                  cluster: LifecycleManager) -> str:
+    """The sibling replica's ``INSERT … SELECT`` from ``temp`` on ``host``
+    through ``remote()`` on the native port 9000
+    (ClickhouseLoaderReducer.java:231-254): any HTTP port the topology
+    host carries is dropped and an IPv6 literal is bracketed."""
+    address = bracket_ipv6(split_host_port(host)[0]) + ":9000"
+    return (f"INSERT INTO {target} SELECT * FROM remote({sql_string(address)}, "
+            f"{temp}, {sql_string(cluster.user)}, {sql_string(cluster.password)})")
+
+
 def promote(plan: StagedLoadPlan, cluster: LifecycleManager, *,
             replicated: bool = False) -> None:
     """Phase 3+4: driver-side ``INSERT INTO target SELECT * FROM temp`` per
     (host, temp) pair, replica replay via remote() for non-replicated
-    engines, then drop (ClickhouseLoaderReducer.java:218-260)."""
+    engines, then drop (ClickhouseLoaderReducer.java:218-260). The staging
+    hosts promote at once, each in plan order; once one statement has
+    failed, no host starts another promote, and the first error is raised
+    after the drop. A statement fails only after its whole retry ladder,
+    and until then the other hosts keep promoting, as the reference's
+    parallel reducers do, so the partial-promote window (ROADMAP 1(b)) is
+    per host: a failed load can leave every other host fully promoted,
+    where the serial loop stopped at the first failing host."""
     tgt = f"{plan.target_database}.{plan.target_table}"
+    by_host = plan.by_host()
+    failed = threading.Event()
+
+    def statements(host: str):
+        """(host, sql) of ``host``'s promotes and replays, in order."""
+        sibs = () if replicated else cluster.replicas_of(host)
+        for temp in by_host[host]:
+            yield host, f"INSERT INTO {tgt} SELECT * FROM {temp}"
+            for sib in sibs:
+                yield sib, remote_replay(tgt, host, temp, cluster)
+
+    def promote_host(host: str) -> None:
+        for h, sql in statements(host):
+            if failed.is_set():
+                return
+            try:
+                cluster.run(h, sql, tier="promote")
+            except Exception:
+                failed.set()
+                raise
+
     try:
-        for host, temp in plan.temp_tables:
-            cluster.run(host, f"INSERT INTO {tgt} SELECT * FROM {temp}",
-                        tier="promote")
-            if not replicated:
-                for sib in cluster.replicas_of(host):
-                    cluster.run(sib, (
-                        f"INSERT INTO {tgt} SELECT * FROM remote('{host}:9000', "
-                        f"{temp}, '{cluster.user}', '{cluster.password}')"),
-                        tier="promote")
+        cluster.fan_out(promote_host, by_host)
     finally:
         cleanup(plan, cluster)
 
 
 def cleanup(plan: StagedLoadPlan, cluster: LifecycleManager) -> None:
     """D1 temp-table GC — drop every staged table on the host that holds
-    it (siblings replay through ``remote()`` and hold none); errors
-    swallowed per table like the reference's best-effort cleaner
-    (ClickhouseHdfsLoader.java:496-524)."""
-    for host, temp in plan.temp_tables:
-        try:
-            cluster.client(host).execute(f"DROP TABLE IF EXISTS {temp}")
-        except Exception:  # noqa: BLE001 — best-effort GC
-            pass
+    it (siblings replay through ``remote()`` and hold none), all hosts at
+    once; errors swallowed per table like the reference's best-effort
+    cleaner (ClickhouseHdfsLoader.java:496-524)."""
+    by_host = plan.by_host()
+
+    def drop_host(host: str) -> None:
+        for temp in by_host[host]:
+            try:
+                cluster.client(host).execute(f"DROP TABLE IF EXISTS {temp}")
+            except Exception:  # noqa: BLE001 — best-effort GC
+                pass
+
+    cluster.fan_out(drop_host, by_host)
 
 
 def staged_load(df: DataFrame, key_col: str | None, cluster: LifecycleManager,

@@ -5,6 +5,9 @@ W5 retries, D1 GC, D2/D3 lifecycle, D6 resolution."""
 from __future__ import annotations
 
 import logging
+import threading
+import time
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pytest
@@ -39,7 +42,7 @@ from clickhouse_hdfs_loader_spark.operators.sharding import (
 )
 from clickhouse_hdfs_loader_spark.sources.catalog import sharding_key_index_or_none
 
-from .mock_clickhouse import MockClickHouse
+from .mock_clickhouse import InFlight, MockClickHouse
 
 
 @pytest.fixture()
@@ -368,12 +371,43 @@ def test_list_partitions_inventory_failover_and_loud_gap(mocks):
 
 
 def test_clean_temp_tables(mocks):
-    m = mocks[0]
-    m.canned["system.tables"] = "temp.t_x_p000001_0\ntemp.t_x_p000002_0\n"
-    lm = LifecycleManager(topo_of([m]), backoff_scale=0.001)
+    """D1 GC on every host; a host that cannot be reached is skipped and
+    the reachable ones are still cleaned."""
+    dead = MockClickHouse()
+    dead.stop()   # truly down: connection refused
+    live = mocks[:2]
+    for m in live:
+        m.canned["system.tables"] = "temp.t_x_p000001_0\ntemp.t_x_p000002_0\n"
+    lm = LifecycleManager(topo_of([live[0], dead, live[1]]), backoff_scale=0.001)
     lm.clean_temp_tables("t_x_")
-    drops = [s for s in m.statements if s.startswith("DROP TABLE IF EXISTS temp.")]
-    assert len(drops) == 2
+    for m in live:
+        drops = [s for s in m.statements
+                 if s.startswith("DROP TABLE IF EXISTS temp.")]
+        assert drops == ["DROP TABLE IF EXISTS temp.t_x_p000001_0",
+                         "DROP TABLE IF EXISTS temp.t_x_p000002_0"]
+
+
+def test_fan_out_waits_for_every_host_then_raises_first_failure():
+    """``fan_out`` runs each host on its own thread, lets every host
+    finish even after one failed, then raises that failure."""
+    hosts = ["h1", "h2", "h3"]
+    lm = LifecycleManager(ClusterTopology([
+        ShardNode(i + 1, 1, (h,)) for i, h in enumerate(hosts)]))
+    finished, lock = [], threading.Lock()
+    both_started = threading.Barrier(2, timeout=10)
+
+    def fn(host):
+        if host == hosts[0]:
+            raise ClickHouseError("boom")
+        both_started.wait()   # the other two hosts run at the same time
+        time.sleep(0.05)
+        with lock:
+            finished.append(host)
+
+    with pytest.raises(ClickHouseError, match="boom"):
+        lm.fan_out(fn)
+    assert sorted(finished) == hosts[1:]
+    lm.fan_out(fn, [])   # no hosts: nothing to run
 
 
 def test_drop_partition_cli_tool(mocks):
@@ -419,27 +453,98 @@ def test_drop_partition_cli_tool_port_and_login(mocks):
 
 
 def test_staged_cleanup_on_promote_failure(spark, mocks):
-    """Abort path (CleanupTempTableOutputCommitter parity): when promote
-    fails permanently, the staged temp tables are still dropped."""
-    import pytest as _pytest
-
-    from clickhouse_hdfs_loader_spark.clickhouse.client import ClickHouseError
+    """Abort path (CleanupTempTableOutputCommitter parity): when one
+    host fails every statement, promote raises that host's promote
+    error, and every staged table on every host is still sent its DROP
+    — on the failing host too, past each DROP that fails."""
     cfg = LoaderConfig(batch_size=50, max_tries=2)
-    topo = topo_of(mocks[:1])
+    topo = topo_of(mocks)
     ddl = "CREATE TABLE db.t (k String) ENGINE = MergeTree ORDER BY k"
-    df = spark.createDataFrame([(f"k{i}",) for i in range(10)], ["k"])
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(f"k{i}",) for i in range(60)], 4), ["k"])
     plan = staging.stage_partitions(df, "k", cluster_of(topo, cfg), cfg,
                                     create_ddl=ddl,
                                     target_database="db", target_table="t",
                                     prefix=temp_table_prefix("t", "2017-01-07"))
-    assert plan.temp_tables
-    m = mocks[0]
-    m.fail_first = 99  # every subsequent statement fails...
-    with _pytest.raises(ClickHouseError):
+    bad = mocks[1]
+    assert {h for h, _t in plan.temp_tables} == {
+        f"{m.host}:{m.port}" for m in mocks}
+    assert len([h for h, _t in plan.temp_tables
+                if h == f"{bad.host}:{bad.port}"]) >= 2
+    bad.fail_first = 99   # every promote and every DROP on this host fails...
+    # the promote's error after its retries, not a DROP's from the cleanup
+    with pytest.raises(ClickHouseError, match="failed after 2 tries"):
         staging.promote(plan, cluster_of(topo, cfg))
-    # ...yet the cleanup DROPs were attempted for every staged table
-    drops = [s for s in m.statements if s.startswith("DROP TABLE IF EXISTS temp.")]
-    assert len(drops) >= len(plan.temp_tables)
+    # ...yet each host was sent the DROP of every table staged on it
+    for m in mocks:
+        staged = [t for h, t in plan.temp_tables if h == f"{m.host}:{m.port}"]
+        for temp in staged:
+            assert f"DROP TABLE IF EXISTS {temp}" in m.statements
+
+
+def test_staged_load_runs_per_host_statements_concurrently(spark):
+    """The driver's per-host statements — the temp-database create, the
+    promotes and the temp GC — reach every host at once, while each host
+    still sees its own promotes before their drops."""
+    inflight = InFlight()
+    mocks = [MockClickHouse(delay=0.05, inflight=inflight) for _ in range(3)]
+    try:
+        cfg = LoaderConfig(batch_size=500)
+        cluster = cluster_of(topo_of(mocks), cfg)
+        ddl = "CREATE TABLE db.t (k String, v Int32) ENGINE = MergeTree ORDER BY k"
+        df = spark.createDataFrame([(f"k{i}", i) for i in range(120)],
+                                   ["k", "v"]).coalesce(1)
+        prefix = temp_table_prefix("t", "2017-01-07")
+        plan = staging.staged_load(df, "k", cluster, cfg, create_ddl=ddl,
+                                   target_database="db", target_table="t",
+                                   prefix=prefix)
+        cluster.clean_temp_tables(prefix)
+        assert {h for h, _t in plan.temp_tables} == {
+            f"{m.host}:{m.port}" for m in mocks}
+        assert inflight.peak("CREATE DATABASE") >= 2
+        assert inflight.peak("INSERT INTO db.t SELECT") >= 2
+        assert inflight.peak("DROP TABLE IF EXISTS temp.") >= 2
+        assert inflight.peak("SELECT concat(database") >= 2
+        for m in mocks:
+            promotes = [i for i, s in enumerate(m.statements)
+                        if s.startswith("INSERT INTO db.t SELECT")]
+            drops = [i for i, s in enumerate(m.statements)
+                     if s.startswith("DROP TABLE IF EXISTS temp.")]
+            assert promotes and drops and max(promotes) < min(drops)
+    finally:
+        for m in mocks:
+            m.stop()
+
+
+def recording_cluster(topo: ClusterTopology, **login) -> tuple[
+        LifecycleManager, list[tuple[str, str]]]:
+    """A cluster handle that records each (host, statement) it is asked to
+    send instead of sending it."""
+    cluster = LifecycleManager(topo, **login)
+    sent: list[tuple[str, str]] = []
+    cluster.run = lambda host, sql, tier="ddl": sent.append((host, sql))
+    cluster.client = lambda host: SimpleNamespace(
+        execute=lambda sql: sent.append((host, sql)))
+    return cluster, sent
+
+
+@pytest.mark.parametrize("hosts,login,address,quoted_login", [
+    (("::1", "::2"), {}, "[::1]:9000", "'default', ''"),
+    (("[::1]:8124", "[::2]:8124"), {}, "[::1]:9000", "'default', ''"),
+    (("h1:8124", "h2:8124"), {}, "h1:9000", "'default', ''"),
+    (("h1", "h2"), {"user": "o'neil", "password": r"p\'w"}, "h1:9000",
+     r"'o\'neil', 'p\\\'w'"),
+], ids=["ipv6", "ipv6-http-port", "http-port", "quoted-login"])
+def test_remote_replay_text(hosts, login, address, quoted_login):
+    """W4 replay on the sibling: the staging host's native-port address
+    (any HTTP port dropped, IPv6 bracketed) and an escaped login."""
+    topo = ClusterTopology([ShardNode(1, 1, hosts)])
+    cluster, sent = recording_cluster(topo, **login)
+    plan = staging.StagedLoadPlan("db", "t", [(hosts[0], "temp.t_x_p000000_0")])
+    staging.promote(plan, cluster, replicated=False)
+    assert [s for s in sent if "remote(" in s[1]] == [(hosts[1], (
+        f"INSERT INTO db.t SELECT * FROM remote('{address}', "
+        f"temp.t_x_p000000_0, {quoted_login})"))]
 
 
 def test_write_direct_sanitizes_wire_fields(spark, mocks):
