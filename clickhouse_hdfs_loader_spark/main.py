@@ -1,19 +1,25 @@
 """End-to-end load job — the Spark shape of the reference's orchestration
-(SURVEY §3.1, ClickhouseHdfsLoader.run:68-214).
+(SURVEY §3.1, ClickhouseHdfsLoader.run:68-214) — and the driver's one
+front door: ``parse_args`` for the options, ``resolve_target`` for the
+target, ``write`` for the write mode.
 
 Sequence parity:
  1. parse CLI → LoaderConfig                  (args4j parse :69-78)
- 2. resolve target: SHOW CREATE → Distributed(cluster, db, table, key),
-    system.clusters topology, DESCRIBE key index  (initClickhouse :224-289)
+ 2. resolve target (``resolve_target``): SHOW CREATE → Distributed(cluster,
+    db, table, key), system.clusters topology, the local SHOW CREATE; then
+    DESCRIBE for the key index and width     (initClickhouse :224-289)
  3. (--daily) create daily tables + expiry    (:125-140)
- 4. read input (text|orc|parquet), run the transform chain T1–T9
- 5. route on the sharding key and write: direct (W2) or two-phase staged
-    (W3/W4) — ONE DataFrame action replacing the MR job (:158-201)
+ 4. read input (text|orc|parquet|csv|json), run the transform chain T1–T9
+ 5. route on the sharding key and write (``write``): direct (W2) or
+    two-phase staged (W3/W4) — ONE DataFrame action replacing the MR job
+    (:158-201)
  6. accounting verdict: raise if failed records  (:203-207)
  7. finally: temp-table GC                    (:209-211,496-524)
 
 Everything before/after step 5 is driver-side Python against ClickHouse
-HTTP; step 5 is the only cluster-scale operation.
+HTTP; step 5 is the only cluster-scale operation. ``tools drop-partition``
+resolves through ``resolve_target`` and the streaming sink writes each
+micro-batch through ``write``.
 """
 
 from __future__ import annotations
@@ -22,13 +28,15 @@ from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .clickhouse.client import get_client
-from .clickhouse.lifecycle import LifecycleManager, resolve_distributed
+from .clickhouse.client import ClickHouseClient, get_client
+from .clickhouse.lifecycle import (DistributedTarget, LifecycleManager,
+                                   resolve_distributed)
 from .clickhouse.staging import staged_load, temp_table_prefix
 from .clickhouse.writer import write_direct
 from .config import LoaderConfig, parse_args
 from .operators.transform import transform_pipeline
 from .sources import catalog
+from .sources.registry import decode
 
 
 def _parse_connect(connect: str) -> tuple[str, int, str]:
@@ -39,12 +47,39 @@ def _parse_connect(connect: str) -> tuple[str, int, str]:
             url.path.lstrip("/") or "default")
 
 
+def _entry(config: LoaderConfig) -> tuple[ClickHouseClient, str]:
+    """The connect URL's node, which answers the catalog, and database."""
+    host, http_port, database = _parse_connect(config.connect)
+    return get_client(host, http_port, user=config.username,
+                      password=config.password, database=database), database
+
+
+def resolve_target(config: LoaderConfig, backoff_scale: float = 1.0
+                   ) -> tuple[str, DistributedTarget, str, bool, LifecycleManager]:
+    """D6: ``--table`` must be Distributed; returns the entry database, the
+    Distributed target, the local table's DDL, whether it is Replicated,
+    and the handle on the target cluster's hosts
+    (ClickhouseHdfsLoader.java:224-289)."""
+    cli, database = _entry(config)
+    dist = resolve_distributed(
+        catalog.fetch_create_table(cli, database, config.table))
+    if dist is None:
+        raise ValueError(f"{database}.{config.table} is not a Distributed table "
+                         "(reference requires Distributed targets)")
+    topology = catalog.fetch_topology(cli, dist.cluster)
+    local_ddl = catalog.fetch_create_table(
+        cli, dist.local_database, dist.local_table)
+    # the connect URL's port reaches only the entry node above; every
+    # topology host is reached through this handle
+    cluster = LifecycleManager.from_config(topology, config, backoff_scale)
+    return database, dist, local_ddl, "Replicated" in local_ddl, cluster
+
+
 def read_input(spark: SparkSession, config: LoaderConfig,
                num_fields: int | None = None) -> DataFrame:
-    """Decode via the pluggable format registry (sources/registry.py) —
-    the Spark analogue of getRowRecordDecoder
+    """Decode ``--export-dir`` by ``-i`` name (sources/registry.py) — the
+    Spark analogue of getRowRecordDecoder
     (AbstractClickhouseLoaderMapper.java:147-150)."""
-    from .sources.registry import get_decoder
     if config.input_format == "text" and num_fields is None:
         # infer the source width from the first line (the reference
         # decodes per-row with no declared width; a DataFrame needs a
@@ -52,34 +87,41 @@ def read_input(spark: SparkSession, config: LoaderConfig,
         first = spark.read.text(config.export_dir).first()
         sep = config.fields_terminated_by
         num_fields = (first["value"].count(sep) + 1) if first else 1
-    return get_decoder(config.input_format)(
-        spark, config.export_dir, sep=config.fields_terminated_by,
-        num_fields=num_fields)
+    return decode(spark, config.input_format, config.export_dir,
+                  sep=config.fields_terminated_by, num_fields=num_fields)
+
+
+def write(df: DataFrame, key_col: str | None, cluster: LifecycleManager,
+          config: LoaderConfig, *, database: str, table: str,
+          create_ddl: str | None, replicated: bool, prefix: str) -> dict:
+    """One load job's write, batch or micro-batch: direct (W2) or two-phase
+    staged (W3/W4) by ``config.direct``, then, whatever happened, the job's
+    GC of ``temp.<prefix>%`` left by aborted attempts — the prefix leaves
+    a concurrent load of the same table alone. Staged needs ``create_ddl``,
+    the target's SHOW CREATE output."""
+    try:
+        if config.direct:
+            return write_direct(df, key_col, cluster, config,
+                                database=database, table=table,
+                                replicated=replicated)
+        plan = staged_load(df, key_col, cluster, config,
+                           create_ddl=create_ddl, target_database=database,
+                           target_table=table, prefix=prefix,
+                           replicated=replicated)
+        return {"staged_tables": len(plan.temp_tables)}
+    finally:
+        cluster.clean_temp_tables(prefix)
 
 
 def run_load(config: LoaderConfig, spark: SparkSession,
              source_df: DataFrame | None = None,
              backoff_scale: float = 1.0) -> dict:
-    host, http_port, database = _parse_connect(config.connect)
-    cli = get_client(host, http_port, user=config.username,
-                     password=config.password, database=database)
-
     # step 2 — resolve the distributed target
-    create_ddl = catalog.fetch_create_table(cli, database, config.table)
-    dist = resolve_distributed(create_ddl)
-    if dist is None:
-        raise ValueError(f"{database}.{config.table} is not a Distributed table "
-                         "(reference requires Distributed targets)")
-    topology = catalog.fetch_topology(cli, dist.cluster)
-    local_ddl = catalog.fetch_create_table(
-        cli, dist.local_database, dist.local_table)
+    database, dist, local_ddl, replicated, cluster = resolve_target(
+        config, backoff_scale)
+    cli, _ = _entry(config)
     describe = catalog.fetch_describe(cli, dist.local_database, dist.local_table)
-    target_width = len(describe)
-    replicated = "Replicated" in local_ddl
 
-    # the connect URL's port reaches only the entry node above; every
-    # topology host is reached through this handle
-    cluster = LifecycleManager.from_config(topology, config, backoff_scale)
     target_table = dist.local_table
     # step 3 — daily tables
     if config.daily and config.dt:
@@ -101,7 +143,7 @@ def run_load(config: LoaderConfig, spark: SparkSession,
         df, exclude=config.exclude_fields,
         input_path=config.export_dir if config.extract_hive_partitions else "",
         additional=config.additional_cols,
-        target_width=target_width,
+        target_width=len(describe),
         null_string=config.null_string,
         null_non_string=config.null_non_string,
         escape_null=config.escape_null,
@@ -113,23 +155,11 @@ def run_load(config: LoaderConfig, spark: SparkSession,
     idx = catalog.sharding_key_index_or_none(describe, dist.sharding_key)
     key_col = df.columns[idx] if idx is not None else None
 
-    # step 5+6 — the one cluster action
-    prefix = temp_table_prefix(target_table, config.dt or "00000000")
-    try:
-        if config.direct:
-            return write_direct(df, key_col, cluster, config,
-                                database=dist.local_database,
-                                table=target_table, replicated=replicated)
-        plan = staged_load(df, key_col, cluster, config,
-                           create_ddl=local_ddl,
-                           target_database=dist.local_database,
-                           target_table=target_table, prefix=prefix,
-                           replicated=replicated)
-        return {"staged_tables": len(plan.temp_tables)}
-    finally:
-        # step 7 — GC this run's leftovers from aborted attempts; the run
-        # prefix leaves a concurrent load of the same table alone
-        cluster.clean_temp_tables(prefix)
+    # step 5+6+7 — the one cluster action, then the temp GC
+    return write(df, key_col, cluster, config, database=dist.local_database,
+                 table=target_table, create_ddl=local_ddl,
+                 replicated=replicated,
+                 prefix=temp_table_prefix(target_table, config.dt or "00000000"))
 
 
 def main(argv: list[str] | None = None) -> int:

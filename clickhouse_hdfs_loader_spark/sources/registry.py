@@ -1,81 +1,43 @@
-"""Pluggable decoder registry — the reference's extension surface.
-
-The reference's only extension point is the abstract decoder pair
-``RecordDecoder``/``RowRecordDecoder`` (RecordDecoder.java:7-14,
-RowRecordDecoder.java:8-25) wired through
+"""Input decoding by ``-i`` name — the Spark side of the reference's
+decoder pair ``RecordDecoder``/``RowRecordDecoder`` (RecordDecoder.java:
+7-14, RowRecordDecoder.java:8-25), which
 ``AbstractClickhouseLoaderMapper.getRowRecordDecoder``
-(AbstractClickhouseLoaderMapper.java:147-150) — one implementation per
-input format (TextLoaderMapper/OrcLoaderMapper). The Spark analogue is a
-format-name → reader-function registry; registering a new format is one
-``@register_decoder`` function returning a DataFrame, and the load job
-picks it up by ``--input-format`` name.
+(AbstractClickhouseLoaderMapper.java:147-150) picks per input format
+(TextLoaderMapper/OrcLoaderMapper). ``decode`` knows a fixed set of
+formats; a new one is one more branch here.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
-DecoderFn = Callable[..., DataFrame]  # (spark, path, **options) -> DataFrame
 
-_DECODERS: dict[str, DecoderFn] = {}
-
-
-def register_decoder(name: str) -> Callable[[DecoderFn], DecoderFn]:
-    def deco(fn: DecoderFn) -> DecoderFn:
-        _DECODERS[name] = fn
-        return fn
-    return deco
-
-
-def get_decoder(name: str) -> DecoderFn:
-    try:
-        return _DECODERS[name]
-    except KeyError:
-        raise ValueError(f"unknown input format {name!r}; registered: "
-                         f"{sorted(_DECODERS)}") from None
-
-
-def registered_formats() -> list[str]:
-    return sorted(_DECODERS)
-
-
-@register_decoder("text")
-def _text(spark: SparkSession, path: str, *, sep: str = "|",
-          num_fields: int | None = None, **_: object) -> DataFrame:
-    from .text import read_delimited
-    return read_delimited(spark, path, sep=sep, num_fields=num_fields)
-
-
-@register_decoder("orc")
-def _orc(spark: SparkSession, path: str, **_: object) -> DataFrame:
-    from .tables import read_orc_stringly
-    return read_orc_stringly(spark, path)
-
-
-@register_decoder("parquet")
-def _parquet(spark: SparkSession, path: str, **_: object) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-@register_decoder("csv")
-def _csv(spark: SparkSession, path: str, *, sep: str = ",",
-         num_fields: int | None = None, **_: object) -> DataFrame:
-    # no inferSchema: every field arrives as string, exactly like the
-    # text decoder — the transform chain owns typing (T2/T4 semantics)
-    df = spark.read.option("sep", sep).csv(path)
-    if num_fields is not None and len(df.columns) != num_fields:
-        raise ValueError(f"csv width {len(df.columns)} != declared {num_fields}")
-    return df
-
-
-@register_decoder("json")
-def _json(spark: SparkSession, path: str, **_: object) -> DataFrame:
-    # JSON-lines with inferred schema; Spark orders inferred fields
-    # alphabetically, which makes positional ops (T3 exclusion, T9 width)
-    # deterministic. Stringly-coerced like the ORC decoder so the
-    # downstream chain is format-agnostic.
-    from pyspark.sql import functions as F
-    df = spark.read.json(path)
-    return df.select([F.col(c).cast("string").alias(c) for c in df.columns])
+def decode(spark: SparkSession, input_format: str, path: str, *, sep: str,
+           num_fields: int | None = None) -> DataFrame:
+    """Read ``path`` as ``input_format``; ``sep`` and ``num_fields`` apply
+    to the delimited formats (text, csv)."""
+    if input_format == "text":
+        from .text import read_delimited
+        return read_delimited(spark, path, sep=sep, num_fields=num_fields)
+    if input_format == "orc":
+        from .tables import read_orc_stringly
+        return read_orc_stringly(spark, path)
+    if input_format == "parquet":
+        return spark.read.parquet(path)
+    if input_format == "csv":
+        # no inferSchema: every field arrives as string, exactly like the
+        # text decoder — the transform chain owns typing (T2/T4 semantics)
+        df = spark.read.option("sep", sep).csv(path)
+        if num_fields is not None and len(df.columns) != num_fields:
+            raise ValueError(f"csv width {len(df.columns)} != declared {num_fields}")
+        return df
+    if input_format == "json":
+        # JSON-lines with inferred schema; Spark orders inferred fields
+        # alphabetically, which makes positional ops (T3 exclusion, T9
+        # width) deterministic. Stringly-coerced like the ORC decoder so
+        # the downstream chain is format-agnostic.
+        from pyspark.sql import functions as F
+        df = spark.read.json(path)
+        return df.select([F.col(c).cast("string").alias(c) for c in df.columns])
+    raise ValueError(f"unknown input format {input_format!r}; known: "
+                     "text, orc, parquet, csv, json")

@@ -447,7 +447,12 @@ def test_drop_partition_cli_tool_port_and_login(mocks):
         "--username", "ops", "--password", "s3cret"]) == 0
     assert shard.statements == [
         "ALTER TABLE db_local.t1 DROP PARTITION '2017-01-07'"]
-    assert not [s for s in entry.statements if s.startswith("ALTER")]
+    # the entry host answers the shared resolver's catalog reads and
+    # nothing else: no DESC, no ALTER
+    show, clusters, show_local = entry.statements
+    assert (show, show_local) == ("SHOW CREATE TABLE db.t1",
+                                  "SHOW CREATE TABLE db_local.t1")
+    assert "FROM system.clusters WHERE cluster = 'ck'" in clusters
     for m in (entry, shard):
         assert m.auth_users and all(u == "ops" for u in m.auth_users)
 

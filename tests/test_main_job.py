@@ -6,12 +6,13 @@ hosts with a canned catalog."""
 
 from __future__ import annotations
 
+import dataclasses
 import re
 
 import pytest
 
-from clickhouse_hdfs_loader_spark.config import parse_args
-from clickhouse_hdfs_loader_spark.main import _parse_connect, run_load
+from clickhouse_hdfs_loader_spark.config import LoaderConfig, parse_args
+from clickhouse_hdfs_loader_spark.main import _parse_connect, read_input, run_load
 
 from .mock_clickhouse import MockClickHouse
 
@@ -523,6 +524,37 @@ def test_mapper_class_orc_mapping():
     assert cfg3.input_format == "text"
     # with neither flag, the default stays text
     assert parse_args(REQUIRED_MIN).input_format == "text"
+
+
+def test_each_field_is_one_option():
+    """Every ``LoaderConfig`` field is one ``--<field-with-dashes>`` option
+    whose default is the field's own; ``--driver`` still parses."""
+    assert parse_args(REQUIRED_MIN) == LoaderConfig(
+        connect="jdbc:clickhouse://h:9000/db", table="t", export_dir="/tmp/x",
+        dt="2021-06-01")
+    for field in dataclasses.fields(LoaderConfig):
+        if field.name == "input_format":   # its -i rule has its own tests
+            continue
+        default = field.default
+        if isinstance(default, bool):
+            text, value = ("false", False) if default else ("true", True)
+        elif isinstance(default, int):
+            text, value = str(default + 7), default + 7
+        elif isinstance(default, str):
+            text, value = default + "x", default + "x"
+        elif field.type == "tuple[int, ...]":
+            text, value = "4,,5", (4, 5)
+        else:
+            text, value = ",a,b", ("a", "b")
+        flag = "--" + field.name.replace("_", "-")
+        cfg = parse_args(REQUIRED_MIN + [flag, text])
+        assert getattr(cfg, field.name) == value, flag
+    assert parse_args(REQUIRED_MIN + ["--driver", "x"]) == parse_args(REQUIRED_MIN)
+
+
+def test_unknown_input_format_rejected(spark):
+    with pytest.raises(ValueError, match="unknown input format 'nosuch'"):
+        read_input(spark, parse_args(REQUIRED_MIN + ["-i", "nosuch"]))
 
 
 def test_primary_i_flag_and_required_options():

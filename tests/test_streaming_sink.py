@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,7 +28,7 @@ def test_stream_to_clickhouse_delivers_all_rows(spark, sf_dir, tmp_path):
         topo = ClusterTopology([
             ShardNode(i + 1, 1, (f"{s.host}:{s.port}",))
             for i, s in enumerate(servers)])
-        cfg = LoaderConfig(batch_size=500)
+        cfg = LoaderConfig(batch_size=500, direct=True)
         schema = spark.read.parquet(f"{sf_dir}/nation.parquet").schema
         stream = (spark.readStream.schema(schema)
                   .option("pathGlobFilter", "nation.parquet").parquet(sf_dir))
@@ -57,25 +59,38 @@ def test_orc_roundtrip_stringly(spark, sf_dir, tmp_path):
     assert {r["n_nationkey"] for r in back.collect()} == {str(i) for i in range(25)}
 
 
+NATION_DDL = ("CREATE TABLE db.nation (n_nationkey Int64, n_name String, "
+              "n_regionkey Int64) ENGINE = MergeTree ORDER BY n_nationkey")
+
+
+def nation_stream(spark, sf_dir):
+    schema = spark.read.parquet(f"{sf_dir}/nation.parquet").schema
+    return (spark.readStream.schema(schema)
+            .option("pathGlobFilter", "nation.parquet").parquet(sf_dir))
+
+
+def gc_queries(server) -> list[str]:
+    """Batch 0's end-of-job temp GC queries this host received."""
+    return [s for s in server.statements if "FROM system.tables" in s
+            and re.search(r"LIKE 'nation_b0_\d+_%'", s)]
+
+
 def test_stream_to_clickhouse_staged_two_phase_per_batch(spark, sf_dir, tmp_path):
-    """staged=True: each micro-batch runs the full W3/W4 two-phase load —
-    batch-scoped StripeLog temp tables, INSERT...SELECT promote into the
-    target, temp GC — so the batch lands atomically-ish."""
+    """``config.direct`` false: each micro-batch runs the full W3/W4
+    two-phase load — batch-scoped StripeLog temp tables, INSERT...SELECT
+    promote into the target, drop, then the job's temp GC on every host —
+    so the batch lands atomically-ish."""
     servers = [MockClickHouse() for _ in range(2)]
     try:
         topo = ClusterTopology([
             ShardNode(i + 1, 1, (f"{s.host}:{s.port}",))
             for i, s in enumerate(servers)])
-        cfg = LoaderConfig(batch_size=500)
-        ddl = ("CREATE TABLE db.nation (n_nationkey Int64, n_name String, "
-               "n_regionkey Int64) ENGINE = MergeTree ORDER BY n_nationkey")
-        schema = spark.read.parquet(f"{sf_dir}/nation.parquet").schema
-        stream = (spark.readStream.schema(schema)
-                  .option("pathGlobFilter", "nation.parquet").parquet(sf_dir))
+        cfg = LoaderConfig(batch_size=500, direct=False)
+        stream = nation_stream(spark, sf_dir)
         q = stream_to_clickhouse(
             stream, "n_name", cluster_of(topo, cfg), cfg, database="db",
             table="nation", checkpoint_dir=str(tmp_path / "ckpt2"),
-            staged=True, create_ddl=ddl)
+            create_ddl=NATION_DDL)
         q.awaitTermination(120)
         q.stop()
         stmts = [s for srv in servers for s in srv.statements]
@@ -91,10 +106,39 @@ def test_stream_to_clickhouse_staged_two_phase_per_batch(spark, sf_dir, tmp_path
                           if "FORMAT" in ins.splitlines()[0]
                           and ins.splitlines()[0].startswith("INSERT INTO temp."))
         assert staged_rows == 25
-        # direct mode must require create_ddl for staged
+        # the micro-batch ends with the load job's temp GC on every host
+        assert all(gc_queries(srv) for srv in servers)
+        # a staged stream requires create_ddl
         with pytest.raises(ValueError):
             stream_to_clickhouse(stream, "n_name", cluster_of(topo, cfg), cfg,
-                                 database="db", table="nation", staged=True)
+                                 database="db", table="nation")
+    finally:
+        for s in servers:
+            s.stop()
+
+
+def test_staged_stream_failed_stage_still_collects_temp_tables(spark, sf_dir, tmp_path):
+    """A micro-batch whose stage fails stops the query with the error,
+    and its temp GC still runs on every host, the failing one included."""
+    from pyspark.errors import StreamingQueryException
+    servers = [MockClickHouse(fail_first=10**6, fail_substring="INSERT INTO temp."),
+               MockClickHouse()]
+    try:
+        topo = ClusterTopology([
+            ShardNode(i + 1, 1, (f"{s.host}:{s.port}",))
+            for i, s in enumerate(servers)])
+        cfg = LoaderConfig(batch_size=500, max_tries=1)
+        q = stream_to_clickhouse(
+            nation_stream(spark, sf_dir), "n_name", cluster_of(topo, cfg), cfg,
+            database="db", table="nation",
+            checkpoint_dir=str(tmp_path / "ckpt4"), create_ddl=NATION_DDL)
+        with pytest.raises(StreamingQueryException, match="simulated failure"):
+            q.awaitTermination(120)
+        q.stop()
+        assert [s for s in servers[0].statements if s.startswith("INSERT INTO temp.")]
+        assert not [s for srv in servers for s in srv.applied
+                    if s.startswith("INSERT INTO db.nation")]
+        assert all(gc_queries(srv) for srv in servers)
     finally:
         for s in servers:
             s.stop()
@@ -115,16 +159,11 @@ def test_staged_sink_no_duplicates_after_midload_failure(spark, sf_dir, tmp_path
         topo = ClusterTopology([
             ShardNode(i + 1, 1, (f"{s.host}:{s.port}",))
             for i, s in enumerate(servers)])
-        cfg = LoaderConfig(batch_size=500)
-        ddl = ("CREATE TABLE db.nation (n_nationkey Int64, n_name String, "
-               "n_regionkey Int64) ENGINE = MergeTree ORDER BY n_nationkey")
-        schema = spark.read.parquet(f"{sf_dir}/nation.parquet").schema
-        stream = (spark.readStream.schema(schema)
-                  .option("pathGlobFilter", "nation.parquet").parquet(sf_dir))
+        cfg = LoaderConfig(batch_size=500, direct=False)
         q = stream_to_clickhouse(
-            stream, "n_name", cluster_of(topo, cfg), cfg, database="db",
-            table="nation", checkpoint_dir=str(tmp_path / "ckpt3"),
-            staged=True, create_ddl=ddl)
+            nation_stream(spark, sf_dir), "n_name", cluster_of(topo, cfg), cfg,
+            database="db", table="nation",
+            checkpoint_dir=str(tmp_path / "ckpt3"), create_ddl=NATION_DDL)
         assert q.awaitTermination(120)
         q.stop()
 
