@@ -47,6 +47,9 @@ FAN_OUT_THREADS = 32   # most hosts ``fan_out`` reaches at once
 DISTRIBUTED_RE = re.compile(
     r"Distributed\s*\(\s*'?(?P<cluster>\w+)'?\s*,\s*'?(?P<db>\w+)'?\s*,"
     r"\s*'?(?P<table>\w+)'?\s*(?:,\s*(?P<shardfn>[^)]+))?\)", re.IGNORECASE)
+# the `ENGINE = <name>` clause, the rule staging.rewrite_ddl_to_striplog
+# rewrites
+ENGINE_RE = re.compile(r"ENGINE\s*=\s*(\w+)", re.IGNORECASE)
 
 
 @dataclass
@@ -75,6 +78,15 @@ def resolve_distributed(create_ddl: str) -> DistributedTarget | None:
         return None
     return DistributedTarget(m.group("cluster"), m.group("db"),
                              m.group("table"), m.group("shardfn"))
+
+
+def table_engine(create_ddl: str) -> str:
+    """The engine name of `SHOW CREATE TABLE` output (``ReplicatedMergeTree``,
+    ``Log``, …), '' when it has no ``ENGINE =`` clause. Only the clause
+    counts, not an engine's name elsewhere in the DDL (a column name, a
+    comment)."""
+    m = ENGINE_RE.search(create_ddl)
+    return m.group(1) if m else ""
 
 
 def daily_table_name(table: str, dt: str) -> str:

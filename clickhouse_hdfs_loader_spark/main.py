@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .clickhouse.client import ClickHouseClient, get_client
 from .clickhouse.lifecycle import (DistributedTarget, LifecycleManager,
-                                   resolve_distributed)
+                                   resolve_distributed, table_engine)
 from .clickhouse.staging import staged_load, temp_table_prefix
 from .clickhouse.writer import write_direct
 from .config import LoaderConfig, parse_args
@@ -55,11 +55,11 @@ def _entry(config: LoaderConfig) -> tuple[ClickHouseClient, str]:
 
 
 def resolve_target(config: LoaderConfig, backoff_scale: float = 1.0
-                   ) -> tuple[str, DistributedTarget, str, bool, LifecycleManager]:
+                   ) -> tuple[str, DistributedTarget, str, str, LifecycleManager]:
     """D6: ``--table`` must be Distributed; returns the entry database, the
-    Distributed target, the local table's DDL, whether it is Replicated,
-    and the handle on the target cluster's hosts
-    (ClickhouseHdfsLoader.java:224-289)."""
+    Distributed target, the local table's DDL, its engine name (Replicated
+    when it starts with ``Replicated``) and the handle on the target
+    cluster's hosts (ClickhouseHdfsLoader.java:224-289)."""
     cli, database = _entry(config)
     dist = resolve_distributed(
         catalog.fetch_create_table(cli, database, config.table))
@@ -72,7 +72,7 @@ def resolve_target(config: LoaderConfig, backoff_scale: float = 1.0
     # the connect URL's port reaches only the entry node above; every
     # topology host is reached through this handle
     cluster = LifecycleManager.from_config(topology, config, backoff_scale)
-    return database, dist, local_ddl, "Replicated" in local_ddl, cluster
+    return database, dist, local_ddl, table_engine(local_ddl), cluster
 
 
 def read_input(spark: SparkSession, config: LoaderConfig,
@@ -117,7 +117,7 @@ def run_load(config: LoaderConfig, spark: SparkSession,
              source_df: DataFrame | None = None,
              backoff_scale: float = 1.0) -> dict:
     # step 2 — resolve the distributed target
-    database, dist, local_ddl, replicated, cluster = resolve_target(
+    database, dist, local_ddl, engine, cluster = resolve_target(
         config, backoff_scale)
     cli, _ = _entry(config)
     describe = catalog.fetch_describe(cli, dist.local_database, dist.local_table)
@@ -158,7 +158,7 @@ def run_load(config: LoaderConfig, spark: SparkSession,
     # step 5+6+7 — the one cluster action, then the temp GC
     return write(df, key_col, cluster, config, database=dist.local_database,
                  table=target_table, create_ddl=local_ddl,
-                 replicated=replicated,
+                 replicated=engine.startswith("Replicated"),
                  prefix=temp_table_prefix(target_table, config.dt or "00000000"))
 
 

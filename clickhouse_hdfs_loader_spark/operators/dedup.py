@@ -84,10 +84,9 @@ def _posting_lists(sh: DataFrame) -> DataFrame:
     that every downstream consumer (pair generation, per-doc sizes, df
     caps) hangs off. The consumers re-plan canonically identical subtrees,
     which dedupe to ReusedExchange at runtime — so the scan + shingle UDF
-    + map-side partial collect run exactly once per query (r15: the
-    previous shape, with sizes counted off a second ``sh`` branch,
-    re-planned the scan+UDF three times — measured 3 ArrowEvalPython scans
-    in the dedup_ngram_jaccard plan)."""
+    + map-side partial collect run exactly once per query (counting sizes
+    off a second ``sh`` branch instead re-plans the scan+UDF three times —
+    measured 3 ArrowEvalPython scans in the dedup_ngram_jaccard plan)."""
     return sh.groupBy("h").agg(F.collect_list("id").alias("ids"))
 
 
@@ -434,7 +433,7 @@ def levenshtein_verify_pairs(docs: DataFrame, pairs: DataFrame,
     (one shingle scan, one text scan), with 9 reused-exchange refs in
     the executed plan. Candidate TEXTS are assumed to fit a broadcast
     (bounded pair count is the generator's contract); if a corpus breaks
-    that, pass ``broadcast_texts=False`` (ADVICE r15) to skip the hints
+    that, pass ``broadcast_texts=False`` to skip the hints
     and let the planner shuffle the semi-joined text table instead —
     identical semantics, still one full corpus read.
     ``F.levenshtein`` is JVM-native codegen — O(len²) per pair but pairs
@@ -481,32 +480,18 @@ def embedding_near_dup_pairs(emb: DataFrame, vec_col: str = "embedding",
     the numpy row-wise dot (functions/vectors.cosine_pairs_udf) instead
     of the interpreted fold — same output on the fixtures (pinned), same
     ULP caveat as every arrow kernel."""
-    from ..functions.vectors import (as_double_array, cosine_pairs_udf,
-                                     dot, norm)
+    from .similarity import _pair_sides
     # spread the streamed side RAW (floats cross the shuffle; the
     # cast/norm columns compute after it — half the bytes, same
-    # once-per-row compute; measured 8× at sf0.1)
+    # once-per-row compute; measured 8× at sf0.1). On the expr kernel
+    # the norm folds AND double casts are hoisted to per-side columns,
+    # computed once per input row below the join (bitwise-identical —
+    # see similarity._cosine_precomputed)
     a_raw = _spread_to_parallelism(
         emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")))
-    if kernel == "arrow":
-        a = a_raw.select("id_a", F.col("_va").alias("v_a"))
-        b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-        scorer = cosine_pairs_udf()(F.col("v_a"), F.col("v_b"))
-    else:
-        # norm folds AND double casts hoisted to per-side columns
-        # (computed once per input row, below the join) — dot over the
-        # materialized double arrays / (nrm_a*nrm_b) is the exact value
-        # sequence of vectors.cosine (the cast yields the same doubles
-        # either way), so results are bitwise identical while per-pair
-        # interpreted fold passes drop 4 → 2 (r15; norms first, casts
-        # this round)
-        pa = a_raw.select("id_a", as_double_array(F.col("_va")).alias("v_a"))
-        a = pa.select("id_a", "v_a", norm(F.col("v_a")).alias("nrm_a"))
-        pb = emb.select(F.col(id_col).alias("id_b"),
-                        as_double_array(F.col(vec_col)).alias("v_b"))
-        b = pb.select("id_b", "v_b", norm(F.col("v_b")).alias("nrm_b"))
-        scorer = (dot(F.col("v_a"), F.col("v_b"))
-                  / (F.col("nrm_a") * F.col("nrm_b")))
+    a, b, scorer = _pair_sides(
+        kernel, (a_raw, "id_a", "_va", "id_a", "v_a", "nrm_a"),
+        (emb, id_col, vec_col, "id_b", "v_b", "nrm_b"))
     # pin the BUILD side explicitly: narrowing `a` to raw floats made it
     # the planner's size-estimate pick for the broadcast, which wasted
     # a's repartition AND streamed `b` at the raw split count (one task
@@ -518,7 +503,7 @@ def embedding_near_dup_pairs(emb: DataFrame, vec_col: str = "embedding",
     # necessarily fast or cheap, Spark attempts the build first) instead
     # of running an infeasible n² cartesian — acceptable for this
     # labeled correctness baseline; lsh_near_dup_pairs is the scale
-    # path. (ADVICE r15: don't rely on a clean early error here.)
+    # path. Don't rely on a clean early error here.
     return (a.crossJoin(F.broadcast(b))
             .where(F.col("id_a") < F.col("id_b"))
             .withColumn("cos", scorer)
@@ -670,8 +655,8 @@ def semantic_dedup(emb: DataFrame, centroids=None, m: int = 8,
     run both kernels as gemm. (The sf0.1 fixture is one input split;
     repartition locally or the single task serializes everything.)
     """
-    from .similarity import ivf_assign, seed_centroids
-    from ..functions.vectors import cosine
+    from .similarity import (_cosine_precomputed, _vec_side, ivf_assign,
+                             seed_centroids)
 
     if centroids is None:
         centroids = seed_centroids(emb, m, vec_col, id_col)
@@ -720,32 +705,20 @@ def semantic_dedup(emb: DataFrame, centroids=None, m: int = 8,
         pairs = assigned.groupBy("centroid").applyInPandas(
             _pairs, schema="centroid int, id_a long, id_b long, cos double")
     elif pair_kernel == "expr":
-        from ..functions.vectors import as_double_array, dot, norm
-
         # norm folds AND double casts hoisted BELOW the repartition
         # (computed once per assigned row and materialized through the
-        # shared exchange both self-join branches reuse) — dot over the
-        # materialized double arrays / (nrm_a*nrm_b) is vectors.cosine's
-        # exact value sequence (the cast yields the same doubles either
-        # way), so results are bitwise identical while per-pair
-        # interpreted fold passes drop 4 → 2 (r15; norms first, casts
-        # this round)
-        pre = assigned.select("centroid", "id",
-                              as_double_array(F.col("v")).alias("_vd"))
-        withn = (pre.select("centroid", "id", "_vd",
-                            norm(F.col("_vd")).alias("_nrm"))
-                 .repartition("centroid"))
-        a = withn.select("centroid", F.col("id").alias("id_a"),
-                         F.col("_vd").alias("v_a"),
-                         F.col("_nrm").alias("nrm_a"))
-        b = withn.select("centroid", F.col("id").alias("id_b"),
-                         F.col("_vd").alias("v_b"),
-                         F.col("_nrm").alias("nrm_b"))
+        # shared exchange both self-join branches reuse; bitwise-identical
+        # — see similarity._cosine_precomputed)
+        withn = _vec_side(assigned, "id", "v", "id", "_vd", "_nrm",
+                          keep=("centroid",)).repartition("centroid")
+        a, b = (withn.select("centroid", F.col("id").alias(f"id_{s}"),
+                             F.col("_vd").alias(f"v_{s}"),
+                             F.col("_nrm").alias(f"nrm_{s}"))
+                for s in "ab")
         pairs = (a.join(b, "centroid")
                  .where(F.col("id_a") < F.col("id_b"))
-                 .withColumn("cos",
-                             dot(F.col("v_a"), F.col("v_b"))
-                             / (F.col("nrm_a") * F.col("nrm_b")))
+                 .withColumn("cos", _cosine_precomputed("v_a", "v_b",
+                                                        "nrm_a", "nrm_b"))
                  .where(F.col("cos") >= threshold))
     else:
         raise ValueError(f"unknown pair_kernel {pair_kernel!r}")

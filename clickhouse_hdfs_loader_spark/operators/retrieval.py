@@ -63,7 +63,15 @@ def with_ilog2_milli(df: DataFrame, x_col: str, out_col: str) -> DataFrame:
     Rows with x < 1 keep the old conv() branch so out-of-domain
     behaviour is unchanged (x = 0 still yields -1000, negatives still
     fail the ANSI power cast, NULL stays NULL); every caller's domain
-    is counts >= 1, so the hot path never evaluates it."""
+    is counts >= 1, so the hot path never evaluates it.
+
+    ``_e0``, ``_e`` and ``_p`` are its scratch columns: a ``df`` that
+    already has one (or an ``out_col`` named so) raises ``ValueError``
+    instead of losing that column."""
+    clash = {"_e0", "_e", "_p"} & {c.lower() for c in (*df.columns, out_col)}
+    if clash:
+        raise ValueError(f"with_ilog2_milli: columns {sorted(clash)} are "
+                         "reserved for its scratch values")
     e_fast = (f"CASE WHEN shiftleft(CAST(1 AS BIGINT), CAST(_e0 AS INT))"
               f" > {x_col} THEN _e0 - 1 "
               f"WHEN _e0 < 62 AND "

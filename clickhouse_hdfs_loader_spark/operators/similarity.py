@@ -45,41 +45,47 @@ def _cosine_precomputed(va: str, vb: str, nrm_a: str, nrm_b: str):
     same double array whether computed inline per pair or once per row,
     and the zip_with/aggregate fold over those arrays is the same
     sequential multiply/add/divide order — so results are BITWISE
-    identical, while per-pair interpreted fold passes drop 4 → 2
-    (r15: norms first, casts this round)."""
+    identical, while per-pair interpreted fold passes drop 4 → 2."""
     return dot(F.col(va), F.col(vb)) / (F.col(nrm_a) * F.col(nrm_b))
 
 
 def _vec_side(df: DataFrame, id_in: str, vec_in: str, id_out: str,
-              vd_out: str, nrm_out: str) -> DataFrame:
-    """One side of a pairwise-cosine join: id, the vector materialized
-    as a DOUBLE array, and its norm computed FROM that materialized
-    column. Two projection layers so the double array is
-    multiply-referenced (norm here + the pair dot above) and
+              vd_out: str, nrm_out: str, keep: tuple[str, ...] = ()
+              ) -> DataFrame:
+    """One side of a pairwise-cosine join: id, the ``keep`` columns as
+    they are, the vector materialized as a DOUBLE array, and its norm
+    computed FROM that materialized column. Two projection layers so the
+    double array is multiply-referenced (norm here + the pair dot) and
     CollapseProject keeps it materialized instead of re-inlining the
-    cast per consumer (the r15 ivf_assign lesson)."""
-    pre = df.select(F.col(id_in).alias(id_out),
+    cast per consumer."""
+    pre = df.select(F.col(id_in).alias(id_out), *keep,
                     as_double_array(F.col(vec_in)).alias(vd_out))
-    return pre.select(id_out, vd_out, norm(F.col(vd_out)).alias(nrm_out))
+    return pre.select(id_out, *keep, vd_out,
+                      norm(F.col(vd_out)).alias(nrm_out))
 
 
-def _ivf_cand_side(assigned: DataFrame) -> DataFrame:
-    """Corpus side of an IVF probe join: ``v`` re-materialized as a
-    double array (two layers — see :func:`_vec_side`) plus its norm,
-    keyed by centroid, ready for :func:`_cosine_precomputed`."""
-    pre = assigned.select("id", "centroid",
-                          as_double_array(F.col("v")).alias("v"))
-    return pre.select("id", "centroid", "v", norm(F.col("v")).alias("nrm_v"))
-
-
-def _ivf_probe_side(probes: DataFrame) -> DataFrame:
-    """Query side of an IVF probe join: ``qv`` as a materialized double
-    array plus its norm (same bitwise-identity argument as
-    :func:`_vec_side`)."""
-    pre = probes.select("query_id", "centroid",
-                        as_double_array(F.col("qv")).alias("qv"))
-    return pre.select("query_id", "centroid", "qv",
-                      norm(F.col("qv")).alias("nrm_q"))
+def _pair_sides(kernel: str, a: tuple, b: tuple):
+    """The two sides of a pairwise-cosine join and its score column;
+    ``a``/``b`` are :func:`_vec_side` arguments ``(df, id_in, vec_in,
+    id_out, vd_out, nrm_out)``. ``'expr'`` scores with the
+    oracle-replayable fold over hoisted casts and norms;
+    ``'arrow'`` passes the raw vectors to the numpy row-wise dot
+    (functions/vectors.cosine_pairs_udf), which casts and norms itself."""
+    va, vb = a[4], b[4]
+    if kernel == "arrow":
+        from ..functions.vectors import cosine_pairs_udf
+        # an id kept under its own name stays a bare column: Spark pushes
+        # a rename-only projection below a repartition, so aliasing it
+        # too would move the rename into the input's exchange
+        side_a, side_b = (
+            df.select(F.col(i) if i == i_out else F.col(i).alias(i_out),
+                      F.col(v).alias(v_out))
+            for df, i, v, i_out, v_out, _ in (a, b))
+        return side_a, side_b, cosine_pairs_udf()(F.col(va), F.col(vb))
+    if kernel != "expr":
+        raise ValueError(f"unknown kernel {kernel!r}")
+    return (_vec_side(*a), _vec_side(*b),
+            _cosine_precomputed(va, vb, a[5], b[5]))
 
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -108,6 +114,40 @@ def _planes(num_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
     return [[rnd.gauss(0, 1) for _ in range(dim)] for _ in range(num_planes)]
 
 
+def _lsh_bands(df: DataFrame, id_col: str, vec_col: str, id_out: str,
+               planes: list[list[float]], bands: int,
+               kernel: str) -> DataFrame:
+    """(id_out, band, bh) rows: the ``len(planes)``-bit sign signature of
+    each vector cut into ``bands`` bands of ``len(planes) // bands``
+    bits. ``kernel='expr'`` folds the signature in expressions,
+    ``'arrow'`` takes it from one ``M @ Pᵀ`` gemm per batch
+    (functions/vectors.hyperplane_bits_udf)."""
+    rows = len(planes) // bands
+    mask = (1 << rows) - 1
+    if kernel == "arrow":
+        from ..functions.vectors import hyperplane_bits_udf
+        sig = df.select(F.col(id_col).alias(id_out),
+                        hyperplane_bits_udf(planes)(F.col(vec_col)).alias("sig"))
+    elif kernel == "expr":
+        # materialize the double cast once — inlined, it runs one
+        # interpreted 64-element cast pass PER PLANE per row (bit
+        # values identical; see random_hyperplane_bits pre_cast)
+        pre = df.select(F.col(id_col).alias(id_out),
+                        as_double_array(F.col(vec_col)).alias("_vd"))
+        sig = pre.select(id_out,
+                         random_hyperplane_bits(F.col("_vd"), planes,
+                                                pre_cast=True).alias("sig"))
+    else:
+        raise ValueError(f"unknown kernel {kernel!r}")
+    bandcols = [F.struct(F.lit(b).alias("band"),
+                         F.shiftrightunsigned("sig", b * rows)
+                         .bitwiseAND(F.lit(mask)).alias("bh"))
+                for b in range(bands)]
+    return (sig.select(id_out, F.explode(F.array(*bandcols)).alias("bk"))
+            .select(id_out, F.col("bk.band").alias("band"),
+                    F.col("bk.bh").alias("bh")))
+
+
 def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, dim: int = 64,
              num_planes: int = 16, bands: int = 4,
              vec_col: str = "embedding", id_col: str = "vec_id",
@@ -119,58 +159,18 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, dim: int = 64,
     the numpy batch kernels (fixture-identical top-k pinned by test);
     the expression default stays oracle-replayable."""
     planes = _planes(num_planes, dim, seed)
-    rows = num_planes // bands
-    mask = (1 << rows) - 1
-    if kernel == "arrow":
-        from ..functions.vectors import cosine_pairs_udf, hyperplane_bits_udf
-        sig_of = hyperplane_bits_udf(planes)
-        pair_cos = cosine_pairs_udf()
-    else:
-        sig_of = None
-        pair_cos = None
-
-    # r15 rework, same shape as lsh_near_dup_pairs: band join + dedup on
-    # ids only (no vector payloads through the shuffle), vectors and —
-    # on the expr kernel — hoisted per-vector norms attached after
-    def with_bands(df: DataFrame, idc: str, prefix: str) -> DataFrame:
-        if sig_of is not None:
-            out = df.select(F.col(idc).alias(f"{prefix}id"),
-                            sig_of(F.col(vec_col)).alias("sig"))
-        else:
-            # expr kernel: materialize the double cast once — inlined,
-            # it runs one interpreted 64-element cast pass PER PLANE
-            # per row (see random_hyperplane_bits pre_cast; bit values
-            # identical — the cast yields the same doubles either way)
-            pre = df.select(F.col(idc).alias(f"{prefix}id"),
-                            as_double_array(F.col(vec_col)).alias("_vd"))
-            out = pre.select(f"{prefix}id",
-                             random_hyperplane_bits(F.col("_vd"), planes,
-                                                    pre_cast=True).alias("sig"))
-        bandcols = [F.struct(F.lit(b).alias("band"),
-                             F.shiftrightunsigned("sig", b * rows)
-                             .bitwiseAND(F.lit(mask)).alias("bh"))
-                    for b in range(bands)]
-        return (out.select(f"{prefix}id",
-                           F.explode(F.array(*bandcols)).alias("bk"))
-                .select(f"{prefix}id",
-                        F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh")))
-
-    cb = with_bands(corpus, id_col, "")
-    qb = with_bands(queries, id_col, "q")
+    # same shape as lsh_near_dup_pairs: band join + dedup on ids only (no
+    # vector payloads through the shuffle), vectors and — on the expr
+    # kernel — hoisted per-vector norms attached after
+    cb = _lsh_bands(corpus, id_col, vec_col, "id", planes, bands, kernel)
+    qb = _lsh_bands(queries, id_col, vec_col, "qid", planes, bands, kernel)
     cand = (cb.join(F.broadcast(qb), ["band", "bh"])
             .where(F.col("qid") != F.col("id"))
             .select(F.col("qid").alias("query_id"), "id")
             .distinct())
-    if pair_cos is None:
-        cvecs = _vec_side(corpus, id_col, vec_col, "id", "v", "nrm_v")
-        qvecs = _vec_side(queries, id_col, vec_col, "query_id", "qv", "nrm_q")
-        scorer = _cosine_precomputed("qv", "v", "nrm_q", "nrm_v")
-    else:
-        cvecs = corpus.select(F.col(id_col).alias("id"),
-                              F.col(vec_col).alias("v"))
-        qvecs = queries.select(F.col(id_col).alias("query_id"),
-                               F.col(vec_col).alias("qv"))
-        scorer = pair_cos(F.col("qv"), F.col("v"))
+    qvecs, cvecs, scorer = _pair_sides(
+        kernel, (queries, id_col, vec_col, "query_id", "qv", "nrm_q"),
+        (corpus, id_col, vec_col, "id", "v", "nrm_v"))
     scored = (cand.join(F.broadcast(qvecs), "query_id").join(cvecs, "id")
               .withColumn("cos", scorer))
     return _ranked_topk(scored, k)
@@ -214,8 +214,8 @@ def ivf_assign_expr(corpus: DataFrame, centroids: list[tuple[int, list[float]]],
     predicate, so NaN/NULL norms behave identically by construction."""
     import math
 
-    # r15 hoists, both bitwise-identical to the original cosine fold:
-    # the vector's norm is computed ONCE as a lower-projection column
+    # two hoists, both bitwise-identical to the plain cosine fold: the
+    # vector's norm is computed ONCE as a lower-projection column
     # (CollapseProject keeps multiply-referenced non-cheap aliases
     # un-inlined) instead of once per centroid, and each centroid's
     # norm is replayed driver-side with the same sequential x*x
@@ -226,7 +226,7 @@ def ivf_assign_expr(corpus: DataFrame, centroids: list[tuple[int, list[float]]],
     # it is multiply-referenced and never re-inlined) — inlined, it runs
     # one interpreted 64-element cast pass per CENTROID per row; the
     # norm and every cs fold read the same doubles, so values are
-    # bitwise unchanged (r15)
+    # bitwise unchanged
     pre0 = corpus.select(F.col(id_col).alias("id"),
                          F.col(vec_col).alias("v"),
                          as_double_array(F.col(vec_col)).alias("_vd"))
@@ -242,7 +242,7 @@ def ivf_assign_expr(corpus: DataFrame, centroids: list[tuple[int, list[float]]],
             # equivalence proof needs one shared d — post-filter instead
             return (ivf_assign_expr(corpus, centroids, vec_col, id_col)
                     .where(F.col("centroid") >= 0))
-    # r15: each centroid's cosine is materialized as its own projection
+    # each centroid's cosine is materialized as its own projection
     # column BEFORE the argmax fold. Folding the raw cs expressions
     # directly makes the when-chain embed each one exponentially
     # (best_cos appears twice per level -> 2^m copies of cs_0), which is
@@ -377,6 +377,36 @@ def seed_centroids(corpus: DataFrame, m: int = 8, vec_col: str = "embedding",
     return [(i, [float(x) for x in r[vec_col]]) for i, r in enumerate(rows)]
 
 
+def _ivf_probes(queries: DataFrame, cents: list[tuple[int, list[float]]],
+                nprobe: int, id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qv, centroid): one row per query per probed bucket —
+    its ``nprobe`` max-cosine centroids, ties to the higher centroid
+    id (descending struct order)."""
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    probe_structs = [
+        F.struct(cosine(F.col("qv"), F.array(*[F.lit(float(x)) for x in cv]))
+                 .alias("cos"), F.lit(cid).alias("centroid"))
+        for cid, cv in cents]
+    return (q.withColumn("probe", F.explode(
+                F.slice(F.reverse(F.array_sort(F.array(*probe_structs))), 1, nprobe)))
+            .select("query_id", "qv", F.col("probe.centroid").alias("centroid")))
+
+
+def _ivf_score(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Top-k of each query over the corpus rows (id, v, centroid) of its
+    probed buckets. Candidate scoring with hoisted norms AND double
+    casts (bitwise-identical — see _cosine_precomputed): corpus-side
+    cast+norm once per assigned row, query-side once per probe row, 2
+    fold passes per candidate pair."""
+    cand = (_vec_side(assigned, "id", "v", "id", "v", "nrm_v", keep=("centroid",))
+            .join(F.broadcast(_vec_side(probes, "query_id", "qv", "query_id",
+                                        "qv", "nrm_q", keep=("centroid",))),
+                  "centroid")
+            .where(F.col("query_id") != F.col("id")))
+    return _ranked_topk(cand.withColumn(
+        "cos", _cosine_precomputed("qv", "v", "nrm_q", "nrm_v")), k)
+
+
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, m: int = 8,
              nprobe: int = 2, vec_col: str = "embedding",
              id_col: str = "vec_id", assign_method: str = "auto") -> DataFrame:
@@ -384,27 +414,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, m: int = 8,
     its ``nprobe`` nearest centroid buckets only."""
     cents = seed_centroids(corpus, m, vec_col, id_col)
     assigned = ivf_assign(corpus, cents, vec_col, id_col, method=assign_method)
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    probe_structs = []
-    for cid, cv in cents:
-        cvec = F.array(*[F.lit(float(x)) for x in cv])
-        probe_structs.append(F.struct(cosine(F.col("qv"), cvec).alias("cos"),
-                                      F.lit(cid).alias("centroid")))
-    probes = (q.withColumn("probe", F.explode(
-                  F.slice(F.reverse(F.array_sort(F.array(*probe_structs))), 1, nprobe)))
-              .select("query_id", "qv", F.col("probe.centroid").alias("centroid")))
-
-    # candidate scoring with hoisted norms AND double casts
-    # (bitwise-identical — see _cosine_precomputed): corpus-side
-    # cast+norm once per assigned row, query-side once per probe row,
-    # 2 fold passes per candidate pair (was 4)
-    cand = (_ivf_cand_side(assigned).join(
-                F.broadcast(_ivf_probe_side(probes)), "centroid")
-            .where(F.col("query_id") != F.col("id")))
-    scored = cand.withColumn("cos", _cosine_precomputed("qv", "v",
-                                                        "nrm_q", "nrm_v"))
-    return _ranked_topk(scored, k)
+    return _ivf_score(assigned,
+                      _ivf_probes(queries, cents, nprobe, id_col, vec_col), k)
 
 
 def lsh_near_dup_pairs(emb: DataFrame, threshold: float = 0.95, dim: int = 64,
@@ -425,39 +436,13 @@ def lsh_near_dup_pairs(emb: DataFrame, threshold: float = 0.95, dim: int = 64,
     output pinned by test — the 100 TB default, same ULP caveat as the
     gemm argmax."""
     planes = _planes(num_planes, dim, seed)
-    rows = num_planes // bands
-    mask = (1 << rows) - 1
-    if kernel == "arrow":
-        from ..functions.vectors import cosine_pairs_udf, hyperplane_bits_udf
-        sig_base = emb.select(F.col(id_col).alias("id"),
-                              hyperplane_bits_udf(planes)(F.col(vec_col))
-                              .alias("sig"))
-        pair_cos = cosine_pairs_udf()
-    elif kernel == "expr":
-        # materialize the double cast once — inlined, it runs one
-        # interpreted 64-element cast pass PER PLANE per row (bit
-        # values identical; see random_hyperplane_bits pre_cast)
-        pre = emb.select(F.col(id_col).alias("id"),
-                         as_double_array(F.col(vec_col)).alias("_vd"))
-        sig_base = pre.select("id",
-                              random_hyperplane_bits(F.col("_vd"), planes,
-                                                     pre_cast=True)
-                              .alias("sig"))
-        pair_cos = None
-    else:
-        raise ValueError(f"unknown kernel {kernel!r}")
-    # r15 rework (guide §2.3/§8 "decide with small rows, move payloads
-    # once"): the band self-join and the candidate-dedup shuffle carry
-    # ONLY 8-byte ids — the previous shape shuffled and group-by'd two
-    # full vectors per candidate row. Vectors (and, on the expr kernel,
-    # their hoisted norms — bitwise-identical, see _cosine_precomputed)
-    # are attached once per side AFTER the distinct.
-    bandcols = [F.struct(F.lit(b).alias("band"),
-                         F.shiftrightunsigned("sig", b * rows)
-                         .bitwiseAND(F.lit(mask)).alias("bh")) for b in range(bands)]
-    bucketed = (sig_base.select("id", F.explode(F.array(*bandcols)).alias("bk"))
-                .select("id", F.col("bk.band").alias("band"),
-                        F.col("bk.bh").alias("bh"))
+    # "decide with small rows, move payloads once": the band self-join
+    # and the candidate-dedup shuffle carry ONLY 8-byte ids — shuffling
+    # and group-by-ing two full vectors per candidate row is the shape
+    # to avoid. Vectors (and, on the expr kernel, their hoisted norms —
+    # bitwise-identical, see _cosine_precomputed) are attached once per
+    # side AFTER the distinct.
+    bucketed = (_lsh_bands(emb, id_col, vec_col, "id", planes, bands, kernel)
                 # pre-shuffle by the join key so BOTH self-join branches
                 # hang off ONE exchange (ReusedExchange): the signature
                 # scan+fold runs once, not once per side. The band join
@@ -473,16 +458,9 @@ def lsh_near_dup_pairs(emb: DataFrame, threshold: float = 0.95, dim: int = 64,
     cand = _spread_to_parallelism(a.join(b, ["band", "bh"])
                                   .where(F.col("id_a") < F.col("id_b"))
                                   .select("id_a", "id_b").distinct())
-    if pair_cos is None:
-        scorer = _cosine_precomputed("v_a", "v_b", "nrm_a", "nrm_b")
-        va = _vec_side(emb, id_col, vec_col, "id_a", "v_a", "nrm_a")
-        vb = _vec_side(emb, id_col, vec_col, "id_b", "v_b", "nrm_b")
-    else:
-        scorer = pair_cos(F.col("v_a"), F.col("v_b"))
-        vecs = emb.select(F.col(id_col).alias("_vid"),
-                          F.col(vec_col).alias("_vv"))
-        va = vecs.select(F.col("_vid").alias("id_a"), F.col("_vv").alias("v_a"))
-        vb = vecs.select(F.col("_vid").alias("id_b"), F.col("_vv").alias("v_b"))
+    va, vb, scorer = _pair_sides(
+        kernel, (emb, id_col, vec_col, "id_a", "v_a", "nrm_a"),
+        (emb, id_col, vec_col, "id_b", "v_b", "nrm_b"))
     return (cand.join(va, "id_a").join(vb, "id_b")
             .withColumn("cos", scorer)
             .where(F.col("cos") >= threshold)
@@ -537,19 +515,13 @@ def brute_force_topk_numpy(corpus: DataFrame, queries: DataFrame, k: int = 5,
             .select("query_id", "id", F.round("cos", 4).alias("cos"), "rank"))
 
 
-def _kmeans_sums_explode(assigned: DataFrame, prefiltered: bool = False):
-    """Per-(centroid, dim) fixed-point sums via posexplode — simple, but
-    the shuffle carries n·dim rows (64× inflation): fine at fixture
-    scale, wrong at 100 TB. Unassignable rows (centroid = -1 sentinel,
-    zero-norm/NULL vectors) are excluded — they must not pull any
-    centroid's mean. Pass ``prefiltered=True`` when the caller already
-    dropped them via ivf_assign(drop_unassignable=True): even a NO-OP
-    ``centroid >= 0`` filter here would be pushed below the expr
-    assignment's projections and re-evaluate the argmax chain per row
-    (see ivf_assign_expr)."""
-    if not prefiltered:
-        assigned = assigned.where(F.col("centroid") >= 0)
-    return (assigned
+def _kmeans_sums_explode(assigned: DataFrame):
+    """Per-(centroid, dim) fixed-point sums via posexplode — the plain
+    reference plan that :func:`_kmeans_sums_partial` is pinned against;
+    the shuffle carries n·dim rows (64× inflation), so training never
+    runs it. Unassignable rows (centroid = -1 sentinel, zero-norm/NULL
+    vectors) are excluded — they must not pull any centroid's mean."""
+    return (assigned.where(F.col("centroid") >= 0)
             .select("centroid", F.posexplode(
                 F.transform("v", lambda x: x.cast("double")))
                 .alias("dim", "x"))
@@ -558,7 +530,7 @@ def _kmeans_sums_explode(assigned: DataFrame, prefiltered: bool = False):
                  F.count(F.lit(1)).alias("n")))
 
 
-def _kmeans_sums_partial(assigned: DataFrame, k: int, dim_hint: int = 0):
+def _kmeans_sums_partial(assigned: DataFrame, k: int):
     """Scale path: per-Arrow-batch numpy partial sums, so the shuffle
     carries at most k·dim rows PER BATCH instead of n·dim rows total —
     the map-side-combine the explode plan can't express. Bitwise
@@ -602,21 +574,20 @@ def _kmeans_sums_partial(assigned: DataFrame, k: int, dim_hint: int = 0):
 
 def kmeans_fit(corpus: DataFrame, k: int = 8, iters: int = 5,
                vec_col: str = "embedding", id_col: str = "vec_id",
-               agg_method: str = "partial",
                assign_method: str = "auto") -> list[tuple[int, list[float]]]:
     """Deterministic Lloyd's k-means for IVF coarse centroids.
 
     Seeds = the ``k`` lowest-id vectors; each iteration assigns every
     vector to its max-cosine centroid (one scan — ivf_assign, which
     auto-picks fold vs gemm by m) and recomputes centroid means via
-    fixed-point sums per (centroid, dim). ``agg_method='partial'``
-    (default) pre-aggregates each Arrow batch in numpy so the shuffle
-    carries ≤ k·dim rows per batch — the map-side combine the
-    ``'explode'`` plan (n·dim shuffle rows) can't express; both produce
-    BITWISE-identical centroids (int64 sums are order-free), pinned by
-    tests. Centroids live on the driver between rounds (k×dim floats),
-    so iteration cost is 2 jobs × iters — the distributed-iterative
-    pattern the IVF quality path needs.
+    fixed-point sums per (centroid, dim). The sums pre-aggregate each
+    Arrow batch in numpy (:func:`_kmeans_sums_partial`), so the shuffle
+    carries ≤ k·dim rows per batch — the map-side combine a posexplode
+    plan (n·dim shuffle rows) can't express; both give BITWISE-identical
+    sums (int64 sums are order-free), pinned by tests. Centroids live on
+    the driver between iterations (k×dim floats), so iteration cost is 2
+    jobs × iters — the distributed-iterative pattern the IVF quality path
+    needs.
 
     **Fixed-point accumulation**: per-dim means sum ``floor(x·10⁶)`` as
     int64, then divide once on the driver. Float sums depend on shuffle
@@ -628,15 +599,11 @@ def kmeans_fit(corpus: DataFrame, k: int = 8, iters: int = 5,
     """
     cents = seed_centroids(corpus, k, vec_col, id_col)
     for _ in range(iters):
+        # keeps every row; the numpy kernel masks the -1 sentinel itself
+        # (and guards ids >= k) before np.add.at
         assigned = ivf_assign(corpus, cents, vec_col, id_col,
-                              method=assign_method,
-                              drop_unassignable=(agg_method != "partial"))
-        if agg_method == "partial":
-            # keeps every row; the numpy kernel masks the -1 sentinel
-            # itself (and guards ids >= k) before np.add.at
-            per_dim = _kmeans_sums_partial(assigned, k)
-        else:
-            per_dim = _kmeans_sums_explode(assigned, prefiltered=True)
+                              method=assign_method)
+        per_dim = _kmeans_sums_partial(assigned, k)
         rows = (per_dim.groupBy("centroid")
                 .agg(F.array_sort(F.collect_list(F.struct("dim", "s", "n")))
                      .alias("dims"))
@@ -660,20 +627,8 @@ def ivf_topk_trained(corpus: DataFrame, queries: DataFrame, k: int = 5,
                        assign_method=assign_method)
     assigned = ivf_assign(corpus, cents, vec_col, id_col,
                           method=assign_method)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    probe_structs = []
-    for cid, cv in cents:
-        cvec = F.array(*[F.lit(float(x)) for x in cv])
-        probe_structs.append(F.struct(cosine(F.col("qv"), cvec).alias("cos"),
-                                      F.lit(cid).alias("centroid")))
-    probes = (q.withColumn("probe", F.explode(
-                  F.slice(F.reverse(F.array_sort(F.array(*probe_structs))), 1, nprobe)))
-              .select("query_id", "qv", F.col("probe.centroid").alias("centroid")))
-    cand = (_ivf_cand_side(assigned).join(
-                F.broadcast(_ivf_probe_side(probes)), "centroid")
-            .where(F.col("query_id") != F.col("id")))
-    return _ranked_topk(cand.withColumn(
-        "cos", _cosine_precomputed("qv", "v", "nrm_q", "nrm_v")), k)
+    return _ivf_score(assigned,
+                      _ivf_probes(queries, cents, nprobe, id_col, vec_col), k)
 
 
 def build_ivf_index(corpus: DataFrame, path: str, m: int = 8,
@@ -703,28 +658,13 @@ def query_ivf_index(spark, path: str, cents: list[tuple[int, list[float]]],
     ``centroid IN (probe set)`` predicate so the parquet source prunes
     whole partitions before any IO, and only the probed buckets are
     scored. Same ranking semantics as ivf_topk (cos desc, id asc)."""
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"))
-    probe_structs = []
-    for cid, cv in cents:
-        cvec = F.array(*[F.lit(float(x)) for x in cv])
-        probe_structs.append(F.struct(cosine(F.col("qv"), cvec).alias("cos"),
-                                      F.lit(cid).alias("centroid")))
-    probes = (q.withColumn("probe", F.explode(
-                  F.slice(F.reverse(F.array_sort(F.array(*probe_structs))),
-                          1, nprobe)))
-              .select("query_id", "qv",
-                      F.col("probe.centroid").alias("centroid")))
+    probes = _ivf_probes(queries, cents, nprobe, id_col, vec_col)
     # driver-side probe id set (≤ m ints) → static partition pruning
     probe_ids = sorted({r["centroid"] for r in
                         probes.select("centroid").distinct().collect()})
     idx = (spark.read.parquet(path)
            .where(F.col("centroid").isin(probe_ids)))
-    cand = (_ivf_cand_side(idx).join(
-                F.broadcast(_ivf_probe_side(probes)), "centroid")
-            .where(F.col("query_id") != F.col("id")))
-    return _ranked_topk(cand.withColumn(
-        "cos", _cosine_precomputed("qv", "v", "nrm_q", "nrm_v")), k)
+    return _ivf_score(idx, probes, k)
 
 
 def append_to_ivf_index(new_vectors: DataFrame, path: str,

@@ -29,12 +29,11 @@ def drop_partition(connect: str, table: str, partition: str,
     hosts are reached on ``clickhouse_http_port`` with the given login,
     the way ``main.run_load`` reaches them."""
     config = LoaderConfig(connect=connect, table=table, **settings)
-    _database, dist, local_ddl, replicated, cluster = resolve_target(
+    _database, dist, _local_ddl, engine, cluster = resolve_target(
         config, backoff_scale)
-    engine = "ReplicatedMergeTree" if replicated else \
-        ("MergeTree" if "MergeTree" in local_ddl else "other")
     cluster.drop_partition(dist.local_database, dist.local_table, partition,
-                           engine=engine, replicated=replicated)
+                           engine=engine,
+                           replicated=engine.startswith("Replicated"))
 
 
 def main(argv: list[str] | None = None) -> int:

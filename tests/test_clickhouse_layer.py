@@ -428,6 +428,25 @@ def test_drop_partition_cli_tool(mocks):
                    for s in m.statements)
 
 
+def test_drop_partition_gates_on_the_engine_clause(mocks):
+    """The *MergeTree gate reads the ``ENGINE =`` clause only: a ``Log``
+    table whose DDL mentions MergeTree elsewhere is refused, and no
+    ALTER is sent."""
+    from clickhouse_hdfs_loader_spark.tools import drop_partition
+    entry = mocks[0]
+    entry.canned["SHOW CREATE TABLE db.t1"] = (
+        "CREATE TABLE db.t1 (a Int8) ENGINE = Distributed(ck, db_local, t1, rand())")
+    entry.canned["SHOW CREATE TABLE db_local.t1"] = (
+        "CREATE TABLE db_local.t1 (a Int8 COMMENT 'was a MergeTree column') "
+        "ENGINE = Log")
+    entry.canned["system.clusters"] = (
+        f"1\t1\t['{mocks[1].host}:{mocks[1].port}']\n")
+    with pytest.raises(ValueError, match="'Log' does not support DROP PARTITION"):
+        drop_partition(f"jdbc:clickhouse://{entry.host}:{entry.port}/db",
+                       "t1", "'2017-01-07'", backoff_scale=0.001)
+    assert not any("ALTER" in s for m in mocks for s in m.statements)
+
+
 def test_drop_partition_cli_tool_port_and_login(mocks):
     """D4 CLI with bare ``system.clusters`` addresses: the ALTER reaches
     the shard on ``--clickhouse-http-port``, and every call logs in with

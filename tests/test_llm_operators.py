@@ -527,14 +527,18 @@ def test_simhash_dropped_buckets_diagnostic(spark):
 
 
 def test_kmeans_partial_agg_bitwise_matches_explode(spark, sf_dir):
-    """The map-side-combine numpy partial-sum path must reproduce the
-    posexplode path's centroids BITWISE (int64 fixed-point sums are
-    order-free), keeping the trained-IVF SQL oracle valid on the scale
-    path."""
+    """The map-side-combine numpy partial sums that k-means training
+    runs must equal the posexplode reference sums EXACTLY (int64
+    fixed-point sums are order-free) on the fixture's assignment, by
+    either assignment kernel — keeping the trained-IVF SQL oracle valid
+    on the scale path."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = SIM.kmeans_fit(emb, k=4, iters=2, agg_method="partial")
-    b = SIM.kmeans_fit(emb, k=4, iters=2, agg_method="explode")
-    assert a == b          # exact float equality, not approx
+    cents = SIM.seed_centroids(emb, m=4)
+    for method in ("expr", "gemm"):
+        assigned = SIM.ivf_assign(emb, cents, method=method)
+        a = sorted(map(tuple, SIM._kmeans_sums_partial(assigned, k=4).collect()))
+        b = sorted(map(tuple, SIM._kmeans_sums_explode(assigned).collect()))
+        assert a == b and len(a) > 0, method
 
 
 def test_quota_sample_caps_and_determinism(spark):
@@ -1025,6 +1029,8 @@ def test_embedding_near_dup_arrow_kernel_parity(spark, sf_dir):
     a = sorted(map(tuple, embedding_near_dup_pairs(
         emb, threshold=0.4, kernel="arrow").collect()))
     assert e == a and len(e) > 0
+    with pytest.raises(ValueError, match="unknown kernel"):
+        embedding_near_dup_pairs(emb, kernel="nosuch")
 
 
 def test_lsh_topk_arrow_kernel_parity(spark, sf_dir):
@@ -1039,6 +1045,8 @@ def test_lsh_topk_arrow_kernel_parity(spark, sf_dir):
     a = sorted(map(tuple, lsh_topk(emb, q, k=5, bands=8,
                                    kernel="arrow").collect()))
     assert e == a and len(e) > 0
+    with pytest.raises(ValueError, match="unknown kernel"):
+        lsh_topk(emb, q, kernel="nosuch")
 
 
 def test_bigram_likelihood_oracle_and_discrimination(spark, sf_dir):
@@ -1698,6 +1706,22 @@ def test_ilog2_milli_exponent_edges(spark):
     # INT64_MIN (review-caught r16)
     top = spark.createDataFrame([(1 << 62,)], "x long")
     assert with_ilog2_milli(top, "x", "lg").collect()[0]["lg"] == 62000
+
+
+def test_ilog2_milli_reserved_columns(spark):
+    """with_ilog2_milli's scratch columns (_e0, _e, _p) must not silently
+    overwrite and then drop a caller's column of the same name."""
+    from clickhouse_hdfs_loader_spark.operators.retrieval import (
+        with_ilog2_milli)
+
+    for name in ("_e0", "_e", "_p"):
+        df = spark.createDataFrame([(5, 7)], f"x long, {name} long")
+        with pytest.raises(ValueError, match="reserved"):
+            with_ilog2_milli(df, "x", "lg")
+    df = spark.createDataFrame([(5,)], "x long")
+    with pytest.raises(ValueError, match="reserved"):
+        with_ilog2_milli(df, "x", "_p")
+    assert with_ilog2_milli(df, "x", "lg").columns == ["x", "lg"]
 
 
 def test_ilog2_milli_interior_sweep(spark):

@@ -95,6 +95,43 @@ def test_quickstart_shaped_direct_load(spark, tmp_path, cluster):
     assert all(n > 0 for n in per_shard)
 
 
+def test_replication_read_from_the_engine_clause(spark, tmp_path):
+    """A MergeTree table whose DDL mentions "Replicated" only in a column
+    comment is not Replicated: a direct load writes every row to BOTH
+    replicas of its one shard, since no engine replicates between them."""
+    servers = [MockClickHouse() for _ in range(2)]
+    try:
+        entry = servers[0]
+        entry.canned["SHOW CREATE TABLE test.t1"] = TARGET_DDL
+        entry.canned["SHOW CREATE TABLE test_local.t1"] = (
+            "CREATE TABLE test_local.t1 (plat Int8, h_did String, "
+            "v Int32 COMMENT 'Replicated from upstream') "
+            "ENGINE = MergeTree ORDER BY h_did")
+        entry.canned["system.clusters"] = "1\t1\t[{}]\n".format(
+            ",".join(f"'{s.host}:{s.port}'" for s in servers))
+        entry.canned["DESC test_local.t1"] = \
+            "plat\tInt8\nh_did\tString\nv\tInt32\n"
+        for s in servers:
+            s.canned.setdefault("system.tables", "")
+        export_dir = _write_input(tmp_path, [f"1|did_{i}|{i}" for i in range(20)])
+        cfg = parse_args([
+            "--dt", "2021-06-01",
+            "--connect", f"jdbc:clickhouse://{entry.host}:{entry.port}/test",
+            "--table", "t1", "--export-dir", export_dir,
+            "--fields-terminated-by", "|", "--direct", "true",
+            "--input-format", "text"])
+        stats = run_load(cfg, spark, backoff_scale=0.001)
+        assert stats == {"success_records": 20, "failed_records": 0}
+        for s in servers:
+            rows = [line for ins in s.inserts()
+                    if ins.startswith("INSERT INTO test_local.t1 FORMAT")
+                    for line in ins.splitlines()[1:]]
+            assert len(rows) == 20
+    finally:
+        for s in servers:
+            s.stop()
+
+
 def test_sharding_key_outside_target_routes_at_random(spark, tmp_path, cluster):
     """P1: a sharding expression naming no target column (``rand()``)
     routes each row by a random UUID (AbstractClickhouseLoaderMapper.java:
